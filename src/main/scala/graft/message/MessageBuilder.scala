@@ -1,8 +1,9 @@
 package graft.message
 
 import graft.queries.{ReplayQueries => RQ, ReplayTables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
 import scala.jdk.CollectionConverters._
 
 /** Assembles the denormalized message document — the reference's
@@ -11,56 +12,48 @@ import scala.jdk.CollectionConverters._
   * string in `messages.text_data`, `posted = false`.
   *
   * Unlike the reference's 9 sequential JDBC round-trips that each rescan
-  * `frags`, the per-replay frags slice is cached once and shared by every
-  * leaderboard/top-1 query (the cross-query reuse SURVEY §4 flags as the
-  * obvious win).
+  * `frags`, the replay's rows are collected once as a
+  * [[graft.queries.ReplaySlice]] and the 9 results are computed from it
+  * on the driver ([[graft.queries.ReplayQueries]]). A message costs a
+  * fixed set of Spark jobs — the replay_main row, and the slice's
+  * vehicles, named frags and survivors with their broadcasts — however
+  * many results it carries.
   */
 object MessageBuilder {
 
-  /** Query results serialized as JSON arrays-of-rows, mirroring the
-    * reference's `sql_to_db` list-of-tuples → json.dumps shape (arrays,
-    * not objects, per row). */
   /** Null fields are kept (`"killer":null`), matching the reference's
     * json.dumps — Spark's to_json drops them by default. */
-  private val keepNulls = Map("ignoreNullFields" -> "false")
+  private val keepNulls = Map("ignoreNullFields" -> "false").asJava
 
-  private def rowsAsJsonArray(df: DataFrame): String = {
-    val cols = df.columns.map(col).toIndexedSeq
-    val rows = df.select(to_json(struct(cols: _*), keepNulls.asJava).as("j"))
-      .collect().map(_.getString(0))
-    rows.mkString("[", ",", "]")
-  }
-
-  /** Build the text_data JSON for one replay. Returns (replay, json). */
+  /** Build the text_data JSON for one replay. */
   def buildTextData(spark: SparkSession, t: ReplayTables, replay: Int): String = {
-    val fragsSlice = t.frags.filter(col("replay_number") === replay).cache()
-    val shared = t.copy(frags = fragsSlice)
-    try {
-      val base = t.replayMain
-        .filter(col("replay_number") === replay)
-        .select(to_json(struct(t.replayMain.columns.map(col).toIndexedSeq: _*),
-          keepNulls.asJava))
-        .collect()
-      require(base.nonEmpty, s"No data found for replay number: $replay")
-      val parts = Seq(
-        "vehicles" -> rowsAsJsonArray(RQ.fsVehicles(shared, replay)),
-        "grouped_vehicles" -> rowsAsJsonArray(RQ.groupVehicles(shared, replay)),
-        "cutlets" -> rowsAsJsonArray(RQ.fsCutlets(shared, replay)),
-        "tks" -> rowsAsJsonArray(RQ.fsTks(shared, replay)),
-        "fb" -> rowsAsJsonArray(RQ.fsFb(shared, replay)),
-        "lh" -> rowsAsJsonArray(RQ.fsLh(shared, replay)),
-        "ls" -> rowsAsJsonArray(RQ.fsLs(shared, replay)),
-        // survivors' NOT IN scans frags of ALL replays (reference quirk,
-        // SURVEY §7.4.3) — so these two use the full frags table, not the
-        // cached slice.
-        "survivors" -> rowsAsJsonArray(RQ.fsSurvivors(t, replay)),
-        "survivors_group" -> rowsAsJsonArray(RQ.fsSurvivorsGroup(t, replay)))
-      val extras = parts.map { case (k, v) => s""""$k":$v""" }.mkString(",")
-      // replay_number is NOT re-appended: the base row already carries it,
-      // and the reference's dict re-assignment keeps the single key
-      val baseJson = base(0).getString(0)
-      baseJson.dropRight(1) + "," + extras + "}"
-    } finally fragsSlice.unpersist()
+    val base = t.replayMain
+      .filter(col("replay_number") === replay)
+      .select(to_json(struct(t.replayMain.columns.map(col).toIndexedSeq: _*), keepNulls))
+      .collect()
+    require(base.nonEmpty, s"No data found for replay number: $replay")
+    val s = RQ.slice(t, replay)
+    val parts = Seq(
+      "vehicles" -> RQ.fsVehicles(s),
+      "grouped_vehicles" -> RQ.groupVehicles(s),
+      "cutlets" -> RQ.fsCutlets(s),
+      "tks" -> RQ.fsTks(s),
+      "fb" -> RQ.fsFb(s),
+      "lh" -> RQ.fsLh(s),
+      "ls" -> RQ.fsLs(s),
+      "survivors" -> RQ.fsSurvivors(s),
+      "survivors_group" -> RQ.fsSurvivorsGroup(s))
+    // Every result becomes an array of row objects — the reference's
+    // `sql_to_db` list-of-tuples → json.dumps shape. All nine go into
+    // one local row, so one to_json serializes them; Catalyst folds the
+    // projection over the LocalRelation, so this runs no job.
+    val schema = StructType(parts.map { case (k, r) => StructField(k, ArrayType(r.schema)) })
+    val extras = spark.createDataFrame(Seq(Row.fromSeq(parts.map(_._2.rows))).asJava, schema)
+      .select(to_json(struct(schema.fieldNames.map(col).toIndexedSeq: _*), keepNulls))
+      .collect()(0).getString(0)
+    // replay_number is NOT re-appended: the base row already carries it,
+    // and the reference's dict re-assignment keeps the single key
+    base(0).getString(0).dropRight(1) + "," + extras.drop(1)
   }
 
   /** messages row for the built document (K4, functions.py:268-272). */

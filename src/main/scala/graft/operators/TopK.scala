@@ -13,7 +13,8 @@ object TopK {
     * map that is broadcast back onto `df`, so the plan stays fully
     * parallel at any key cardinality (an unpartitioned
     * `dense_rank().over(orderBy)` funnels every row through one
-    * partition). Shared by q02 and the replay leaderboards. */
+    * partition). Used by q02 (and by the replay leaderboards' test
+    * oracle). */
   def withDenseRank(df: DataFrame, cntCol: String, k: Int): DataFrame = {
     val top = df.select(col(cntCol)).distinct()
       .orderBy(col(cntCol).desc).limit(k)

@@ -20,8 +20,7 @@ class ReplayPipeline(spark: SparkSession, store: TableStore) {
     vehicles = store.read("vehicles"),
     players = store.read("players"),
     dPlayers = store.read("d_players"),
-    frags = store.read("frags"),
-    messages = store.read("messages"))
+    frags = store.read("frags"))
 
   /** DAG-1 `check_replay` (functions.py:12-40): parse the listing page,
     * filter to >99 players (P5), take the posted high-watermark (A4) —
@@ -89,22 +88,6 @@ class ReplayPipeline(spark: SparkSession, store: TableStore) {
       .limit(1)
       .collect().headOption.map(r => (r.getInt(0), r.getString(2)))
 
-  /** Bot delivery loop (botrun.py:297-309): drain every unposted
-    * message oldest-first through the transport, flagging `posted`
-    * only AFTER each successful send. At-least-once under crash
-    * replay: a crash between send and flag re-sends that one message
-    * on recovery; the flag is never set for an unsent one, so nothing
-    * is lost. Idempotent across calls — a second drain sends nothing.
-    * The unposted backlog is collected ONCE (it is bounded by the
-    * posting cadence; re-scanning the table per message would make a
-    * crash-recovery drain of M messages pay M full scans), then sent
-    * and flagged row by row with the same crash semantics. Returns the
-    * number of messages sent. */
-  /** One tick of the reference's check_replay loop (botrun.py:295-309):
-    * at most ONE unposted message per tick — the reference's `LIMIT 1`
-    * cadence, where [[deliverUnposted]] is the crash-recovery drain.
-    * Same at-least-once discipline: the flag is set only AFTER the
-    * send. Returns whether a message went out. */
   /** One message through the reference's send sequence
     * (botrun.py:297-309): create_text runs FIRST — for its
     * `UPDATE messages SET message = …` side effect only (the rendered
@@ -121,12 +104,28 @@ class ReplayPipeline(spark: SparkSession, store: TableStore) {
     store.markPosted(replay)
   }
 
+  /** One tick of the reference's check_replay loop (botrun.py:295-309):
+    * at most ONE unposted message per tick — the reference's `LIMIT 1`
+    * cadence, where [[deliverUnposted]] is the crash-recovery drain.
+    * Same at-least-once discipline: the flag is set only AFTER the
+    * send. Returns whether a message went out. */
   def deliverNext(sender: graft.message.MessageSender): Boolean =
     nextUnposted() match {
       case Some((replay, text)) => deliverOne(sender, replay, text); true
       case None => false
     }
 
+  /** Bot delivery loop (botrun.py:297-309): drain every unposted
+    * message oldest-first through the transport, flagging `posted`
+    * only AFTER each successful send. At-least-once under crash
+    * replay: a crash between send and flag re-sends that one message
+    * on recovery; the flag is never set for an unsent one, so nothing
+    * is lost. Idempotent across calls — a second drain sends nothing.
+    * The unposted backlog is collected ONCE (it is bounded by the
+    * posting cadence; re-scanning the table per message would make a
+    * crash-recovery drain of M messages pay M full scans), then sent
+    * and flagged row by row with the same crash semantics. Returns the
+    * number of messages sent. */
   def deliverUnposted(sender: graft.message.MessageSender): Int = {
     val backlog = store.read("messages")
       .filter(!(col("posted") <=> true))

@@ -234,7 +234,8 @@ object CoreQueries {
       .groupBy(col("o_custkey"))
       // csv-joined so the driver compares a scalar (array cells hash
       // differently across parquet readers); the raw collect_list form
-      // is exercised in ReplayQueries.groupVehicles + specs
+      // is exercised by the group_vehicles test oracle
+      // (ReplayQueriesOracle)
       .agg(array_join(sort_array(collect_list(col("o_orderkey"))), ",")
         .as("order_ids_csv"),
         count(lit(1)).as("n_orders"))
