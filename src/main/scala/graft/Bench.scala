@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line of per-query seconds.
   *
@@ -22,20 +20,7 @@ object Bench {
       catch { case _: Throwable => -1.0 }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      // ContextCleaner only reclaims dead broadcast/checkpoint blocks
-      // after a JVM GC notices them; the default 30min periodic GC lets
-      // ~100 queries of blocks pile up and the iterative-join queries
-      // near the end of the run measure that pressure, not themselves
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.localSession("graft-bench", cpus.toInt)
 
     Tables.all.foreach(n => Tables.load(spark, sfDir, n).count())
     // JIT/codegen warmup on a representative small query

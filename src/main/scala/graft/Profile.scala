@@ -22,16 +22,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.localSession("graft-profile", cpus.toInt)
 
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)

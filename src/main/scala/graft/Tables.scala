@@ -68,27 +68,37 @@ object Tables {
   def registerAll(spark: SparkSession, dir: String): Unit =
     all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 
-  /** Local session with the settings this engine is designed around:
-    * AQE on, shuffle partitions sized for local[32], UTC timezone.
+  /** The Spark settings every graft session runs under: the bench, the
+    * correctness dump, the profiler, the test suite and perfbench all get
+    * exactly these, so correctness is checked under the configuration
+    * that is measured.
     */
-  def localSession(appName: String = "graft", cores: Int = 32): SparkSession = {
-    // Shuffle parallelism defaults to the core count (the right size
-    // for the driver's sf0.1 volume: no sliver tasks, AQE coalesces
-    // further). At 100×-fixture volume the per-task aggregate state
-    // outgrows one task's share of the single-JVM execution pool —
-    // the cure is the same as on a real cluster: MORE partitions, not
-    // more heap. SPARK_GRAFT_SHUFFLE_PARTITIONS overrides for those
-    // runs (the 100× stress sets 256); unset, behavior is unchanged.
-    val shufflePartitions = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-      .getOrElse(cores.toString)
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cores]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+  def sessionConf(cores: Int): Seq[(String, String)] = Seq(
+    "spark.master" -> s"local[$cores]",
+    // one shuffle partition per core: the right size for the driver's
+    // sf0.1 volume (no sliver tasks; AQE coalesces further)
+    "spark.sql.shuffle.partitions" -> cores.toString,
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.session.timeZone" -> "UTC",
+    // write micros (not INT96) so DuckDB reads identical timestamp values
+    "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
+    "spark.ui.enabled" -> "false",
+    // ContextCleaner only reclaims dead broadcast/checkpoint blocks
+    // after a JVM GC notices them; the default 30min periodic GC lets
+    // ~100 queries of blocks pile up and the iterative-join queries
+    // near the end of a bench run measure that pressure, not themselves
+    "spark.cleaner.periodicGC.interval" -> "30s")
+
+  /** The only place a `SparkSession` is built: [[sessionConf]] plus a
+    * fresh temp warehouse dir for the managed (bucketed) tables
+    * `store.Layout` writes.
+    */
+  def localSession(appName: String, cores: Int): SparkSession = {
+    val warehouse = java.nio.file.Files.createTempDirectory("graft-warehouse")
+    warehouse.toFile.deleteOnExit()
+    val spark = sessionConf(cores)
+      .foldLeft(SparkSession.builder().appName(appName)) { case (b, (k, v)) => b.config(k, v) }
+      .config("spark.sql.warehouse.dir", warehouse.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -29,7 +29,7 @@ case class WordShinglesExpr(child: Expression, k: Int)
     // word-start offsets (single-space separated, like the reference's
     // split(' ')); empty words from doubled spaces count as words too,
     // matching split semantics
-    var starts = List.newBuilder[Int]
+    val starts = List.newBuilder[Int]
     starts += 0
     var i = 0
     while (i < bytes.length) {

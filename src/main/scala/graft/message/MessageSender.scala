@@ -1,5 +1,7 @@
 package graft.message
 
+import scala.annotation.unused
+
 /** K7 delivery transport seam (bot/botrun.py:306: the Discord webhook
   * POST). The engine builds and renders messages branch-exact; the
   * committed live transport is [[HttpMessageSender]] (a JDK-17
@@ -23,7 +25,7 @@ trait MessageSender {
     * override to put the embeds array in the same POST body. Same
     * deliver-or-throw contract as [[send]]. */
   def sendWithEmbeds(replayNumber: Int, content: String,
-      embeds: Seq[Renderer.Embed]): Unit =
+      @unused embeds: Seq[Renderer.Embed]): Unit =
     send(replayNumber, content)
 }
 

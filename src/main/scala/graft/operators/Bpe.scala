@@ -117,46 +117,41 @@ object Bpe {
          |  x -> x))""".stripMargin)
   }
 
+  // Blocks.checkpointTracked checkpoints a frame and returns it with
+  // the ids of the blocks the checkpoint just pinned, so a later round can release EXACTLY its
+  // predecessor's blocks. Without the release a learn call holds
+  // ~nRounds copies of the vocab frame until the ContextCleaner
+  // happens to run — the block-residue failure mode the r7 harness
+  // fix removed, kept out of the operator too. The pinned RDD is read
+  // off the checkpointed frame's own plan (localCheckpoint rewrites
+  // it to a LogicalRDD wrapping the persisted RDD) — never a global
+  // getPersistentRDDs delta, which under a concurrent persist (a
+  // parallel suite, a streaming query) would catch an unrelated live
+  // RDD and Blocks.release would unpersist it.
+  //
+  // `eager = false` (the r16 hot-loop setting) defers materialization
+  // into the NEXT job that reads the frame — per round the dedicated
+  // checkpoint job disappears and the round's one argmax collect
+  // forces everything (guide §1/§2: each action is a full
+  // driver round-trip + cluster barrier; the loops here were
+  // action-bound, not compute-bound, in the r16 profile). Lazy
+  // checkpoints shift the release discipline: a lazily-checkpointed
+  // RDD must NOT be unpersisted before it materializes (truncated
+  // lineage = unrecomputable), so superseded blocks are released one
+  // collect AFTER the collect that materialized their successor —
+  // see the relAfter queues in the loops below.
+
   /** Learn up to `nMerges` BPE merges over a (w, freq) vocabulary.
     * Returns the merge table and the final per-word symbol state
     * (w, freq, syms) — the encoded vocabulary [[encodeStats]] joins
     * against. Stops early (with fewer merges) once no adjacent pair
     * remains. Driver state is ONE (lhs, rhs, count) row per round. */
-  /** Checkpoint `df` and return it with the ids of the blocks the
-    * checkpoint just pinned, so a later round can release EXACTLY its
-    * predecessor's blocks. Without the release a learn call holds
-    * ~nRounds copies of the vocab frame until the ContextCleaner
-    * happens to run — the block-residue failure mode the r7 harness
-    * fix removed, kept out of the operator too. The pinned RDD is read
-    * off the checkpointed frame's own plan (localCheckpoint rewrites
-    * it to a LogicalRDD wrapping the persisted RDD) — never a global
-    * getPersistentRDDs delta, which under a concurrent persist (a
-    * parallel suite, a streaming query) would catch an unrelated live
-    * RDD and releaseBlocks would unpersist it. */
-  /** `eager = false` (the r16 hot-loop default) defers materialization
-    * into the NEXT job that reads the frame — per round the dedicated
-    * checkpoint job disappears and the round's one argmax collect
-    * forces everything (guide §1/§2: each action is a full
-    * driver round-trip + cluster barrier; the loops here were
-    * action-bound, not compute-bound, in the r16 profile). Lazy
-    * checkpoints shift the release discipline: a lazily-checkpointed
-    * RDD must NOT be unpersisted before it materializes (truncated
-    * lineage = unrecomputable), so superseded blocks are released one
-    * collect AFTER the collect that materialized their successor —
-    * see the relAfter queues in the loops below. */
-  private def checkpointTracked(
-      df: DataFrame, eager: Boolean = true): (DataFrame, Set[Int]) =
-    Blocks.checkpointTracked(df, eager) // shared tracked-release (r17)
-
-  private def releaseBlocks(df: DataFrame, ids: Set[Int]): Unit =
-    Blocks.release(df, ids)
-
   def learn(words: DataFrame, nMerges: Int): (Seq[Merge], DataFrame) = {
     require(nMerges >= 1, "Bpe.learn needs nMerges >= 1")
     // vocab-sized; checkpoint so each round's jobs start from
     // materialized state instead of re-deriving every earlier fold.
     // Lazy: round 1's argmax collect materializes it.
-    val (syms, symsIds) = checkpointTracked(initialSymbols(words), eager = false)
+    val (syms, symsIds) = Blocks.checkpointTracked(initialSymbols(words), eager = false)
     learnLoop(syms, symsIds, prior = Nil, nMore = nMerges)
   }
 
@@ -188,14 +183,14 @@ object Bpe {
       val top = pairCounts(syms)
         .orderBy(col("pair_count").desc, col("lhs"), col("rhs"))
         .limit(1).collect()
-      releaseBlocks(syms, relAfter)
+      Blocks.release(syms, relAfter)
       relAfter = Set.empty
       if (top.isEmpty) exhausted = true
       else {
         val (l, r, c) =
           (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += Merge(rank, l, r, c)
-        val (next, nextIds) = checkpointTracked(syms.withColumn("syms",
+        val (next, nextIds) = Blocks.checkpointTracked(syms.withColumn("syms",
           graft.functions.BpeFold.bpe_fold(col("syms"), Seq((l, r)))),
           eager = false)
         relAfter = symsIds
@@ -226,7 +221,7 @@ object Bpe {
       prior: Seq[Merge],
       nMore: Int): (Seq[Merge], DataFrame) = {
     require(nMore >= 1, "Bpe.learnContinue needs nMore >= 1")
-    val (syms, symsIds) = checkpointTracked(
+    val (syms, symsIds) = Blocks.checkpointTracked(
       state.select(col("w"), col("freq"), col("syms")), eager = false)
     learnLoop(syms, symsIds, prior, nMore)
   }
@@ -249,8 +244,8 @@ object Bpe {
     * output, spec-pinned): the flat fold sweeps every word once per
     * table row, so an unseen word at production depth paid
     * O(len × 32k) mostly-identity sweeps; the index makes per-word
-    * cost track the pairs actually present (BpeEncodeAb at depth 32k
-    * over a 141k-distinct-word OOV frame under an adversarially DENSE
+    * cost track the pairs actually present (r16 encode A/B, 925abfb:
+    * depth 32k over a 141k-distinct-word OOV frame under an adversarially DENSE
     * table: flat 3.5k words/s → indexed 156k words/s, 44.9×; parity
     * already at depth 64 — crossover measured 1.1×). Shallow
     * per-round learning folds stay on the flat sweep (a 1-16 pair
@@ -267,8 +262,8 @@ object Bpe {
   }
 
   /** Depth at which [[applyMerges]] switches from the flat fold to the
-    * pair-indexed one — BpeEncodeAb measured the indexed form already
-    * ~at parity by depth 64 and two orders of magnitude ahead at 32k. */
+    * pair-indexed one — the r16 encode A/B (925abfb) measured the
+    * indexed form already ~at parity by depth 64 and two orders of magnitude ahead at 32k. */
   private[graft] val indexedFoldThreshold = 64
 
   /** Persist a learned tokenizer — the merge table and the encoded
@@ -308,8 +303,9 @@ object Bpe {
     * ~V/batchSize — [[learn]]'s fixed per-round overhead (one vocab
     * recount + one driver round-trip + one checkpoint), not the data,
     * is what bounds a real 32k-merge vocabulary, so rounds are the
-    * axis to compress (the standard batched-BPE trick; see BpeAb for
-    * the measured round-count law).
+    * axis to compress (the standard batched-BPE trick; the round-count
+    * law was measured in r8, ec21277, and at depth in r14/r15 — README
+    * "BPE learning at vocabulary depth").
     *
     * Per round, deterministically:
     *   1. rank the adjacent-pair counts by (count DESC, lhs, rhs) and
@@ -371,7 +367,7 @@ object Bpe {
     val pool = if (poolSize > 0) poolSize else 4 * batchSize
     require(pool >= batchSize, s"poolSize $pool < batchSize $batchSize")
     var (syms, symsIds) =
-      checkpointTracked(initialSymbols(words), eager = false)
+      Blocks.checkpointTracked(initialSymbols(words), eager = false)
     // lazy-checkpoint release discipline — see learnLoop
     var relAfter: Set[Int] = Set.empty
     val merges = Seq.newBuilder[Merge]
@@ -383,7 +379,7 @@ object Bpe {
         .orderBy(col("pair_count").desc, col("lhs"), col("rhs"))
         .limit(pool).collect()
         .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
-      releaseBlocks(syms, relAfter)
+      Blocks.release(syms, relAfter)
       relAfter = Set.empty
       if (top.isEmpty) exhausted = true
       else {
@@ -394,7 +390,7 @@ object Bpe {
         }
         // whole batch in ONE native fold (rank order) — the chained
         // aggregate lambdas here were the depth run's 64 KB ceiling
-        val (next, nextIds) = checkpointTracked(syms.withColumn("syms",
+        val (next, nextIds) = Blocks.checkpointTracked(syms.withColumn("syms",
           graft.functions.BpeFold.bpe_fold(col("syms"),
             batch.map { case (l, r, _) => (l, r) })), eager = false)
         relAfter = symsIds
@@ -439,8 +435,9 @@ object Bpe {
     * vocabulary-wide aggregate) with work proportional to the words
     * the merge actually touches, at the price of one extra small
     * checkpoint (the delta) per round — the data-axis lever that
-    * composes with [[learnBatched]]'s round-axis lever (BpeDeltaAb
-    * measures both on an inflated vocabulary). Argmax, tiebreak,
+    * composes with [[learnBatched]]'s round-axis lever (both measured
+    * on an inflated vocabulary from f9c8333 on — README "Delta-maintained
+    * pair counts"). Argmax, tiebreak,
     * pool ranking and the rank-prefix conflict rule are byte-for-byte
     * the [[learn]]/[[learnBatched]] recurrences over the maintained
     * table, so the equivalence is exact (BpeSpec pins it; q195 gates
@@ -455,9 +452,9 @@ object Bpe {
     require(batchSize >= 1, "Bpe.learnDelta needs batchSize >= 1")
     val pool = if (poolSize > 0) poolSize else 4 * batchSize
     require(pool >= batchSize, s"poolSize $pool < batchSize $batchSize")
-    var (syms, symsIds) = checkpointTracked(initialSymbols(words), eager = false)
-    var (counts, countIds) = checkpointTracked(pairCounts(syms), eager = false)
-    // Lazy-checkpoint release queues (see checkpointTracked). The one
+    var (syms, symsIds) = Blocks.checkpointTracked(initialSymbols(words), eager = false)
+    var (counts, countIds) = Blocks.checkpointTracked(pairCounts(syms), eager = false)
+    // Lazy-checkpoint release queues (see the note above learn). The one
     // action per round is the pool collect, which reads the maintained
     // count table; the delta and the NEXT count table materialize
     // inside the FOLLOWING round's collect, and the next symbol state
@@ -475,7 +472,7 @@ object Bpe {
         .orderBy(col("pair_count").desc, col("lhs"), col("rhs"))
         .limit(pool).collect()
         .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
-      releaseBlocks(counts, relAfter1)
+      Blocks.release(counts, relAfter1)
       relAfter1 = relAfter2
       relAfter2 = Set.empty
       if (top.isEmpty) exhausted = true
@@ -495,7 +492,7 @@ object Bpe {
         // exact per-pair delta of the round, checkpointed once (it is
         // read by three joins below — all inside the next count
         // table's plan, so the next round's collect materializes it)
-        val (delta, deltaIds) = checkpointTracked(
+        val (delta, deltaIds) = Blocks.checkpointTracked(
           signedPairs(after, 1).union(signedPairs(affected, -1))
             .groupBy(col("lhs"), col("rhs"))
             .agg(sum(col("freq")).as("d"))
@@ -530,8 +527,8 @@ object Bpe {
           when(affectedPred,
             graft.functions.BpeFold.bpe_fold(col("syms"), batchPairs))
             .otherwise(col("syms")))
-        val (cpCounts, cpCountIds) = checkpointTracked(nextCounts, eager = false)
-        val (cpSyms, cpSymsIds) = checkpointTracked(nextSyms, eager = false)
+        val (cpCounts, cpCountIds) = Blocks.checkpointTracked(nextCounts, eager = false)
+        val (cpSyms, cpSymsIds) = Blocks.checkpointTracked(nextSyms, eager = false)
         relAfter1 ++= countIds ++ deltaIds
         relAfter2 ++= symsIds
         counts = cpCounts

@@ -59,7 +59,7 @@ object Graph {
     * ids tax EVERY per-round shuffle, broadcast build and hash probe
     * of an iterative operator; on the 30× fixture (13.8M edges) the
     * integer encoding measured 1.3-2.4× faster for the identical
-    * PageRank recurrence (GraphAb, alternating-arm min-of-2). Decode
+    * PageRank recurrence (r7, f40a931, alternating-arm min-of-2). Decode
     * back to the prefixed strings with [[decodeBipartite]] in the
     * FINAL projection only — and only for operators whose semantics
     * never order or compare ids (rank sums, hop minima, degree

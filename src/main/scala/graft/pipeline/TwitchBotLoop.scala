@@ -7,6 +7,7 @@ import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
 import java.util.concurrent.{Executors, ScheduledExecutorService, TimeUnit}
 import org.apache.spark.sql.SparkSession
+import scala.annotation.unused
 
 /** Where stream/clip announcements go — the reference posts them with
   * a bare `channel.send(content)` (botrun.py:235-238, 269), unkeyed,
@@ -21,7 +22,7 @@ trait AlertSink {
     * attaches an embed to the same send (botrun.py:266-269). Default
     * collapses to content-only for content-only sinks; the live
     * webhook transport overrides to carry both in one POST. */
-  def post(message: String, embeds: Seq[Renderer.Embed]): Unit =
+  def post(message: String, @unused embeds: Seq[Renderer.Embed]): Unit =
     post(message)
 }
 

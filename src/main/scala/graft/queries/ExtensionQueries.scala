@@ -985,7 +985,7 @@ object ExtensionQueries {
     * order bit-exactly, so the min-label tie-break is unchanged while
     * every per-round shuffle/broadcast/hash moves 8-byte keys instead
     * of strings (the q87 long-id win, extended to the one operator
-    * whose semantics COMPARE ids; GraphAb's lp mode measures it).
+    * whose semantics COMPARE ids; measured in r8, e55d534).
     * Decode back to the "p…"/"s…" strings in the final projection
     * only — oracle unchanged. */
   val q102LabelProp: Q = (s, dir) =>
@@ -2182,8 +2182,8 @@ object ExtensionQueries {
     * broadcasting the corpus — the plan a 100-TB corpus must run. Same
     * oracle as q160 (results are identical by construction; the
     * equivalence is also spec-asserted in SemDedupScaleSpec), kept as
-    * its own entry so the driver bench + ScaleStress time the shuffle
-    * path by name. */
+    * its own entry so the driver bench times the shuffle path by
+    * name. */
   val q165SemdedupShuffle: Q = (s, dir) => {
     val e = t(s, dir, "embeddings")
     Similarity.semDedup(e, Similarity.centroids(e), threshold = 0.3,
@@ -2443,7 +2443,8 @@ object ExtensionQueries {
     * sequential driver round-trips; batching is the fix). The oracle
     * replays the full batched recurrence — ranked pool, rank-prefix
     * conflict disqualification, per-round chained folds — not just the
-    * table shape. BpeAb measures the round-count law at nMerges ≥ 64. */
+    * table shape. The round-count law was measured at nMerges ≥ 64 in
+    * r8 (ec21277; README "BPE learning at vocabulary depth"). */
   val q184BpeBatched: Q = (s, dir) => {
     val (merges, _) = Bpe.learnBatched(Bpe.wordFreq(t(s, dir, "documents")),
       nRounds = 3, batchSize = 3)
@@ -3018,7 +3019,7 @@ object ExtensionQueries {
         when(col("lang") === c._1, f(c, i)).otherwise(acc)
       }
     val keyed = scored.withColumn("graft_key",
-      chain((c, i) => lit(li(c._1).toLong * (1L << 44))) - col("lp_e4"))
+      chain((c, _) => lit(li(c._1).toLong * (1L << 44))) - col("lp_e4"))
     Ranks.withGlobalRank(keyed, key = col("graft_key"), ascending = true,
         tie = col("doc_id"), outCol = "graft_r")
       .withColumn("graft_pr", col("graft_r") - chain((_, i) => lit(offs(i))))
@@ -3179,7 +3180,6 @@ object ExtensionQueries {
 
   val q216IvfProbeAudit: Q = (s, dir) => {
     val (e, cent, kc, asg, n) = sqrtKmeansParts(s, dir)
-    import s.implicits._
     // query vec 0 routed against all centroids — cluster-count-bounded
     val q0 = e.filter(col("vec_id") === 0)
       .select(col("embedding").cast("array<double>").as("qv"))
@@ -3262,7 +3262,7 @@ object ExtensionQueries {
     * untouched. */
   /** One learned-IVF index build per (JVM, sf dir): q217 models "build
     * at ingest, probe per query", and re-CONSTRUCTING the query (Bench
-    * passes, ScaleStress arms, Verify) must reuse the session's index
+    * passes, Verify) must reuse the session's index
     * rather than leak a fresh /tmp parquet copy per construction (r12
     * ADVICE). The cached dir is swept by a JVM shutdown hook. Bench
     * note: pass 1 pays the k-means + partitioned write; later passes

@@ -299,7 +299,6 @@ object IngestDoor {
 
   /** Start the door over a stream of (doc_id, text) documents. */
   def start(
-      spark: SparkSession,
       docs: DataFrame,
       root: String,
       checkpointDir: String,

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.{Bpe, QualityModel, Ranks}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -72,7 +72,6 @@ object StreamingCurriculumPack {
 
   /** Start the curriculum packer over a stream of (doc_id, text). */
   def start(
-      spark: SparkSession,
       docsStream: DataFrame,
       shardsPath: String,
       checkpointDir: String,

@@ -53,7 +53,6 @@ object StreamingDecontaminate {
 
   /** Start the guard over a stream of (doc_id, text) documents. */
   def start(
-      spark: SparkSession,
       docs: DataFrame,
       cleanPath: String,
       checkpointDir: String,

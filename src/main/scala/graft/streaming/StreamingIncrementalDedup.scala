@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.MinHashLsh
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming incremental near-dup dedup: each micro-batch of documents
@@ -126,7 +126,6 @@ object StreamingIncrementalDedup {
   }
 
   def start(
-      spark: SparkSession,
       docsStream: DataFrame,
       corpusPath: String,
       checkpointDir: String,

@@ -78,7 +78,6 @@ object StreamingPerplexityGate {
 
   /** Start the gate over a stream of (doc_id, lang, text) documents. */
   def start(
-      spark: SparkSession,
       docs: DataFrame,
       keptPath: String,
       checkpointDir: String,

@@ -52,7 +52,6 @@ object StreamingRedact {
 
   /** Start the scrubber over a stream of (doc_id, text) documents. */
   def start(
-      spark: SparkSession,
       docs: DataFrame,
       cleanPath: String,
       checkpointDir: String,

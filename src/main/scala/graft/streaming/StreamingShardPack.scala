@@ -90,7 +90,6 @@ object StreamingShardPack {
     * — e.g. tokenized upstream by [[graft.operators.Bpe.encodeTokens]]
     * in the batch layer or a per-batch vocab join here. */
   def start(
-      spark: SparkSession,
       tokensStream: DataFrame,
       shardsPath: String,
       checkpointDir: String,

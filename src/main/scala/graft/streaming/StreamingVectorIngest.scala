@@ -40,7 +40,6 @@ object StreamingVectorIngest {
     spark.read.parquet(driftLogPath(indexDir)).distinct()
 
   def start(
-      spark: SparkSession,
       vecStream: DataFrame,
       cent: DataFrame,
       indexDir: String,

@@ -105,7 +105,6 @@ object VectorCurationPipeline {
       .withColumn("batch_id", col("batch_id").cast("bigint"))
 
   def start(
-      spark: SparkSession,
       vecStream: DataFrame,
       root: String,
       checkpointDir: String,

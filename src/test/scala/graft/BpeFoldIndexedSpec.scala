@@ -31,6 +31,15 @@ class BpeFoldIndexedSpec extends SparkSpec {
       .as[(Int, Seq[String])].collect().toSeq.map(_._2)
   }
 
+  /** A deterministic dense table: all 36² 2-char merges, then
+    * (product, char) 3-char merges to `depth`. */
+  private def synthTable(depth: Int): Seq[(String, String)] = {
+    val alpha = "0123456789abcdefghijklmnopqrstuvwxyz"
+    val two = for (a <- alpha; b <- alpha) yield (a.toString, b.toString)
+    val three = for ((l, r) <- two; c <- alpha) yield (l + r, c.toString)
+    (two ++ three).take(depth)
+  }
+
   private def both(syms: Seq[Seq[String]],
       table: Seq[(String, String)]): Seq[Seq[String]] = {
     val flat = run(syms, table, indexed = false)
@@ -94,7 +103,7 @@ class BpeFoldIndexedSpec extends SparkSpec {
     // wiring pin: a 128-merge table (>= Bpe.indexedFoldThreshold)
     // routes applyMerges through bpe_fold_indexed — its state must be
     // byte-identical to the flat fold over the same table
-    val table = BpeEncodeAb.synthTable(128)
+    val table = synthTable(128)
     assert(table.size >= Bpe.indexedFoldThreshold)
     val merges = table.zipWithIndex.map { case ((l, r), i) =>
       Bpe.Merge(i + 1, l, r, 1L) }

@@ -52,7 +52,7 @@ class IngestDoorSpec extends SparkSpec {
     val vocab = vocab0.localCheckpoint()
 
     val in = MemoryStream[(Long, String)]
-    val q = IngestDoor.start(spark, in.toDF().toDF("doc_id", "text"),
+    val q = IngestDoor.start(in.toDF().toDF("doc_id", "text"),
       root, s"$ckpt/q", deny, evalGrams, bloom, vocab, seqLen,
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
     try {

@@ -159,8 +159,8 @@ class PixelDecodeSpec extends SparkSpec {
     // two DIFFERENT same-dimension images share their first ~41 PNG
     // bytes (signature + IHDR), so frame 0's byte signature is
     // near-identical across every same-format file — the false-merge
-    // + bucket-flood hazard PixelRecall measured at volume (93 % of a
-    // random corpus dropped). skipFrames=1 leaves only content
+    // + bucket-flood hazard measured at volume in r16, 925abfb (93 % of
+    // a random corpus dropped). skipFrames=1 leaves only content
     // frames, which for UNRELATED content are encoding-random and
     // must not pair. (Random content, not the gradient fixture: PNG's
     // Sub filter turns a constant-shifted gradient into IDENTICAL

@@ -115,8 +115,8 @@ class RanksSpec extends SparkSpec {
     // funnel one task, because terms 2-3 of the decomposition split the
     // single key's rows across TIE bands. Correctness half here (1000
     // rows, one key, both orders, plus a tiny tie-band width that
-    // forces many bands); the throughput half is ScaleStress's
-    // stress_degenerate_key_rank factor.
+    // forces many bands); the throughput half was measured as the
+    // 10× stress_degenerate_key_rank factor in r12 (d9e29ab).
     val degen = (1L to 1000L).map(i => (42L, i)).toDF("k", "tie")
     for (asc <- Seq(true, false); tieBits <- Seq(16, 2)) {
       val got = Ranks.withGlobalRank(degen, col("k"), asc, col("tie"), "got",

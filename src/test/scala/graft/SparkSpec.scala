@@ -7,16 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * runs all suites in one JVM, so this is one session total).
   */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Tables.localSession("graft-test", 4)
 
   def resource(name: String): String = {
     val url = Thread.currentThread.getContextClassLoader.getResource(name)

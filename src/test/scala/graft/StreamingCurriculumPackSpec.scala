@@ -100,7 +100,7 @@ class StreamingCurriculumPackSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("curpack-ck").toString
     val in = MemoryStream[(Long, String)]
     val q = StreamingCurriculumPack.start(
-      spark, in.toDF().toDF("doc_id", "text"),
+      in.toDF().toDF("doc_id", "text"),
       s"$dir/shards", s"$ckpt/q", seqLen, vocab, stats, w,
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
     try {

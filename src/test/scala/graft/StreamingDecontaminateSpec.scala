@@ -38,7 +38,7 @@ class StreamingDecontaminateSpec extends SparkSpec {
 
     val in = MemoryStream[(Long, String)]
     val q = StreamingDecontaminate.start(
-      spark, in.toDF().toDF("doc_id", "text"),
+      in.toDF().toDF("doc_id", "text"),
       s"$dir/clean", s"$ckpt/q", evalGrams, bloom, n = 6,
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
     try {

@@ -18,7 +18,7 @@ class StreamingIncrementalDedupSpec extends SparkSpec {
     val corpus = Files.createTempDirectory("graft-inc-dedup").toString + "/corpus"
     val ckpt = Files.createTempDirectory("graft-inc-ckpt").toString
     val q = StreamingIncrementalDedup.start(
-      spark, in.toDF().toDF("doc_id", "text"), corpus, ckpt,
+      in.toDF().toDF("doc_id", "text"), corpus, ckpt,
       threshold = 0.2, trigger = Trigger.ProcessingTime("25 milliseconds"))
     try {
       in.addData(
@@ -44,7 +44,7 @@ class StreamingIncrementalDedupSpec extends SparkSpec {
     val corpus = Files.createTempDirectory("graft-inc-dedup2").toString + "/corpus"
     val ckpt = Files.createTempDirectory("graft-inc-ckpt2").toString
     val q = StreamingIncrementalDedup.start(
-      spark, in.toDF().toDF("doc_id", "text"), corpus, ckpt,
+      in.toDF().toDF("doc_id", "text"), corpus, ckpt,
       threshold = 0.2, trigger = Trigger.ProcessingTime("25 milliseconds"))
     try {
       // "hi" has <3 words → empty shingle set → the jaccard check can
@@ -66,7 +66,7 @@ class StreamingIncrementalDedupSpec extends SparkSpec {
     val corpus = Files.createTempDirectory("graft-inc-dedup3").toString + "/corpus"
     val ckpt = Files.createTempDirectory("graft-inc-ckpt3").toString
     val q = StreamingIncrementalDedup.start(
-      spark, in.toDF().toDF("doc_id", "text"), corpus, ckpt,
+      in.toDF().toDF("doc_id", "text"), corpus, ckpt,
       threshold = 0.2, trigger = Trigger.ProcessingTime("25 milliseconds"))
     try {
       in.addData(
@@ -105,7 +105,7 @@ class StreamingIncrementalDedupSpec extends SparkSpec {
     val corpus = root + "/corpus"
     val ckpt = Files.createTempDirectory("graft-inc-ckpt5").toString
     val q = StreamingIncrementalDedup.start(
-      spark, in.toDF().toDF("doc_id", "text"), corpus, ckpt,
+      in.toDF().toDF("doc_id", "text"), corpus, ckpt,
       threshold = 0.2, trigger = Trigger.ProcessingTime("25 milliseconds"))
     try {
       in.addData((1L, "the quick brown fox jumps over the lazy dog"))
@@ -134,7 +134,7 @@ class StreamingIncrementalDedupSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("graft-inc-ckpt4").toString
     // per-band files pile up one per batch; compact every 4 batches
     val q = StreamingIncrementalDedup.start(
-      spark, in.toDF().toDF("doc_id", "text"), corpus, ckpt,
+      in.toDF().toDF("doc_id", "text"), corpus, ckpt,
       threshold = 0.2, trigger = Trigger.ProcessingTime("25 milliseconds"),
       compactEvery = 4, compactTargetBytes = 128L << 20)
     def parquetFiles(dir: String): Int = {

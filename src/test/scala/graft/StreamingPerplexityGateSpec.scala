@@ -54,7 +54,7 @@ class StreamingPerplexityGateSpec extends SparkSpec {
 
     val in = MemoryStream[(Long, String, String)]
     val q = StreamingPerplexityGate.start(
-      spark, in.toDF().toDF("doc_id", "lang", "text"),
+      in.toDF().toDF("doc_id", "lang", "text"),
       s"$dir/kept", s"$ckpt/q", theLm, theCuts,
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
     try {

@@ -29,7 +29,7 @@ class StreamingRedactSpec extends SparkSpec {
 
     val in = MemoryStream[(Long, String)]
     val q = StreamingRedact.start(
-      spark, in.toDF().toDF("doc_id", "text"),
+      in.toDF().toDF("doc_id", "text"),
       s"$dir/clean", s"$ckpt/q", deny,
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
     try {

@@ -32,7 +32,7 @@ class StreamingShardPackSpec extends SparkSpec {
     // A zero-interval ProcessingTime trigger + processAllAvailable()
     // after each addData pins b1 -> batch 0, b2 -> batch 1.
     val q = StreamingShardPack.start(
-      spark, in.toDF().toDF("doc_id", "tokens"),
+      in.toDF().toDF("doc_id", "tokens"),
       s"$dir/shards", s"$ckpt/q", seqLen = 4,
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
     try {
@@ -59,7 +59,7 @@ class StreamingShardPackSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("shardpack-mf-ck").toString
     val in = MemoryStream[(Long, Seq[String])]
     val q = StreamingShardPack.start(
-      spark, in.toDF().toDF("doc_id", "tokens"),
+      in.toDF().toDF("doc_id", "tokens"),
       s"$dir/shards", s"$ckpt/q", seqLen = 4,
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L),
       manifest = true)

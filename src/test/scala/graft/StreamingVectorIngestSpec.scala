@@ -28,7 +28,7 @@ class StreamingVectorIngestSpec extends SparkSpec {
 
     val in = MemoryStream[(Long, Array[Float])]
     val q = StreamingVectorIngest.start(
-      spark, in.toDF().toDF("vec_id", "embedding"), cent, dir, ckpt,
+      in.toDF().toDF("vec_id", "embedding"), cent, dir, ckpt,
       refitCheckEvery = 1,
       trigger = Trigger.ProcessingTime("25 milliseconds"))
     try {
@@ -72,7 +72,7 @@ class StreamingVectorIngestSpec extends SparkSpec {
     val cent = Similarity.centroids(corpus).localCheckpoint()
     val in = MemoryStream[(Long, Array[Float])]
     val q = StreamingVectorIngest.start(
-      spark, in.toDF().toDF("vec_id", "embedding"), cent, dir, ckpt,
+      in.toDF().toDF("vec_id", "embedding"), cent, dir, ckpt,
       refitCheckEvery = 1,
       trigger = Trigger.ProcessingTime("25 milliseconds"))
     try {

@@ -5,8 +5,8 @@ import graft.streaming.StreamingBpeDrift
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The tokenizer-lifecycle composition TokenizerLifecycleDemo runs on
-  * real testdata, pinned on a fixture where every step's outcome is
+/** The tokenizer-lifecycle composition (train, persist, drift-monitor,
+  * continue; run on real testdata in faae2d7), pinned on a fixture where every step's outcome is
   * forced: the training alphabet {a,b,c} collapses completely under
   * v1's two merges, so the continuation's merges MUST come from the
   * drifted alphabet {x,y,z} — prefix law, OOV cure, and the strict

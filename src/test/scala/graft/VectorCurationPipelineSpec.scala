@@ -38,7 +38,7 @@ class VectorCurationPipelineSpec extends SparkSpec {
     // member 1 (0°, cos 0.99996); vec 11 (4.5°) is ≥ 1.2° from every
     // member → survives, and still lands in cents-100 centroid range
     val q = VectorCurationPipeline.start(
-      spark, in.toDF().toDF("vec_id", "embedding"), root, ckpt,
+      in.toDF().toDF("vec_id", "embedding"), root, ckpt,
       threshold = 0.9999, ksThreshold = 0.2,
       trigger = Trigger.ProcessingTime("25 milliseconds"))
     try {
@@ -102,7 +102,7 @@ class VectorCurationPipelineSpec extends SparkSpec {
     VectorCurationPipeline.init(spark, seed, root)
     val in = MemoryStream[(Long, Array[Float])]
     val q = VectorCurationPipeline.start(
-      spark, in.toDF().toDF("vec_id", "embedding"), root, ckpt,
+      in.toDF().toDF("vec_id", "embedding"), root, ckpt,
       threshold = 0.9999, ksThreshold = 0.2, refitRounds = 2,
       trigger = Trigger.ProcessingTime("25 milliseconds"))
     try {
