@@ -28,28 +28,27 @@ object DedupGroups {
     * (`doc_a`, `doc_b`). Output: (doc_id, group_id), one row per
     * distinct doc appearing in any pair.
     *
-    * `shortcut = true` adds pointer doubling to each round — every doc
-    * also adopts its current label's label (label(label(v)), one extra
-    * labels⋈labels hash join on the label key) — collapsing the round
-    * count from O(component diameter) to O(log diameter): a
+    * Rounds from `shortcutAfter` on (0-based) add pointer doubling —
+    * every doc also adopts its current label's label (label(label(v)),
+    * one extra labels⋈labels hash join on the label key) — collapsing
+    * the round count from O(component diameter) to O(log diameter): a
     * 10⁶-doc template-spam CHAIN converges in ~20 rounds instead of
     * 10⁶ (DedupGroupsSpec proves a path graph plain propagation
     * cannot finish within its round budget). The result is
     * bit-identical (still min doc_id over the component; spec-pinned).
-    * Default stays off: real near-dup components are hops-shallow and
-    * the extra per-round join would cost more than it saves.
     *
-    * `shortcutAfter` (r16) makes that trade ADAPTIVE: a loop still
+    * The default of 4 makes that trade ADAPTIVE: a loop still
     * unconverged after that many plain rounds is propagating through a
     * deep component, so doubling switches on mid-loop — shallow dedup
     * graphs (2-4 rounds, the common case) never pay the extra join,
     * and chain-shaped graphs (q101's prefix-edit chains ran to ~19 of
     * the 20-round cap, ~90 driver round-trips) collapse to
-    * O(log diameter) remaining rounds. The fixpoint is the same
-    * labels either way — only the number of rounds to reach it
-    * changes, which the convergence check already owns. */
+    * O(log diameter) remaining rounds. `shortcutAfter = 0` doubles
+    * from the first round; `Int.MaxValue` never does. The fixpoint is
+    * the same labels either way — only the number of rounds to reach
+    * it changes, which the convergence check already owns. */
   def connectedComponents(pairs: DataFrame, maxRounds: Int = 20,
-      shortcut: Boolean = false, shortcutAfter: Int = 4): DataFrame = {
+      shortcutAfter: Int = 4): DataFrame = {
     // ONE job per round (r16 — the loop was action-bound, ~50 ms per
     // driver round-trip at bench scale and a full barrier at cluster
     // scale): the round's eager checkpoint is the round's only action,
@@ -89,7 +88,7 @@ object DedupGroups {
         .join(labels.select(col("doc_id").as("dst"), col("group_id")), Seq("dst"))
         .select(col("src").as("doc_id"), col("group_id"), lit(false).as("own"))
       val viaShortcut =
-        if (!(shortcut || round >= shortcutAfter)) Nil
+        if (round < shortcutAfter) Nil
         else Seq(labels.select(col("doc_id"), col("group_id").as("graft_mid"))
           .join(labels.select(col("doc_id").as("graft_mid"),
             col("group_id")), Seq("graft_mid"))

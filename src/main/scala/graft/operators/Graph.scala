@@ -270,20 +270,15 @@ object Graph {
     * let the planner pick a co-partitioned shuffle join against the
     * src-partitioned checkpointed edges.
     *
-    * `perRoundCheckpoint`: `None` (default) auto-decides round
-    * materialization — plan statistics when the input has them, an
-    * exact count of the already-materialized edge list when it does
-    * not (a checkpointed/cached input's stats degrade to
-    * defaultSizeInBytes, which must not read as "huge"). A caller
-    * whose edge source is known to defeat the size estimate (heavily
-    * compressed repetitive parquet under-estimates ~10×; see the
-    * semDedup broadcastBlocks notes) pins the behavior with
-    * `Some(true)`/`Some(false)` — results are bit-identical either
-    * way, only the plan shape changes. */
+    * Round materialization is decided from plan statistics when the
+    * input has them, else from an exact count of the already-
+    * materialized edge list (a checkpointed/cached input's stats
+    * degrade to defaultSizeInBytes, which must not read as "huge").
+    * Results are bit-identical either way; only the plan shape
+    * changes. */
   def pageRankWeighted(
       edges: DataFrame, iterations: Int, dampingPct: Int = 85,
-      broadcastNodes: Boolean = true,
-      perRoundCheckpoint: Option[Boolean] = None): DataFrame = {
+      broadcastNodes: Boolean = true): DataFrame = {
     require(iterations >= 1, "pageRank needs at least one iteration")
     require(dampingPct > 0 && dampingPct < 100, "dampingPct must be in (0, 100)")
     def nodeSide(df: DataFrame): DataFrame =
@@ -300,9 +295,9 @@ object Graph {
     // test scale) edge derivation to a handful of partitions, and a
     // checkpoint frozen that way caps every round's scan parallelism
     val (e0, e0Ids) = Blocks.checkpointTracked(edges.repartition(col("src")))
-    val perRound = perRoundCheckpoint.getOrElse(
+    val perRound =
       if (statsKnown) statsBytes > PerRoundCheckpointStatsBytes
-      else e0.count() > 2000000L)
+      else e0.count() > 2000000L
     val outW = e0.groupBy(col("src")).agg(sum(col("w")).as("wsum"))
     val (e, eIds) = Blocks.checkpointTracked(e0.join(nodeSide(outW), "src"))
     val baseRank = (100L - dampingPct) * 10000L

@@ -84,11 +84,13 @@ object Layout {
     *
     * Each leaf directory is compacted independently (partition values
     * live in the directory name, so rewriting files in place preserves
-    * the table's partitioning), via stage → move-aside → rename with
-    * every rename checked — a failure aborts with the original files
-    * either live or under `.old`, never lost. Returns
-    * (filesBefore, filesAfter) over the dirs it rewrote; running it
-    * again is a no-op.
+    * the table's partitioning) through a [[Swap]], after a
+    * [[Swap.recover]] of the whole tree: a crash leaves the original
+    * files either live or under their aside, never lost, and every
+    * consumer of a compacted dir must run [[Swap.recover]] before
+    * reading (a reader that merely skips dot-prefixed dirs would see
+    * the table as absent). Returns (filesBefore, filesAfter) over the
+    * dirs it rewrote; running it again is a no-op.
     *
     * `sortCols`: pass the cluster key of a [[writeRangeClustered]] /
     * [[writeZOrdered]] table and the rewrite range-partitions + sorts
@@ -96,64 +98,18 @@ object Layout {
     * the layout exists for — the default hash repartition would
     * scramble rows across files and silently destroy the row-group
     * min/max pruning every later scan depends on. */
-  /** Roll back a crash-interrupted [[compact]] swap: any `.N.old`
-    * aside dir whose live sibling `N` is MISSING is renamed back into
-    * place (and stale `.N.compact` staging deleted). A reader that
-    * merely ignores dot-prefixed dirs would see the table as absent —
-    * for an ingest pipeline that "absent" silently becomes "start
-    * empty", which loses the whole corpus's dedup history, so every
-    * consumer of a compacted dir must recover before reading.
-    * [[compact]] itself calls this first; long-lived streams call it
-    * per batch. Returns the number of dirs restored. */
-  def recoverCompaction(spark: SparkSession, dir: String): Int = {
-    import org.apache.hadoop.fs.Path
-    val target = new Path(dir)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var restored = 0
-    def heal(asideDir: Path): Unit = {
-      val name = asideDir.getName.stripPrefix(".").stripSuffix(".old")
-      val live = new Path(asideDir.getParent, name)
-      val staged = new Path(asideDir.getParent, s".$name.compact")
-      if (fs.exists(asideDir) && !fs.exists(live)) {
-        // crashed between move-aside and move-into-place: the staged
-        // output (if complete) and the originals both exist — restore
-        // the originals (always safe; a re-run just re-compacts)
-        if (fs.exists(staged)) fs.delete(staged, true)
-        require(fs.rename(asideDir, live),
-          s"recoverCompaction: failed to restore $asideDir to $live")
-        restored += 1
-      }
-    }
-    // the table dir itself may be the stranded one (non-partitioned
-    // tables compact their root): look for a sibling aside
-    heal(new Path(target.getParent, s".${target.getName}.old"))
-    def walk(p: Path): Unit =
-      if (fs.exists(p) && fs.getFileStatus(p).isDirectory) {
-        val entries = fs.listStatus(p)
-        entries.filter(s => s.isDirectory &&
-          s.getPath.getName.startsWith(".") &&
-          s.getPath.getName.endsWith(".old")).foreach(s => heal(s.getPath))
-        entries.filter(s => s.isDirectory &&
-          !s.getPath.getName.startsWith(".") &&
-          !s.getPath.getName.startsWith("_"))
-          .foreach(s => walk(s.getPath))
-      }
-    walk(target)
-    restored
-  }
-
   def compact(
       spark: SparkSession,
       dir: String,
       targetBytes: Long = 128L << 20,
       sortCols: Seq[String] = Nil): (Int, Int) = {
     import org.apache.hadoop.fs.Path
-    recoverCompaction(spark, dir) // heal any crash-interrupted swap first
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Swap.recover(fs, root)
     def leafDirs(p: Path): Seq[Path] = {
       val st = fs.listStatus(p).filterNot { s =>
-        // "_" (Spark markers) and "." (our staging/aside dirs) are
+        // "_" (Spark markers) and "." (staging/aside dirs) are
         // invisible to Spark's partition discovery — and must be
         // invisible to a compaction re-run too, or a crash-interrupted
         // swap would get its leftovers compacted as fake partitions
@@ -171,26 +127,14 @@ object Layout {
         math.ceil(parts.map(_.getLen).sum.toDouble / targetBytes).toInt)
       if (parts.length > want) {
         before += parts.length; after += want
-        // dot-prefixed siblings: Spark/Hadoop path filters skip them, so
-        // a reader (or a crashed re-run) never sees staging or aside
-        // dirs as partition values
-        val staged = new Path(leaf.getParent, s".${leaf.getName}.compact")
-        if (fs.exists(staged)) fs.delete(staged, true)
-        val data = spark.read.parquet(leaf.toString)
-        val arranged =
-          if (sortCols.isEmpty) data.repartition(want)
-          else data.repartitionByRange(want, sortCols.map(col): _*)
-            .sortWithinPartitions(sortCols.map(col): _*)
-        arranged.write.parquet(staged.toString)
-        val aside = new Path(leaf.getParent, s".${leaf.getName}.old")
-        if (fs.exists(aside)) fs.delete(aside, true)
-        require(fs.rename(leaf, aside),
-          s"compact: failed to move $leaf aside; staged output kept at $staged")
-        require(fs.rename(staged, leaf),
-          s"compact: failed to move $staged into place; originals under $aside")
-        require(fs.delete(aside, true),
-          s"compact: failed to delete $aside — remove it manually (it is " +
-            "dot-prefixed, so readers ignore it; disk is the only cost)")
+        Swap.replace(fs, leaf) { staged =>
+          val data = spark.read.parquet(leaf.toString)
+          val arranged =
+            if (sortCols.isEmpty) data.repartition(want)
+            else data.repartitionByRange(want, sortCols.map(col): _*)
+              .sortWithinPartitions(sortCols.map(col): _*)
+          arranged.write.parquet(staged.toString)
+        }
       }
     }
     (before, after)

@@ -20,6 +20,10 @@ import org.apache.spark.sql.types.StructType
   *    Delta MERGE would replace this on a lake deployment);
   *  - K5 `UPDATE messages SET posted` → read-modify-swap of the small
   *    messages table.
+  *
+  * Every swap is a [[Swap]]: opening the store, [[read]], [[exists]]
+  * and each swap first restore what a crash mid-swap left under an
+  * aside, so a crash never turns into a silently empty table.
   */
 class TableStore(spark: SparkSession, root: String) {
 
@@ -41,7 +45,9 @@ class TableStore(spark: SparkSession, root: String) {
   private def fs = new Path(root)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  def exists(table: String): Boolean = fs.exists(new Path(path(table)))
+  Swap.recover(fs, new Path(root))
+
+  def exists(table: String): Boolean = Swap.restore(fs, new Path(path(table)))
 
   /** Read a table; empty-with-schema when nothing has been written yet. */
   def read(table: String): DataFrame =
@@ -62,25 +68,13 @@ class TableStore(spark: SparkSession, root: String) {
       .parquet(path(table))
   }
 
-  /** Atomic-ish snapshot replace: write to a side dir, swap via rename.
-    * Needed because Spark cannot overwrite a parquet path that feeds the
-    * same plan (the reference's in-place UPDATE has no parquet analog). */
-  private def replace(table: String, df: DataFrame): Unit = {
-    val target = new Path(path(table))
-    val tmp = new Path(path(table) + ".swap")
-    val old = new Path(path(table) + ".old")
-    df.select(schemas(table).fieldNames.map(col).toIndexedSeq: _*)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    if (fs.exists(old)) fs.delete(old, true)
-    // rename can fail without throwing (cross-FS move, permissions);
-    // abort with the staged snapshot intact rather than losing data
-    if (fs.exists(target))
-      require(fs.rename(target, old),
-        s"replace($table): failed to move live table aside; staged snapshot kept at $tmp")
-    require(fs.rename(tmp, target),
-      s"replace($table): failed to move snapshot into place; prior data kept at $old")
-    fs.delete(old, true)
-  }
+  /** Snapshot replace through [[Swap]]: Spark cannot overwrite a
+    * parquet path that feeds the same plan (the reference's in-place
+    * UPDATE has no parquet analog). */
+  private def replace(table: String, df: DataFrame): Unit =
+    Swap.replace(fs, new Path(path(table)))(staged =>
+      df.select(schemas(table).fieldNames.map(col).toIndexedSeq: _*)
+        .write.mode(SaveMode.Overwrite).parquet(staged.toString))
 
   /** K3: d_players upsert — `INSERT … ON CONFLICT (id_from_json) DO
     * UPDATE SET nickname = EXCLUDED.nickname` (main.py:146-151):
@@ -146,6 +140,9 @@ class TableStore(spark: SparkSession, root: String) {
       throw new IllegalArgumentException(s"$table is not partitioned"))
     require(partCols.size == 1, s"single partition column expected: $partCols")
     val partCol = partCols.head
+    val live = new Path(path(table))
+    // partition asides are invisible to read(): restore them first
+    Swap.recover(fs, live)
     val incoming = updates
       .select(schemas(table).fieldNames.map(col).toIndexedSeq: _*)
       // within-batch duplicates: LAST wins, like the reference's
@@ -183,40 +180,20 @@ class TableStore(spark: SparkSession, root: String) {
       .drop("graft_seq", "graft_rn")
       .select(schemas(table).fieldNames.map(col).toIndexedSeq: _*)
 
-    val tmp = new Path(path(table) + ".merge")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    merged.write.partitionBy(partCol).parquet(tmp.toString)
-    fs.mkdirs(new Path(path(table)))
-    // swap the partition dirs Spark actually STAGED (their names carry
-    // Spark's own encoding — __HIVE_DEFAULT_PARTITION__ for null,
+    val staged = Swap.staging(live)
+    fs.delete(staged, true)
+    merged.write.partitionBy(partCol).parquet(staged.toString)
+    fs.mkdirs(live)
+    // install the partition dirs Spark actually STAGED (their names
+    // carry Spark's own encoding — __HIVE_DEFAULT_PARTITION__ for null,
     // URL-escaping for strings — which a hand-built s"$col=$v" would
     // mismatch, silently dropping rows). LWW can't empty a partition,
-    // so staged dirs == touched partitions exactly. Each live partition
-    // is moved aside (not deleted) before its staged replacement moves
-    // in, and every rename result is checked: a failure aborts with the
-    // staged data still under .merge and the prior partition either
-    // live or recoverable from .backup — never silently lost. The swap
-    // is still not atomic ACROSS partitions (a crash mid-loop leaves
-    // some partitions new, some old — the same torn-window a
-    // non-transactional multi-partition MERGE has without a lakehouse
-    // commit log).
-    val backup = new Path(path(table) + ".backup")
-    if (fs.exists(backup)) fs.delete(backup, true)
-    fs.mkdirs(backup)
-    fs.listStatus(tmp)
+    // so staged dirs == touched partitions exactly. Each partition swap
+    // is atomic; the set of them is not (see [[Swap]]).
+    fs.listStatus(staged)
       .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$partCol="))
-      .foreach { st =>
-        val target = new Path(path(table), st.getPath.getName)
-        if (fs.exists(target))
-          require(fs.rename(target, new Path(backup, st.getPath.getName)),
-            s"upsertPartitioned($table): failed to move $target aside; " +
-              s"staged merge kept at $tmp, nothing lost")
-        require(fs.rename(st.getPath, target),
-          s"upsertPartitioned($table): failed to move ${st.getPath} into place; " +
-            s"prior partition preserved under $backup")
-      }
-    fs.delete(tmp, true)
-    fs.delete(backup, true)
+      .foreach(st => Swap.install(fs, st.getPath, new Path(live, st.getPath.getName)))
+    fs.delete(staged, true)
   }
 
   /** P7: existence probe — distributed form of main.py:47-54. */

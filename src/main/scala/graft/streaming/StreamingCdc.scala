@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.EventOps
+import graft.store.Swap
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -19,11 +20,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * Scale shape: the merge shuffles on the key column only; at lake
   * scale the whole-snapshot swap becomes a partition-scoped one
-  * (TableStore.upsertPartitioned's pattern). The new snapshot is
-  * written to a side directory and moved into place with CHECKED
-  * renames — a destructive in-place overwrite would lose the whole
-  * snapshot if the process died mid-write (the checkpoint replays only
-  * the LAST batch; earlier state exists nowhere else).
+  * (TableStore.upsertPartitioned's pattern). The new snapshot replaces
+  * the old through [[graft.store.Swap]], and each batch first restores
+  * a snapshot a crash left under its aside — a destructive in-place
+  * overwrite would lose the whole snapshot if the process died
+  * mid-write (the checkpoint replays only the LAST batch; earlier state
+  * exists nowhere else).
   */
 object StreamingCdc {
 
@@ -38,36 +40,21 @@ object StreamingCdc {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
         val spark = batch.sparkSession
-        val target = new Path(snapshotDir)
+        val live = new Path(snapshotDir)
         // hadoop FS, not java.io.File: the snapshot may live on any
         // filesystem (java.io.File is always "absent" for hdfs:// …,
         // which would silently reset the snapshot every batch)
-        val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val staged = new Path(snapshotDir + ".staging")
-        val old = new Path(snapshotDir + ".old")
-        // crash between the two swap renames below leaves the previous
-        // snapshot at .old and no live dir — recover it before reading
-        if (!fs.exists(target) && fs.exists(old))
-          require(fs.rename(old, target),
-            s"StreamingCdc: failed to recover $old to $target")
+        val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        Swap.recover(fs, live)
         val cur =
-          if (fs.exists(target)) spark.read.parquet(snapshotDir)
+          if (fs.exists(live)) spark.read.parquet(snapshotDir)
           else spark.createDataFrame(
             new java.util.ArrayList[Row](), batch.schema)
         val merged = EventOps
           .cdcApply(cur.unionByName(batch.toDF()), keyCol, opCol)
           .localCheckpoint() // materialize before touching the target dir
-        fs.delete(staged, true)
-        fs.delete(old, true)
-        merged.write.mode("overwrite").parquet(staged.toString)
-        // checked two-rename swap: the live dir is only ever complete
-        // (crash between the renames leaves .old intact for recovery)
-        if (fs.exists(target))
-          require(fs.rename(target, old),
-            s"StreamingCdc: failed to move $target aside; staged snapshot kept at $staged")
-        require(fs.rename(staged, target),
-          s"StreamingCdc: failed to move $staged into place; previous snapshot at $old")
-        fs.delete(old, true)
+        Swap.replace(fs, live)(staged =>
+          merged.write.mode("overwrite").parquet(staged.toString))
         ()
       }
       .start()

@@ -36,7 +36,13 @@ object StreamingIncrementalDedup {
 
   def bandIndexPath(corpusPath: String): String = corpusPath + "_bands"
 
-  /** `compactEvery`: every N batches, [[graft.store.Layout.compact]]
+  /** One micro-batch body — exposed so composed pipelines
+    * ([[IngestDoor]]) and specs can drive a batch or a replay
+    * directly. Idempotent per (batch, id): survivors are exact-anti-
+    * joined against the corpus before appending (see the class doc's
+    * delivery notes).
+    *
+    * `compactEvery`: every N batches, [[graft.store.Layout.compact]]
     * rewrites the band index's small files (a per-batch append writes a
     * file per touched band partition, so a year of micro-batches is
     * millions of kilobyte files and the probe's index scan pays
@@ -44,14 +50,9 @@ object StreamingIncrementalDedup {
     * results are unchanged by compaction (same rows, fewer files —
     * spec-asserted). A crash mid-swap can leave a dir parked under its
     * dot-prefixed aside name; every batch runs
-    * [[graft.store.Layout.recoverCompaction]] first, so the replayed
-    * batch sees the restored corpus — never an "empty" one that would
-    * silently forget the dedup history (spec-asserted). */
-  /** One micro-batch body — exposed so composed pipelines
-    * ([[IngestDoor]]) and specs can drive a batch or a replay
-    * directly. Idempotent per (batch, id): survivors are exact-anti-
-    * joined against the corpus before appending (see the class doc's
-    * delivery notes). */
+    * [[graft.store.Swap.recover]] first, so the replayed batch sees the
+    * restored corpus — never an "empty" one that would silently forget
+    * the dedup history (spec-asserted). */
   def applyBatch(
       batch: DataFrame,
       batchId: Long,
@@ -77,8 +78,8 @@ object StreamingIncrementalDedup {
     // partition) parked under a dot-prefixed aside dir; an exists
     // check that merely ignored it would silently restart dedup
     // from an EMPTY corpus — restore before looking
-    graft.store.Layout.recoverCompaction(spark, corpusPath)
-    graft.store.Layout.recoverCompaction(spark, idxPath)
+    graft.store.Swap.recover(fs, corpusHadoopPath)
+    graft.store.Swap.recover(fs, idxHadoopPath)
     val clean =
       if (fs.exists(corpusHadoopPath)) {
         val corpus = spark.read.parquet(corpusPath)

@@ -3,10 +3,11 @@ package graft
 import graft.operators.DedupGroups
 import org.apache.spark.sql.functions._
 
-/** Connected-components laws for the pointer-doubling (`shortcut`)
-  * mode: bit-identical groups on ordinary graphs, and convergence on
-  * an adversarially DEEP chain within a round budget plain min-label
-  * propagation provably cannot meet (diameter rounds vs log-diameter).
+/** Connected-components laws for pointer doubling (`shortcutAfter = 0`
+  * doubles from the first round): bit-identical groups on ordinary
+  * graphs, and convergence on an adversarially DEEP chain within a
+  * round budget plain min-label propagation provably cannot meet
+  * (diameter rounds vs log-diameter).
   */
 class DedupGroupsSpec extends SparkSpec {
   import spark.implicits._
@@ -20,7 +21,7 @@ class DedupGroupsSpec extends SparkSpec {
       (30L, 31L), (31L, 32L), (30L, 33L) // star-ish
     ).toDF("doc_a", "doc_b")
     val plain = rowSet(DedupGroups.connectedComponents(pairs))
-    val fast = rowSet(DedupGroups.connectedComponents(pairs, shortcut = true))
+    val fast = rowSet(DedupGroups.connectedComponents(pairs, shortcutAfter = 0))
     assert(plain === fast)
     assert(plain.nonEmpty)
   }
@@ -37,7 +38,7 @@ class DedupGroupsSpec extends SparkSpec {
     }
     // label-of-label doubling closes it in O(log n) rounds
     val got = DedupGroups.connectedComponents(chain, maxRounds = 12,
-      shortcut = true)
+      shortcutAfter = 0)
     assert(got.count() === n)
     assert(got.filter(col("group_id") =!= 0L).count() === 0,
       "every chain member must collapse to the min doc_id 0")

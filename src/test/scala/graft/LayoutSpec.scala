@@ -1,6 +1,6 @@
 package graft
 
-import graft.store.Layout
+import graft.store.{Layout, Swap}
 import org.apache.spark.sql.functions._
 
 /** Bucketed joins plan without exchanges; salted joins return exactly
@@ -65,12 +65,12 @@ class LayoutSpec extends SparkSpec {
     // must both ignore them rather than treat them as partitions
     val rows = spark.read.parquet(dir).count()
     (1 to 5).map(i => (i.toLong, s"junk$i", "px")).toDF("id", "v", "p")
-      .write.parquet(s"$dir/.p=px.compact")
+      .write.parquet(s"$dir/.p=px.staged")
     assert(spark.read.parquet(dir).count() == rows)
     assert(Layout.compact(spark, dir) == (0, 0))
   }
 
-  test("recoverCompaction restores dirs stranded mid-swap (leaf and root)") {
+  test("Swap.recover restores dirs stranded mid-swap (leaf and root)") {
     import org.apache.hadoop.fs.Path
     val base = java.nio.file.Files.createTempDirectory("recover").toString
     val dir = base + "/t"
@@ -83,21 +83,21 @@ class LayoutSpec extends SparkSpec {
     // leaf: live dir gone, originals under .old, stale staging present
     assert(fs.rename(new Path(s"$dir/p=p1"), new Path(s"$dir/.p=p1.old")))
     (1 to 5).map(i => (i.toLong, "junk")).toDF("id", "v")
-      .write.parquet(s"$dir/.p=p1.compact")
+      .write.parquet(s"$dir/.p=p1.staged")
     assert(spark.read.parquet(dir).count() < 300) // p1 invisible
-    assert(graft.store.Layout.recoverCompaction(spark, dir) == 1)
+    assert(Swap.recover(fs, new Path(dir)) == 1)
     assert(rowSet(spark.read.parquet(dir)
       .select(col("id"), col("v"), col("p").cast("string"))) == all)
-    assert(!fs.exists(new Path(s"$dir/.p=p1.compact")))
+    assert(!fs.exists(new Path(s"$dir/.p=p1.staged")))
     // same crash on the TABLE ROOT (non-partitioned tables compact
     // their root): the whole dir is parked under a sibling aside
     assert(fs.rename(new Path(dir), new Path(s"$base/.t.old")))
     assert(!fs.exists(new Path(dir)))
-    assert(graft.store.Layout.recoverCompaction(spark, dir) == 1)
+    assert(Swap.recover(fs, new Path(dir)) == 1)
     assert(rowSet(spark.read.parquet(dir)
       .select(col("id"), col("v"), col("p").cast("string"))) == all)
     // healthy dir: no-op
-    assert(graft.store.Layout.recoverCompaction(spark, dir) == 0)
+    assert(Swap.recover(fs, new Path(dir)) == 0)
   }
 
   test("compact(sortCols) preserves the disjoint ranges of a clustered table") {

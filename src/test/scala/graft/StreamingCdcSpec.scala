@@ -58,12 +58,13 @@ class StreamingCdcSpec extends SparkSpec {
     try {
       log.addData(Seq((1L, t("2024-01-01 10:00:00"), 1L, "I", 100L)))
       q.processAllAvailable()
-      // simulate dying after rename(target, old) and before
-      // rename(staged, target): live dir gone, previous state at .old
+      // simulate dying after rename(live, aside) and before
+      // rename(staged, live): live dir gone, previous state at the
+      // dot-prefixed aside
       val fs = new org.apache.hadoop.fs.Path(snap)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       assert(fs.rename(new org.apache.hadoop.fs.Path(snap),
-        new org.apache.hadoop.fs.Path(snap + ".old")))
+        new org.apache.hadoop.fs.Path(s"$dir/.snapshot.old")))
       log.addData(Seq((2L, t("2024-01-01 11:00:00"), 2L, "I", 200L)))
       q.processAllAvailable()
       val got = spark.read.parquet(snap)
