@@ -18,6 +18,10 @@ object Bench {
     val loadAvg =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ")(0).toDouble
       catch { case _: Throwable => -1.0 }
+    // dev-only subset filter (unset by the driver), parsed before any
+    // timing. Recorded in the emitted JSON ("filter" key) so a leaked
+    // filter can never masquerade as a full official run.
+    val only = SparkEntry.onlyFilter(sys.env.get("SPARK_GRAFT_ONLY"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Tables.localSession("graft-bench", cpus.toInt)
@@ -51,11 +55,6 @@ object Bench {
     }
 
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
-    // dev-only subset filter (unset by the driver), same as Verify's.
-    // Recorded in the emitted JSON ("filter" key) so a leaked filter
-    // can never masquerade as a full official run.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet).filter(_.nonEmpty)
     only.foreach(f => System.err.println(
       s"[bench] WARNING: SPARK_GRAFT_ONLY is set — measuring only ${f.size} " +
         s"of ${SparkEntry.queries.size} queries; this is NOT a full bench"))

@@ -5,13 +5,12 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // dev-only subset filter (unset by the driver): run just the named
+    // queries while iterating, e.g. SPARK_GRAFT_ONLY=q85_bloom_clean,q87_pagerank
+    val only = SparkEntry.onlyFilter(sys.env.get("SPARK_GRAFT_ONLY"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Tables.localSession("graft-verify", cpus.toInt)
     new java.io.File(outDir).mkdirs()
-    // dev-only subset filter (unset by the driver): run just the named
-    // queries while iterating, e.g. SPARK_GRAFT_ONLY=q85_bloom_clean,q87_pagerank
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet).filter(_.nonEmpty)
     // A filtered run must not leave stale parquet from earlier full runs
     // for the queries it skips — a downstream compare would silently mix
     // old and new outputs. Delete skipped dirs and leave a PARTIAL marker.

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * the minimum doc_id in each component, so the output —
   * `(doc_id, group_id)` with `group_id = min(component)` — is unique
   * regardless of execution order, and the keeper convention (keep
-  * `doc_id == group_id`) matches [[ExtensionQueries.q24DedupExact]]'s
+  * `doc_id == group_id`) matches `q24_dedup_exact`'s
   * min-id rule.
   *
   * Scale shape: min-label propagation, one hash-join + partial-agg min

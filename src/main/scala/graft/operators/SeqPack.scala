@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * goes into the current pack while it fits; the first overflow
   * starts the next pack (first-fit, no document splitting — the
   * boundary-respecting variant next to
-  * [[graft.queries.ExtensionQueries.q41TokenChunks]]'s offset
+  * `q41_token_chunks`' offset
   * chunking, which splits mid-document).
   *
   * The recurrence (fill resets on overflow) is not expressible as a

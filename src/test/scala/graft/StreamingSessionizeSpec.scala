@@ -33,7 +33,7 @@ class StreamingSessionizeSpec extends SparkSpec {
 
     // batch truth (q40): sessions whose close (last event + 30 min) the
     // final watermark (max ts) has passed — exactly what append mode emits
-    val batch = graft.queries.Queries.all("q40_sessionize")(spark, sf)
+    val batch = SparkEntry.queries("q40_sessionize")(spark, sf)
     val maxTs = Tables.load(spark, sf, "events")
       .agg(max(col("ts").cast("timestamp").cast("long"))).head().getLong(0)
     val want = batch
