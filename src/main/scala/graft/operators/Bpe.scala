@@ -309,7 +309,7 @@ object Bpe {
     *
     * Per round, deterministically:
     *   1. rank the adjacent-pair counts by (count DESC, lhs, rhs) and
-    *      keep the top `poolSize` (default 4·batchSize) candidates —
+    *      keep the top 4·batchSize candidates —
     *      driver state stays bounded by the pool, never the pair table;
     *   2. a candidate is DISQUALIFIED if it shares a symbol with ANY
     *      higher-ranked pool candidate — lhs/rhs overlapping the
@@ -360,12 +360,10 @@ object Bpe {
   def learnBatched(
       words: DataFrame,
       nRounds: Int,
-      batchSize: Int,
-      poolSize: Int = 0): (Seq[Merge], DataFrame) = {
+      batchSize: Int): (Seq[Merge], DataFrame) = {
     require(nRounds >= 1, "Bpe.learnBatched needs nRounds >= 1")
     require(batchSize >= 1, "Bpe.learnBatched needs batchSize >= 1")
-    val pool = if (poolSize > 0) poolSize else 4 * batchSize
-    require(pool >= batchSize, s"poolSize $pool < batchSize $batchSize")
+    val pool = 4 * batchSize
     var (syms, symsIds) =
       Blocks.checkpointTracked(initialSymbols(words), eager = false)
     // lazy-checkpoint release discipline — see learnLoop
@@ -446,12 +444,10 @@ object Bpe {
       words: DataFrame,
       nRounds: Int,
       batchSize: Int = 1,
-      poolSize: Int = 0,
       broadcastDelta: Boolean = true): (Seq[Merge], DataFrame) = {
     require(nRounds >= 1, "Bpe.learnDelta needs nRounds >= 1")
     require(batchSize >= 1, "Bpe.learnDelta needs batchSize >= 1")
-    val pool = if (poolSize > 0) poolSize else 4 * batchSize
-    require(pool >= batchSize, s"poolSize $pool < batchSize $batchSize")
+    val pool = 4 * batchSize
     var (syms, symsIds) = Blocks.checkpointTracked(initialSymbols(words), eager = false)
     var (counts, countIds) = Blocks.checkpointTracked(pairCounts(syms), eager = false)
     // Lazy-checkpoint release queues (see the note above learn). The one

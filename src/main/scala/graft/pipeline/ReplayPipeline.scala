@@ -79,6 +79,18 @@ class ReplayPipeline(spark: SparkSession, store: TableStore) {
   def createMessage(replay: Int): Unit =
     store.append("messages", MessageBuilder.messageRow(spark, tables, replay))
 
+  /** One replay through ingest and message build, the step both
+    * streams run per replay: a new replay is ingested and messaged, and
+    * a replay already stored (ingest's is_exists skip) with no message
+    * row is messaged, so a run that crashed between the two resumes
+    * and a re-run batch builds nothing twice. */
+  def ingestAndMessage(replay: Int, html: String, json: String): Unit = {
+    val loaded = ingest(replay, html, json)
+    val needsMessage = !loaded && store.replayExists(replay) &&
+      store.read("messages").filter(col("replay_number") === replay).isEmpty
+    if (loaded || needsMessage) createMessage(replay)
+  }
+
   /** Bot-side delivery pick: one unposted message, `posted IS NOT TRUE`
     * so NULL means unposted (bot/botrun.py:297, P4 null-safe). */
   def nextUnposted(): Option[(Int, String)] =

@@ -49,15 +49,22 @@ object ExtensionQueries {
       |     FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
       |     WHERE w <> '' GROUP BY w)""".stripMargin
 
+  /** Round i's adjacent-pair counts `p<i>(lhs, rhs, cnt)` over the
+    * previous vocab state `w<i-1>`, with its leading comma: the head of
+    * every round in [[bpeOracleCtes]] and [[bpeBatchedOracle]]. */
+  private def bpePairCountCte(i: Int): String =
+    s""",
+      | p$i AS (SELECT lhs, rhs, CAST(sum(freq) AS BIGINT) AS cnt FROM (
+      |     SELECT freq, unnest(syms[1:len(syms)-1]) AS lhs,
+      |            unnest(syms[2:len(syms)]) AS rhs
+      |     FROM w${i - 1} WHERE len(syms) >= 2) GROUP BY lhs, rhs),""".stripMargin
+
   private def bpeOracleCtes(nRounds: Int): String = {
     val sb = new StringBuilder(bpeOracleW0)
     for (i <- 1 to nRounds) {
       val p = i - 1
-      sb.append(s""",
-        | p$i AS (SELECT lhs, rhs, CAST(sum(freq) AS BIGINT) AS cnt FROM (
-        |     SELECT freq, unnest(syms[1:len(syms)-1]) AS lhs,
-        |            unnest(syms[2:len(syms)]) AS rhs
-        |     FROM w$p WHERE len(syms) >= 2) GROUP BY lhs, rhs),
+      sb.append(bpePairCountCte(i))
+      sb.append(s"""
         | m$i AS (SELECT lhs, rhs, cnt FROM p$i ORDER BY cnt DESC, lhs, rhs LIMIT 1),
         | w$i AS (SELECT w, freq,
         |     CASE WHEN m.lhs IS NULL OR len(syms) < 2 THEN syms
@@ -105,6 +112,17 @@ object ExtensionQueries {
       | dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS len
       |        FROM tt GROUP BY doc_id)""".stripMargin
 
+  /** [[tokPosCtes]] under the 6-merge vocabulary, plus each document's
+    * exclusive offset `o(doc_id, off)` in the doc_id-ordered corpus
+    * token stream (q190, q194). */
+  private val tokOffsetCtes: String =
+    bpeOracleCtes(6) + tokPosCtes + """,
+        | o AS (SELECT doc_id,
+        |          CAST(coalesce(sum(len) OVER (ORDER BY doc_id
+        |            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+        |            0) AS BIGINT) AS off
+        |       FROM dl)""".stripMargin
+
   /** DuckDB replay of [[graft.operators.Bpe.learnBatched]]'s batched
     * recurrence: per round, rank the pair counts, keep the top `pool`,
     * disqualify candidates sharing a symbol with ANY higher-ranked pool
@@ -121,11 +139,8 @@ object ExtensionQueries {
     val sb = new StringBuilder(bpeOracleW0)
     for (i <- 1 to nRounds) {
       val p = i - 1
-      sb.append(s""",
-        | p$i AS (SELECT lhs, rhs, CAST(sum(freq) AS BIGINT) AS cnt FROM (
-        |     SELECT freq, unnest(syms[1:len(syms)-1]) AS lhs,
-        |            unnest(syms[2:len(syms)]) AS rhs
-        |     FROM w$p WHERE len(syms) >= 2) GROUP BY lhs, rhs),
+      sb.append(bpePairCountCte(i))
+      sb.append(s"""
         | c$i AS (SELECT lhs, rhs, cnt,
         |     ROW_NUMBER() OVER (ORDER BY cnt DESC, lhs, rhs) AS rnk
         |     FROM (SELECT * FROM p$i ORDER BY cnt DESC, lhs, rhs LIMIT $pool)),
@@ -166,6 +181,549 @@ object ExtensionQueries {
       .mkString("\n UNION ALL "))
     sb.append(")")
     sb.toString
+  }
+
+  /** DuckDB replay of [[graft.operators.MinHashLsh]]'s sketch: 3-word
+    * shingles `sh`, 8 md5 minhashes per doc `sig`, and 4 bands of 2
+    * rows `band`. The band CTE is left open so a query closes it with
+    * or without a bucket cap (q44 and [[minhashPairCtes]]). */
+  private val minhashBands: String =
+    """sh AS (
+           SELECT doc_id,
+                  unnest(list_transform(range(1, len(s) - 1),
+                         i -> s[i] || ' ' || s[i+1] || ' ' || s[i+2])) AS sh
+           FROM (SELECT doc_id, string_split(text, ' ') AS s FROM documents)),
+         sig AS (
+           SELECT doc_id, j, min(md5(CAST(j AS VARCHAR) || ':' || sh)) AS mh
+           FROM sh, (SELECT unnest(range(0, 8)) AS j) GROUP BY doc_id, j),
+         band AS (
+           SELECT doc_id, j // 2 AS band,
+                  md5(string_agg(mh, '|' ORDER BY j)) AS bucket
+           FROM sig GROUP BY doc_id, j // 2"""
+
+  /** [[minhashBands]] closed with the 1000-doc bucket cap, then q26's
+    * candidate pairs `cand`, distinct shingles `shd`, pair overlaps
+    * `inter` and shingle-set sizes `sz` (q26, q119, q135 and
+    * [[minhashComponentCtes]]). */
+  private val minhashPairCtes: String =
+    s"""$minhashBands
+           QUALIFY count(*) OVER (PARTITION BY j // 2, md5(string_agg(mh, '|' ORDER BY j))) <= 1000),
+         cand AS (
+           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+           FROM band a JOIN band b
+             ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id),
+         shd AS (SELECT DISTINCT doc_id, sh FROM sh),
+         inter AS (
+           SELECT c.doc_a, c.doc_b, count(*) AS i
+           FROM cand c
+           JOIN shd x ON x.doc_id = c.doc_a
+           JOIN shd y ON y.doc_id = c.doc_b AND x.sh = y.sh
+           GROUP BY c.doc_a, c.doc_b),
+         sz AS (SELECT doc_id, count(*) AS n FROM shd GROUP BY doc_id)"""
+
+  /** [[minhashPairCtes]] closed transitively: `pairs` (Jaccard >= 0.2),
+    * symmetric `edges`, and the recursive `reach(doc_id, r)` whose
+    * min r per doc is its near-dup group (q35's recurrence; needs
+    * `WITH RECURSIVE`; q35, q42, q76, q145). */
+  private val minhashComponentCtes: String =
+    s"""$minhashPairCtes,
+         pairs AS (
+           SELECT doc_a, doc_b FROM inter
+           JOIN sz sa ON sa.doc_id = doc_a
+           JOIN sz sb ON sb.doc_id = doc_b
+           WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.2),
+         edges AS (
+           SELECT doc_a AS src, doc_b AS dst FROM pairs
+           UNION ALL
+           SELECT doc_b AS src, doc_a AS dst FROM pairs),
+         reach(doc_id, r) AS (
+           SELECT DISTINCT src, src FROM edges
+           UNION
+           SELECT e.src, reach.r FROM edges e JOIN reach ON reach.doc_id = e.dst)"""
+
+  /** [[graft.operators.Similarity.centroids]] replayed: per label, the
+    * mean of each of the 64 embedding components (q153, q163, q185 and
+    * [[embeddingCentroidCtes]]). */
+  private val centroidCte: String =
+    """cent AS (
+           SELECT label, list(cx ORDER BY j) AS centroid
+           FROM (SELECT label, j, avg(v[CAST(j AS INT)]) AS cx
+                 FROM e, (SELECT unnest(range(1, 65)) AS j)
+                 GROUP BY label, j)
+           GROUP BY label)"""
+
+  /** Labelled embeddings `e(label, vec_id, v)` and their [[centroidCte]]
+    * (q53, q92, q164, q169, [[ivfTop10Oracle]] and [[semdedupOracle]]). */
+  private val embeddingCentroidCtes: String =
+    s"""e AS (SELECT label, vec_id, CAST(embedding AS DOUBLE[]) AS v
+                    FROM embeddings),
+         $centroidCte"""
+
+  /** q30's probe routing: each query in `q(q_id, qv)` ranks the
+    * centroids by cosine and keeps the clusters whose rank passes
+    * `prnFilter` (q153 and [[ivfTop10Oracle]]). */
+  private def ivfProbesCte(prnFilter: String): String =
+    s"""probes AS (
+           SELECT q_id, qv, label AS probe_label FROM (
+             SELECT q.q_id, q.qv, c.label,
+                    ROW_NUMBER() OVER (PARTITION BY q.q_id
+                      ORDER BY round(list_cosine_similarity(q.qv, c.centroid), 6) DESC,
+                               c.label) AS prn
+             FROM q, cent c)
+           WHERE prn $prnFilter)"""
+
+  /** q30's IVF top-10 for query vectors id < 5: labelled embeddings,
+    * their centroids, the probed clusters (`prnFilter` picks how many by
+    * probe rank) and a cosine top-10 inside them (q30, q30b). */
+  private def ivfTop10Oracle(prnFilter: String): String =
+    s"""WITH $embeddingCentroidCtes,
+         q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 5),
+         ${ivfProbesCte(prnFilter)},
+         s AS (SELECT p.q_id, p.probe_label, e.vec_id,
+                      round(list_cosine_similarity(p.qv, e.v), 6) AS sim
+               FROM probes p JOIN e ON e.label = p.probe_label)
+         SELECT q_id, probe_label, vec_id, sim, rank FROM (
+           SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
+                     ORDER BY sim DESC, vec_id) AS rank FROM s)
+         WHERE rank <= 10"""
+
+  /** Nearest-centroid assignment `a(vec_id, cluster, v)` over `e` and
+    * `cent`, ties to the smaller label (q163, q164 and
+    * [[semdedupOracle]]). */
+  private val semdedupAssignCte: String =
+    """a AS (SELECT vec_id, cluster, v FROM (
+                 SELECT e.vec_id, c.label AS cluster, e.v,
+                        ROW_NUMBER() OVER (PARTITION BY e.vec_id
+                          ORDER BY round(list_cosine_similarity(e.v, c.centroid), 6) DESC,
+                                   c.label) AS rn
+                 FROM e, cent c)
+               WHERE rn = 1)"""
+
+  /** SemDeDup's prune: every vector in `a(vec_id, cluster, v)` with a
+    * smaller-id cluster mate at cosine >= 0.3 (q163 and
+    * [[semdedupKeptSelect]]). */
+  private val semdedupDupCte: String =
+    """dup AS (SELECT DISTINCT y.vec_id
+                 FROM a x JOIN a y ON x.cluster = y.cluster AND x.vec_id < y.vec_id
+                 WHERE round(list_cosine_similarity(x.v, y.v), 6) >= 0.3)"""
+
+  /** [[semdedupDupCte]] and the final keep flag over `a` (q176 and
+    * [[semdedupOracle]]). */
+  private val semdedupKeptSelect: String =
+    s"""$semdedupDupCte
+         SELECT a.vec_id, a.cluster,
+                a.vec_id NOT IN (SELECT vec_id FROM dup) AS kept
+         FROM a"""
+
+  /** SemDeDup over the given labels: nearest-centroid clusters, then the
+    * within-cluster cosine >= 0.3 prune to the smallest id (q160, q165). */
+  private val semdedupOracle: String =
+    s"""WITH $embeddingCentroidCtes,
+         $semdedupAssignCte,
+         $semdedupKeptSelect"""
+
+  /** [[graft.operators.Clustering.kmeans]] (k = 4, iters = 2) replayed:
+    * farthest-point seeds s1..s4 as `cent0`, one E-step `a1`, the
+    * 6-dp-rounded M-step `m1`, and the learned centroids
+    * `cent1(cluster, c)` (q171, q175, q176). */
+  private val kmeansCentroidCtes: String =
+    """e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         s1 AS (SELECT list_transform(v, x -> round(x, 6)) AS c
+                FROM e ORDER BY vec_id LIMIT 1),
+         d2 AS (SELECT e.vec_id, e.v,
+                       round(list_cosine_similarity(e.v, s1.c), 6) + 0.0 AS mx
+                FROM e, s1),
+         s2 AS (SELECT list_transform(v, x -> round(x, 6)) AS c
+                FROM d2 ORDER BY mx, vec_id LIMIT 1),
+         d3 AS (SELECT d2.vec_id, d2.v,
+                       greatest(d2.mx,
+                         round(list_cosine_similarity(d2.v, s2.c), 6) + 0.0) AS mx
+                FROM d2, s2),
+         s3 AS (SELECT list_transform(v, x -> round(x, 6)) AS c
+                FROM d3 ORDER BY mx, vec_id LIMIT 1),
+         d4 AS (SELECT d3.vec_id, d3.v,
+                       greatest(d3.mx,
+                         round(list_cosine_similarity(d3.v, s3.c), 6) + 0.0) AS mx
+                FROM d3, s3),
+         s4 AS (SELECT list_transform(v, x -> round(x, 6)) AS c
+                FROM d4 ORDER BY mx, vec_id LIMIT 1),
+         cent0 AS (SELECT CAST(0 AS BIGINT) AS cluster, c FROM s1
+                   UNION ALL SELECT 1, c FROM s2
+                   UNION ALL SELECT 2, c FROM s3
+                   UNION ALL SELECT 3, c FROM s4),
+         a1 AS (SELECT vec_id, cluster FROM (
+                  SELECT e.vec_id, c0.cluster,
+                         ROW_NUMBER() OVER (PARTITION BY e.vec_id
+                           ORDER BY round(list_cosine_similarity(e.v, c0.c), 6) + 0.0
+                                      DESC,
+                                    c0.cluster) AS rn
+                  FROM e, cent0 c0)
+                WHERE rn = 1),
+         m1 AS (SELECT cluster, list(cx ORDER BY j) AS c FROM (
+                  SELECT a1.cluster, j,
+                         round(avg(e.v[CAST(j AS INT)]), 6) AS cx
+                  FROM a1 JOIN e USING (vec_id),
+                       (SELECT unnest(range(1, 65)) AS j)
+                  GROUP BY a1.cluster, j)
+                GROUP BY cluster),
+         cent1 AS (SELECT c0.cluster, coalesce(m1.c, c0.c) AS c
+                   FROM cent0 c0 LEFT JOIN m1 ON c0.cluster = m1.cluster)"""
+
+  /** [[graft.operators.Projection.rpProject]] replayed sign for sign:
+    * the md5 'rp:m:j' Rademacher matrix `rp` and every vector's
+    * 16-component sketch `p(vec_id, pv)` (q172, q174). */
+  private val rpSketchCtes: String =
+    """e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         rp AS (SELECT m, j,
+                       CASE WHEN substr(md5('rp:' || CAST(m AS VARCHAR) || ':'
+                                            || CAST(j AS VARCHAR)), 1, 1)
+                            IN ('0','2','4','6','8','a','c','e')
+                            THEN 1.0 ELSE -1.0 END AS c
+                FROM (SELECT unnest(range(0, 16)) AS m),
+                     (SELECT unnest(range(1, 65)) AS j)),
+         p AS (SELECT vec_id, list(pm ORDER BY m) AS pv FROM (
+                 SELECT vec_id, m,
+                        round(sum(c * v[CAST(j AS INT)]) / 4.0, 6) AS pm
+                 FROM e, rp GROUP BY vec_id, m)
+               GROUP BY vec_id)"""
+
+  /** Sketch-space neighbours of each `qp(q_id, qpv)` query, ranked by
+    * cosine (ties to the smaller id) as `rank` (q172, q174). */
+  private val rpNeighbourRanks: String =
+    """SELECT qp.q_id, p.vec_id,
+                         ROW_NUMBER() OVER (PARTITION BY qp.q_id
+                           ORDER BY round(list_cosine_similarity(qp.qpv, p.pv), 6)
+                                      DESC,
+                                    p.vec_id) AS rank
+                  FROM qp, p)"""
+
+  /** Exact full-space top-10 `b(q_id, vec_id)` of the query vectors
+    * id < 20, the denominator of the recall audits (q172, q173). */
+  private val exactTop10Ctes: String =
+    """qf AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 20),
+         b AS (SELECT q_id, vec_id FROM (
+                 SELECT qf.q_id, e.vec_id,
+                        ROW_NUMBER() OVER (PARTITION BY qf.q_id
+                          ORDER BY round(list_cosine_similarity(qf.qv, e.v), 6) DESC,
+                                   e.vec_id) AS rank
+                 FROM qf, e)
+               WHERE rank <= 10)"""
+
+  /** [[graft.operators.Projection]]'s PQ encoding replayed over the
+    * unit vectors `u(vec_id, vn)`: 4 subspaces x 4 md5 sign planes `hp`,
+    * per-vector `codes`, 6-dp codebook means `cb`, and the query
+    * subvectors `qsub` of ids < 20 (q173, q185). */
+  private val pqCodebookCtes: String =
+    """hp AS (SELECT sub, h, j,
+                       CASE WHEN substr(md5('pq:' || CAST(sub AS VARCHAR) || ':'
+                                             || CAST(h AS VARCHAR) || ':'
+                                             || CAST(j AS VARCHAR)), 1, 1)
+                            IN ('0','2','4','6','8','a','c','e')
+                            THEN 1.0 ELSE -1.0 END AS c
+                FROM (SELECT unnest(range(0, 4)) AS sub),
+                     (SELECT unnest(range(0, 4)) AS h),
+                     (SELECT unnest(range(1, 17)) AS j)),
+         bits AS (SELECT vec_id, sub, h,
+                         CASE WHEN round(sum(c * vn[CAST(sub * 16 + j AS INT)]), 6) > 0
+                              THEN 1 ELSE 0 END AS bit
+                  FROM u, hp GROUP BY vec_id, sub, h),
+         codes AS (SELECT vec_id, sub,
+                          CAST(sum(bit * (CAST(1 AS BIGINT) << CAST(h AS INT)))
+                               AS BIGINT) AS code
+                   FROM bits GROUP BY vec_id, sub),
+         cb AS (SELECT sub, code, list(cx ORDER BY j2) AS cbv FROM (
+                  SELECT codes.sub, codes.code, j2,
+                         round(avg(u.vn[CAST(codes.sub * 16 + j2 AS INT)]), 6) AS cx
+                  FROM codes JOIN u USING (vec_id),
+                       (SELECT unnest(range(1, 17)) AS j2)
+                  GROUP BY codes.sub, codes.code, j2)
+                GROUP BY sub, code),
+         qsub AS (SELECT vec_id AS q_id, sub,
+                         list_slice(vn, sub * 16 + 1, sub * 16 + 16) AS qv
+                  FROM u, (SELECT unnest(range(0, 4)) AS sub)
+                  WHERE vec_id < 20)"""
+
+  /** q50's BM25 (k1 = 1.2, b = 0.75) over `toks(doc_id, term)` for the
+    * terms spark, merge and window: the top-20 `bm(doc_id, score)`
+    * ([[bm25RankCtes]], [[bruteHybridTop10Ctes]]). */
+  private val bm25TopCtes: String =
+    """dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl
+        |        FROM documents),
+        | stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
+        | tf AS (SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS tf
+        |        FROM toks WHERE term IN ('spark', 'merge', 'window')
+        |        GROUP BY doc_id, term),
+        | dft AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY term),
+        | scored AS (
+        |   SELECT tf.doc_id,
+        |          round(ln(1 + (n_docs - df + 0.5) / (df + 0.5))
+        |                * tf * 2.2
+        |                / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl)), 6) AS term_score
+        |   FROM tf JOIN dft USING (term) JOIN dl USING (doc_id), stats),
+        | bm AS (SELECT doc_id, round(sum(term_score), 4) AS score
+        |        FROM scored GROUP BY doc_id
+        |        ORDER BY score DESC, doc_id LIMIT 20)""".stripMargin
+
+  /** q200's BM25 leg: [[bm25TopCtes]] over the tokens `toks`, ranked
+    * as `br(doc_id, bm25_rank)` (q200, q203, [[hybridRecallOracle]]). */
+  private val bm25RankCtes: String =
+    s"""toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
+        |              FROM documents),
+        | $bm25TopCtes,
+        | br AS (SELECT doc_id,
+        |          CAST(ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS BIGINT)
+        |            AS bm25_rank
+        |        FROM bm)""".stripMargin
+
+  /** Reciprocal-rank fusion 1/(60 + rank) of `br` and `cr`, top 10
+    * (q200, q203). */
+  private val rrfTop10Select: String =
+    """SELECT coalesce(br.doc_id, cr.doc_id) AS doc_id, bm25_rank, cos_rank,
+        |       round(coalesce(1.0 / (60 + bm25_rank), 0)
+        |           + coalesce(1.0 / (60 + cos_rank), 0), 6) AS rrf
+        |FROM br FULL OUTER JOIN cr ON br.doc_id = cr.doc_id
+        |ORDER BY rrf DESC, doc_id LIMIT 10""".stripMargin
+
+  /** [[centroidCte]] in the stripMargin layout of the hybrid oracles
+    * (q203, [[hybridRecallOracle]]). */
+  private val hybridCentroidCte: String =
+    """cent AS (
+        |   SELECT label, list(cx ORDER BY j) AS centroid
+        |   FROM (SELECT label, j, avg(v[CAST(j AS INT)]) AS cx
+        |         FROM e, (SELECT unnest(range(1, 65)) AS j)
+        |         GROUP BY label, j)
+        |   GROUP BY label)""".stripMargin
+
+  /** q30's probe routing in the hybrid layout: the query `q(q_id, qv)`
+    * keeps its `nprobe` nearest clusters of `cent` (q203,
+    * [[hybridRecallOracle]]). */
+  private def hybridProbesCte(nprobe: Int): String =
+    s"""probes AS (
+        |   SELECT q_id, qv, label AS probe_label FROM (
+        |     SELECT q.q_id, q.qv, c.label,
+        |            ROW_NUMBER() OVER (PARTITION BY q.q_id
+        |              ORDER BY round(list_cosine_similarity(q.qv, c.centroid), 6) DESC,
+        |                       c.label) AS prn
+        |     FROM q, cent c)
+        |   WHERE prn <= $nprobe)""".stripMargin
+
+  /** The sqrt(N)-k-means IVF index replayed: modular seeds `cent0`, one
+    * Lloyd round (`a1`, `m1`, `cent1`), the final assignment `asg`,
+    * cluster sizes `csize`, cluster count `kc` and query vector 0 as
+    * `q` (q216, q217). */
+  private val sqrtKmeansIvfCtes: String =
+    """e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        | st AS (SELECT CAST(count(*) AS BIGINT) AS n,
+        |               CAST(ceil(sqrt(count(*))) AS BIGINT) AS step FROM e),
+        | cent0 AS (SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cluster,
+        |                  list_transform(v, x -> round(x, 6)) AS c
+        |           FROM e, st WHERE vec_id % st.step = 0),
+        | a1 AS (SELECT vec_id, cluster FROM (
+        |          SELECT e.vec_id, c0.cluster,
+        |                 ROW_NUMBER() OVER (PARTITION BY e.vec_id
+        |                   ORDER BY round(list_cosine_similarity(e.v, c0.c), 6) + 0.0 DESC,
+        |                            c0.cluster) AS rn
+        |          FROM e, cent0 c0)
+        |        WHERE rn = 1),
+        | m1 AS (SELECT cluster, list(cx ORDER BY j) AS c FROM (
+        |          SELECT a1.cluster, j, round(avg(e.v[CAST(j AS INT)]), 6) AS cx
+        |          FROM a1 JOIN e USING (vec_id), (SELECT unnest(range(1, 65)) AS j)
+        |          GROUP BY a1.cluster, j)
+        |        GROUP BY cluster),
+        | cent1 AS (SELECT c0.cluster, coalesce(m1.c, c0.c) AS c
+        |           FROM cent0 c0 LEFT JOIN m1 ON c0.cluster = m1.cluster),
+        | asg AS (SELECT vec_id, cluster FROM (
+        |          SELECT e.vec_id, c1.cluster,
+        |                 ROW_NUMBER() OVER (PARTITION BY e.vec_id
+        |                   ORDER BY round(list_cosine_similarity(e.v, c1.c), 6) + 0.0 DESC,
+        |                            c1.cluster) AS rn
+        |          FROM e, cent1 c1)
+        |        WHERE rn = 1),
+        | csize AS (SELECT cluster, CAST(count(*) AS BIGINT) AS sz FROM asg GROUP BY cluster),
+        | kc AS (SELECT CAST(count(*) AS BIGINT) AS k FROM cent1),
+        | q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id = 0)""".stripMargin
+
+  /** The brute-leg hybrid the IVF audits score against: BM25 rank `br`,
+    * brute cosine rank `crb` for `q`, and their RRF top-10
+    * `fbx(doc_id)` (q216, q217). */
+  private val bruteHybridTop10Ctes: String =
+    s"""toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
+        |          FROM documents),
+        | $bm25TopCtes,
+        | br AS (SELECT doc_id,
+        |          CAST(ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS bm25_rank
+        |        FROM bm),
+        | sb AS (SELECT e.vec_id, round(list_cosine_similarity(q.qv, e.v), 6) AS sim
+        |        FROM e, q),
+        | crb AS (SELECT vec_id AS doc_id, CAST(rn AS BIGINT) AS cos_rank FROM (
+        |           SELECT vec_id, ROW_NUMBER() OVER (ORDER BY sim DESC, vec_id) AS rn
+        |           FROM sb)
+        |         WHERE rn <= 20),
+        | fbx AS (SELECT coalesce(br.doc_id, crb.doc_id) AS doc_id
+        |        FROM br FULL OUTER JOIN crb ON br.doc_id = crb.doc_id
+        |        ORDER BY round(coalesce(1.0 / (60 + bm25_rank), 0)
+        |                     + coalesce(1.0 / (60 + cos_rank), 0), 6) DESC,
+        |                 coalesce(br.doc_id, crb.doc_id) LIMIT 10)""".stripMargin
+
+  /** [[graft.operators.TextOps.langId]]'s stopword-lexicon decision:
+    * zh on any non-ASCII char, unknown on no hits, else the language
+    * with the most hits, ties in en, de, es, fr order (q22, q125). */
+  private val langIdCase: String =
+    """CASE WHEN length(regexp_replace(text, '[ -~]', '', 'g')) > 0 THEN 'zh'
+                     WHEN len(regexp_extract_all(text, '\b(the|a|of|and|is)\b')) = 0
+                          AND len(regexp_extract_all(text, '\b(der|die|das|und|ist)\b')) = 0
+                          AND len(regexp_extract_all(text, '\b(el|los|una|y|es)\b')) = 0
+                          AND len(regexp_extract_all(text, '\b(le|la|et|les|des)\b')) = 0 THEN 'unknown'
+                     WHEN len(regexp_extract_all(text, '\b(the|a|of|and|is)\b')) >= len(regexp_extract_all(text, '\b(der|die|das|und|ist)\b'))
+                          AND len(regexp_extract_all(text, '\b(the|a|of|and|is)\b')) >= len(regexp_extract_all(text, '\b(el|los|una|y|es)\b'))
+                          AND len(regexp_extract_all(text, '\b(the|a|of|and|is)\b')) >= len(regexp_extract_all(text, '\b(le|la|et|les|des)\b')) THEN 'en'
+                     WHEN len(regexp_extract_all(text, '\b(der|die|das|und|ist)\b')) >= len(regexp_extract_all(text, '\b(el|los|una|y|es)\b'))
+                          AND len(regexp_extract_all(text, '\b(der|die|das|und|ist)\b')) >= len(regexp_extract_all(text, '\b(le|la|et|les|des)\b')) THEN 'de'
+                     WHEN len(regexp_extract_all(text, '\b(el|los|una|y|es)\b')) >= len(regexp_extract_all(text, '\b(le|la|et|les|des)\b')) THEN 'es'
+                     ELSE 'fr' END AS pred_lang"""
+
+  /** q21's composite quality score in basis points: length, stopword
+    * density and punctuation terms weighted 0.5 / 0.3 / 0.2 (q42, q76,
+    * q135, q162, q163). */
+  private val qualityScoreBp: String =
+    """CAST(floor((least(CAST(len(string_split(text, ' ')) AS DOUBLE) / 100, 1.0) * 0.5
+                        + least(CAST(len(regexp_extract_all(text, '\b(the|a|of|and|is|to|in)\b')) AS DOUBLE)
+                                / len(string_split(text, ' ')) * 10, 1.0) * 0.3
+                        + (1.0 - least(CAST(len(regexp_extract_all(text, '([.,!?;:''"()\[\]{}-])', 1)) AS DOUBLE)
+                                       / length(text) * 20, 1.0)) * 0.2) * 10000) AS BIGINT)"""
+
+  /** Word-6-gram shingles `sh(doc_id, sh)` (q85, q123). */
+  private val word6ShingleCte: String =
+    """sh AS (
+           SELECT doc_id,
+                  unnest(list_transform(range(1, len(s) - 4),
+                         i -> s[i] || ' ' || s[i+1] || ' ' || s[i+2] || ' ' || s[i+3]
+                           || ' ' || s[i+4] || ' ' || s[i+5])) AS sh
+           FROM (SELECT doc_id, string_split(text, ' ') AS s FROM documents))"""
+
+  /** Each document's distinct word-8-grams `g(doc_id, gram)` (q52,
+    * q154). */
+  private val word8GramCte: String =
+    """g AS (
+           SELECT doc_id,
+                  unnest(list_distinct(list_transform(range(1, len(s) - 6),
+                         i -> s[i] || ' ' || s[i+1] || ' ' || s[i+2] || ' ' || s[i+3]
+                              || ' ' || s[i+4] || ' ' || s[i+5] || ' ' || s[i+6]
+                              || ' ' || s[i+7]))) AS gram
+           FROM (SELECT doc_id, string_split(text, ' ') AS s FROM documents))"""
+
+  /** Distinct char-4-grams `g` blocked by (lang, source), their counts
+    * `sz` and the shared-gram count `inter(doc_a, doc_b, i)` per pair
+    * (q34, q69). */
+  private val char4GramOverlapCtes: String =
+    """g AS (
+           SELECT DISTINCT doc_id, lang, source,
+                  unnest(list_transform(range(1, length(text) - 2),
+                         i -> substr(text, i, 4))) AS gram
+           FROM documents),
+         sz AS (SELECT doc_id, count(*) AS n FROM g GROUP BY doc_id),
+         inter AS (
+           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
+           FROM g a JOIN g b
+             ON a.lang = b.lang AND a.source = b.source
+            AND a.gram = b.gram AND a.doc_id < b.doc_id
+           GROUP BY 1, 2)"""
+
+  /** [[graft.operators.TextOps.gopherRules]]' inputs: word count, mean
+    * word length and distinct stopword forms `base`, and the top word
+    * frequency `wf` (q51, q122). */
+  private val gopherBaseCtes: String =
+    """base AS (
+           SELECT doc_id,
+                  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
+                  CAST(floor(CAST(length(text) - (len(string_split(text, ' ')) - 1) AS DOUBLE)
+                        / len(string_split(text, ' ')) * 10000) AS BIGINT) AS avg_word_len_bp,
+                  CAST(len(list_distinct(regexp_extract_all(text, '\b(the|a|of|and|is|to|in)\b'))) AS BIGINT) AS n_stop_forms
+           FROM documents),
+         wf AS (SELECT doc_id, max(c) AS max_tf
+                FROM (SELECT doc_id, w, count(*) AS c
+                      FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w
+                            FROM documents)
+                      GROUP BY doc_id, w)
+                GROUP BY doc_id)"""
+
+  /** Per-source available tokens `av`, the source weight
+    * `w` = (digits of source) % 4 + 1, and the token total `tot`
+    * (q221, q222). */
+  private val mixtureSourceCtes: String =
+    """av AS (SELECT source,
+        |              CAST(sum(len(regexp_extract_all(text,
+        |                '([A-Za-z]+|[0-9]+|[^A-Za-z0-9 ])', 1))) AS BIGINT)
+        |                AS n_tokens_avail
+        |            FROM documents GROUP BY 1),
+        | w AS (SELECT source,
+        |              CAST(regexp_extract(source, '([0-9]+)', 1) AS BIGINT) % 4 + 1
+        |                AS weight
+        |       FROM (SELECT DISTINCT source FROM documents)),
+        | tot AS (SELECT CAST(sum(n_tokens_avail) AS BIGINT) AS t FROM av)""".stripMargin
+
+  /** The embedding near-dup graph: labelled embeddings `e` and their
+    * same-label pairs at cosine >= 0.25 as edges `ed(a, b)`, a < b
+    * (q155, q156, q157, q159). */
+  private val nearDupEdgeCtes: String =
+    """e AS (SELECT label, vec_id, CAST(embedding AS DOUBLE[]) AS v
+                    FROM embeddings),
+         ed AS (SELECT a.vec_id AS a, b.vec_id AS b
+                FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
+                WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.25)"""
+
+  /** The lineitem part-supplier graph: distinct part-supplier `pairs`
+    * and both directions as `edges(src, dst)` (q87, q97, q102). */
+  private val bipartiteEdgeCtes: String =
+    """pairs AS (
+           SELECT DISTINCT 'p' || CAST(l_partkey AS VARCHAR) AS a,
+                           's' || CAST(l_suppkey AS VARCHAR) AS b
+           FROM lineitem),
+         edges AS (SELECT a AS src, b AS dst FROM pairs
+                   UNION ALL SELECT b, a FROM pairs)"""
+
+  /** The lineitem graph directed part -> supplier: `edges`, every
+    * endpoint as `nodes` and their count `nn` (q152, q158). */
+  private val partSupplierNodeCtes: String =
+    """edges AS (
+           SELECT DISTINCT 'p' || CAST(l_partkey AS VARCHAR) AS src,
+                           's' || CAST(l_suppkey AS VARCHAR) AS dst
+           FROM lineitem),
+         nodes AS (SELECT DISTINCT node FROM
+                   (SELECT src AS node FROM edges
+                    UNION ALL SELECT dst FROM edges)),
+         nn AS (SELECT count(*) AS n FROM nodes)"""
+
+  /** The SQL side of [[recallAt10]]: per query, the exact top-10 `b`
+    * left-joined with the approximate top-10 CTE named `hits`, recall
+    * in basis points (q153, q172, q173, q185). */
+  private def recallSelect(hits: String): String =
+    s"""SELECT b.q_id, CAST(count(*) AS BIGINT) AS n_brute,
+                CAST(sum(CASE WHEN $hits.vec_id IS NULL THEN 0 ELSE 1 END)
+                     AS BIGINT) AS n_hits,
+                CAST((CAST(sum(CASE WHEN $hits.vec_id IS NULL THEN 0 ELSE 1 END)
+                           AS BIGINT) * 10000) // count(*) AS BIGINT)
+                  AS recall_bp
+         FROM b LEFT JOIN $hits ON $hits.q_id = b.q_id AND $hits.vec_id = b.vec_id
+         GROUP BY b.q_id"""
+
+  /** Recall@10 of an approximate top-10 per query vector id < 20, in
+    * basis points: the exact top-10 (the denominator) left-joined with
+    * `approx(queries, embeddings)` (q153, q172, q173, q185). */
+  private def recallAt10(s: SparkSession, dir: String)(
+      approx: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val e = t(s, dir, "embeddings")
+    val q = e.filter(col("vec_id") < 20)
+    val brute = Similarity.bruteForceTopK(q, e, k = 10)
+      .select(col("q_id"), col("vec_id"))
+    val hits = approx(q, e)
+      .select(col("q_id"), col("vec_id"), lit(1L).as("hit"))
+    brute.join(hits, Seq("q_id", "vec_id"), "left")
+      .groupBy(col("q_id"))
+      .agg(count(lit(1)).as("n_brute"),
+        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
+      .select(col("q_id"), col("n_brute"), col("n_hits"),
+        expr("(n_hits * 10000) div n_brute").as("recall_bp"))
   }
 
   // Builds that other queries reuse; `all` lists each under its name.
@@ -246,24 +804,13 @@ object ExtensionQueries {
 
     /** Language-ID heuristic over stopword lexicons. */
     QueryDef("q22_langid", (s, dir) => TextOps.langId(t(s, dir, "documents")),
-      """SELECT doc_id, lang,
+      raw"""SELECT doc_id, lang,
                 CAST(len(regexp_extract_all(text, '\b(the|a|of|and|is)\b')) AS BIGINT) AS en_hits,
                 CAST(len(regexp_extract_all(text, '\b(der|die|das|und|ist)\b')) AS BIGINT) AS de_hits,
                 CAST(len(regexp_extract_all(text, '\b(el|los|una|y|es)\b')) AS BIGINT) AS es_hits,
                 CAST(len(regexp_extract_all(text, '\b(le|la|et|les|des)\b')) AS BIGINT) AS fr_hits,
                 CAST(length(regexp_replace(text, '[ -~]', '', 'g')) AS BIGINT) AS n_nonascii,
-                CASE WHEN length(regexp_replace(text, '[ -~]', '', 'g')) > 0 THEN 'zh'
-                     WHEN len(regexp_extract_all(text, '\b(the|a|of|and|is)\b')) = 0
-                          AND len(regexp_extract_all(text, '\b(der|die|das|und|ist)\b')) = 0
-                          AND len(regexp_extract_all(text, '\b(el|los|una|y|es)\b')) = 0
-                          AND len(regexp_extract_all(text, '\b(le|la|et|les|des)\b')) = 0 THEN 'unknown'
-                     WHEN len(regexp_extract_all(text, '\b(the|a|of|and|is)\b')) >= len(regexp_extract_all(text, '\b(der|die|das|und|ist)\b'))
-                          AND len(regexp_extract_all(text, '\b(the|a|of|and|is)\b')) >= len(regexp_extract_all(text, '\b(el|los|una|y|es)\b'))
-                          AND len(regexp_extract_all(text, '\b(the|a|of|and|is)\b')) >= len(regexp_extract_all(text, '\b(le|la|et|les|des)\b')) THEN 'en'
-                     WHEN len(regexp_extract_all(text, '\b(der|die|das|und|ist)\b')) >= len(regexp_extract_all(text, '\b(el|los|una|y|es)\b'))
-                          AND len(regexp_extract_all(text, '\b(der|die|das|und|ist)\b')) >= len(regexp_extract_all(text, '\b(le|la|et|les|des)\b')) THEN 'de'
-                     WHEN len(regexp_extract_all(text, '\b(el|los|una|y|es)\b')) >= len(regexp_extract_all(text, '\b(le|la|et|les|des)\b')) THEN 'es'
-                     ELSE 'fr' END AS pred_lang
+                $langIdCase
          FROM documents"""),
 
     /** Canonical fingerprint + blocking prefix. */
@@ -298,31 +845,7 @@ object ExtensionQueries {
     /** Full near-dup pipeline: LSH candidates + exact Jaccard ≥ 0.2. */
     QueryDef("q26_lsh_neardup", (s, dir) =>
       MinHashLsh.nearDuplicates(t(s, dir, "documents"), threshold = 0.2),
-      """WITH sh AS (
-           SELECT doc_id,
-                  unnest(list_transform(range(1, len(s) - 1),
-                         i -> s[i] || ' ' || s[i+1] || ' ' || s[i+2])) AS sh
-           FROM (SELECT doc_id, string_split(text, ' ') AS s FROM documents)),
-         sig AS (
-           SELECT doc_id, j, min(md5(CAST(j AS VARCHAR) || ':' || sh)) AS mh
-           FROM sh, (SELECT unnest(range(0, 8)) AS j) GROUP BY doc_id, j),
-         band AS (
-           SELECT doc_id, j // 2 AS band,
-                  md5(string_agg(mh, '|' ORDER BY j)) AS bucket
-           FROM sig GROUP BY doc_id, j // 2
-           QUALIFY count(*) OVER (PARTITION BY j // 2, md5(string_agg(mh, '|' ORDER BY j))) <= 1000),
-         cand AS (
-           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           FROM band a JOIN band b
-             ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id),
-         shd AS (SELECT DISTINCT doc_id, sh FROM sh),
-         inter AS (
-           SELECT c.doc_a, c.doc_b, count(*) AS i
-           FROM cand c
-           JOIN shd x ON x.doc_id = c.doc_a
-           JOIN shd y ON y.doc_id = c.doc_b AND x.sh = y.sh
-           GROUP BY c.doc_a, c.doc_b),
-         sz AS (SELECT doc_id, count(*) AS n FROM shd GROUP BY doc_id)
+      s"""WITH $minhashPairCtes
          SELECT doc_a, doc_b,
                 round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 4) AS jaccard
          FROM inter
@@ -375,30 +898,7 @@ object ExtensionQueries {
       Similarity.ivfTopK(e.filter(col("vec_id") < 5), e,
         Similarity.centroids(e), k = 10, nprobe = 1)
     },
-      """WITH e AS (SELECT label, vec_id, CAST(embedding AS DOUBLE[]) AS v
-                    FROM embeddings),
-         cent AS (
-           SELECT label, list(cx ORDER BY j) AS centroid
-           FROM (SELECT label, j, avg(v[CAST(j AS INT)]) AS cx
-                 FROM e, (SELECT unnest(range(1, 65)) AS j)
-                 GROUP BY label, j)
-           GROUP BY label),
-         q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 5),
-         probes AS (
-           SELECT q_id, qv, label AS probe_label FROM (
-             SELECT q.q_id, q.qv, c.label,
-                    ROW_NUMBER() OVER (PARTITION BY q.q_id
-                      ORDER BY round(list_cosine_similarity(q.qv, c.centroid), 6) DESC,
-                               c.label) AS prn
-             FROM q, cent c)
-           WHERE prn = 1),
-         s AS (SELECT p.q_id, p.probe_label, e.vec_id,
-                      round(list_cosine_similarity(p.qv, e.v), 6) AS sim
-               FROM probes p JOIN e ON e.label = p.probe_label)
-         SELECT q_id, probe_label, vec_id, sim, rank FROM (
-           SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                     ORDER BY sim DESC, vec_id) AS rank FROM s)
-         WHERE rank <= 10"""),
+      ivfTop10Oracle("= 1")),
 
     /** IVF with nprobe=2: the recall knob — search the two nearest
       * clusters per query instead of one. */
@@ -407,30 +907,7 @@ object ExtensionQueries {
       Similarity.ivfTopK(e.filter(col("vec_id") < 5), e,
         Similarity.centroids(e), k = 10, nprobe = 2)
     },
-      """WITH e AS (SELECT label, vec_id, CAST(embedding AS DOUBLE[]) AS v
-                    FROM embeddings),
-         cent AS (
-           SELECT label, list(cx ORDER BY j) AS centroid
-           FROM (SELECT label, j, avg(v[CAST(j AS INT)]) AS cx
-                 FROM e, (SELECT unnest(range(1, 65)) AS j)
-                 GROUP BY label, j)
-           GROUP BY label),
-         q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 5),
-         probes AS (
-           SELECT q_id, qv, label AS probe_label FROM (
-             SELECT q.q_id, q.qv, c.label,
-                    ROW_NUMBER() OVER (PARTITION BY q.q_id
-                      ORDER BY round(list_cosine_similarity(q.qv, c.centroid), 6) DESC,
-                               c.label) AS prn
-             FROM q, cent c)
-           WHERE prn <= 2),
-         s AS (SELECT p.q_id, p.probe_label, e.vec_id,
-                      round(list_cosine_similarity(p.qv, e.v), 6) AS sim
-               FROM probes p JOIN e ON e.label = p.probe_label)
-         SELECT q_id, probe_label, vec_id, sim, rank FROM (
-           SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                     ORDER BY sim DESC, vec_id) AS rank FROM s)
-         WHERE rank <= 10"""),
+      ivfTop10Oracle("<= 2")),
 
     /** Multimodal media wrap: binary payload + typed metadata. The
       * payload is hex-encoded for the driver compare (binary cells hash
@@ -492,18 +969,7 @@ object ExtensionQueries {
     QueryDef("q34_ngram_jaccard", (s, dir) =>
       NgramJaccard.nearDupPairsHashed(t(s, dir, "documents"),
         blockCols = Seq("lang", "source"), n = 4, threshold = 0.5),
-      """WITH g AS (
-           SELECT DISTINCT doc_id, lang, source,
-                  unnest(list_transform(range(1, length(text) - 2),
-                         i -> substr(text, i, 4))) AS gram
-           FROM documents),
-         sz AS (SELECT doc_id, count(*) AS n FROM g GROUP BY doc_id),
-         inter AS (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-           FROM g a JOIN g b
-             ON a.lang = b.lang AND a.source = b.source
-            AND a.gram = b.gram AND a.doc_id < b.doc_id
-           GROUP BY 1, 2)
+      s"""WITH $char4GramOverlapCtes
          SELECT doc_a, doc_b,
                 round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 4) AS jaccard
          FROM inter
@@ -518,44 +984,7 @@ object ExtensionQueries {
       // q26's pair pipeline + a recursive transitive closure, min label
       // per component (DuckDB's UNION-recursion stops at the fixpoint the
       // same way the Spark loop's convergence check does)
-      """WITH RECURSIVE sh AS (
-           SELECT doc_id,
-                  unnest(list_transform(range(1, len(s) - 1),
-                         i -> s[i] || ' ' || s[i+1] || ' ' || s[i+2])) AS sh
-           FROM (SELECT doc_id, string_split(text, ' ') AS s FROM documents)),
-         sig AS (
-           SELECT doc_id, j, min(md5(CAST(j AS VARCHAR) || ':' || sh)) AS mh
-           FROM sh, (SELECT unnest(range(0, 8)) AS j) GROUP BY doc_id, j),
-         band AS (
-           SELECT doc_id, j // 2 AS band,
-                  md5(string_agg(mh, '|' ORDER BY j)) AS bucket
-           FROM sig GROUP BY doc_id, j // 2
-           QUALIFY count(*) OVER (PARTITION BY j // 2, md5(string_agg(mh, '|' ORDER BY j))) <= 1000),
-         cand AS (
-           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           FROM band a JOIN band b
-             ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id),
-         shd AS (SELECT DISTINCT doc_id, sh FROM sh),
-         inter AS (
-           SELECT c.doc_a, c.doc_b, count(*) AS i
-           FROM cand c
-           JOIN shd x ON x.doc_id = c.doc_a
-           JOIN shd y ON y.doc_id = c.doc_b AND x.sh = y.sh
-           GROUP BY c.doc_a, c.doc_b),
-         sz AS (SELECT doc_id, count(*) AS n FROM shd GROUP BY doc_id),
-         pairs AS (
-           SELECT doc_a, doc_b FROM inter
-           JOIN sz sa ON sa.doc_id = doc_a
-           JOIN sz sb ON sb.doc_id = doc_b
-           WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.2),
-         edges AS (
-           SELECT doc_a AS src, doc_b AS dst FROM pairs
-           UNION ALL
-           SELECT doc_b AS src, doc_a AS dst FROM pairs),
-         reach(doc_id, r) AS (
-           SELECT DISTINCT src, src FROM edges
-           UNION
-           SELECT e.src, reach.r FROM edges e JOIN reach ON reach.doc_id = e.dst)
+      s"""WITH RECURSIVE $minhashComponentCtes
          SELECT doc_id, min(r) AS group_id, (doc_id = min(r)) AS keep
          FROM reach GROUP BY doc_id"""),
 
@@ -746,44 +1175,7 @@ object ExtensionQueries {
       // end-to-end curation: assembled verbatim from the q22 (pred_lang),
       // q21 (quality), q24 (exact keeper), q35 (near-dup groups), and q36
       // (hash sample) oracle formulas
-      """WITH RECURSIVE sh AS (
-           SELECT doc_id,
-                  unnest(list_transform(range(1, len(s) - 1),
-                         i -> s[i] || ' ' || s[i+1] || ' ' || s[i+2])) AS sh
-           FROM (SELECT doc_id, string_split(text, ' ') AS s FROM documents)),
-         sig AS (
-           SELECT doc_id, j, min(md5(CAST(j AS VARCHAR) || ':' || sh)) AS mh
-           FROM sh, (SELECT unnest(range(0, 8)) AS j) GROUP BY doc_id, j),
-         band AS (
-           SELECT doc_id, j // 2 AS band,
-                  md5(string_agg(mh, '|' ORDER BY j)) AS bucket
-           FROM sig GROUP BY doc_id, j // 2
-           QUALIFY count(*) OVER (PARTITION BY j // 2, md5(string_agg(mh, '|' ORDER BY j))) <= 1000),
-         cand AS (
-           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           FROM band a JOIN band b
-             ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id),
-         shd AS (SELECT DISTINCT doc_id, sh FROM sh),
-         inter AS (
-           SELECT c.doc_a, c.doc_b, count(*) AS i
-           FROM cand c
-           JOIN shd x ON x.doc_id = c.doc_a
-           JOIN shd y ON y.doc_id = c.doc_b AND x.sh = y.sh
-           GROUP BY c.doc_a, c.doc_b),
-         sz AS (SELECT doc_id, count(*) AS n FROM shd GROUP BY doc_id),
-         pairs AS (
-           SELECT doc_a, doc_b FROM inter
-           JOIN sz sa ON sa.doc_id = doc_a
-           JOIN sz sb ON sb.doc_id = doc_b
-           WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.2),
-         edges AS (
-           SELECT doc_a AS src, doc_b AS dst FROM pairs
-           UNION ALL
-           SELECT doc_b AS src, doc_a AS dst FROM pairs),
-         reach(doc_id, r) AS (
-           SELECT DISTINCT src, src FROM edges
-           UNION
-           SELECT e.src, reach.r FROM edges e JOIN reach ON reach.doc_id = e.dst),
+      raw"""WITH RECURSIVE $minhashComponentCtes,
          grp AS (SELECT doc_id, min(r) AS group_id FROM reach GROUP BY doc_id),
          keepers AS (SELECT md5(text) AS h, min(doc_id) AS keeper
                      FROM documents GROUP BY 1),
@@ -802,11 +1194,7 @@ object ExtensionQueries {
                             AND len(regexp_extract_all(text, '\b(der|die|das|und|ist)\b')) >= len(regexp_extract_all(text, '\b(le|la|et|les|des)\b')) THEN 'de'
                        WHEN len(regexp_extract_all(text, '\b(el|los|una|y|es)\b')) >= len(regexp_extract_all(text, '\b(le|la|et|les|des)\b')) THEN 'es'
                        ELSE 'fr' END AS pred_lang,
-                  CAST(floor((least(CAST(len(string_split(text, ' ')) AS DOUBLE) / 100, 1.0) * 0.5
-                        + least(CAST(len(regexp_extract_all(text, '\b(the|a|of|and|is|to|in)\b')) AS DOUBLE)
-                                / len(string_split(text, ' ')) * 10, 1.0) * 0.3
-                        + (1.0 - least(CAST(len(regexp_extract_all(text, '([.,!?;:''"()\[\]{}-])', 1)) AS DOUBLE)
-                                       / length(text) * 20, 1.0)) * 0.2) * 10000) AS BIGINT) AS quality_score_bp
+                  $qualityScoreBp AS quality_score_bp
            FROM documents)
          SELECT f.doc_id, f.pred_lang, f.quality_score_bp, f.n_tok
          FROM feat f
@@ -864,18 +1252,7 @@ object ExtensionQueries {
       // q26's sketch pipeline, split new-vs-corpus: candidate pairs only
       // cross the split (bucket cap on the corpus side, like production
       // incremental dedup where corpus bands are the persisted index)
-      """WITH sh AS (
-           SELECT doc_id,
-                  unnest(list_transform(range(1, len(s) - 1),
-                         i -> s[i] || ' ' || s[i+1] || ' ' || s[i+2])) AS sh
-           FROM (SELECT doc_id, string_split(text, ' ') AS s FROM documents)),
-         sig AS (
-           SELECT doc_id, j, min(md5(CAST(j AS VARCHAR) || ':' || sh)) AS mh
-           FROM sh, (SELECT unnest(range(0, 8)) AS j) GROUP BY doc_id, j),
-         band AS (
-           SELECT doc_id, j // 2 AS band,
-                  md5(string_agg(mh, '|' ORDER BY j)) AS bucket
-           FROM sig GROUP BY doc_id, j // 2),
+      s"""WITH $minhashBands),
          nb AS (SELECT doc_id AS doc_new, band, bucket FROM band WHERE doc_id % 10 = 0),
          cb AS (SELECT doc_id AS doc_old, band, bucket FROM band WHERE doc_id % 10 <> 0
                 QUALIFY count(*) OVER (PARTITION BY band, bucket) <= 1000),
@@ -1029,19 +1406,7 @@ object ExtensionQueries {
 
     /** Gopher-style quality rule gates (independent booleans + pass). */
     QueryDef("q51_gopher_rules", (s, dir) => TextOps.gopherRules(t(s, dir, "documents")),
-      """WITH base AS (
-           SELECT doc_id,
-                  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
-                  CAST(floor(CAST(length(text) - (len(string_split(text, ' ')) - 1) AS DOUBLE)
-                        / len(string_split(text, ' ')) * 10000) AS BIGINT) AS avg_word_len_bp,
-                  CAST(len(list_distinct(regexp_extract_all(text, '\b(the|a|of|and|is|to|in)\b'))) AS BIGINT) AS n_stop_forms
-           FROM documents),
-         wf AS (SELECT doc_id, max(c) AS max_tf
-                FROM (SELECT doc_id, w, count(*) AS c
-                      FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w
-                            FROM documents)
-                      GROUP BY doc_id, w)
-                GROUP BY doc_id)
+      s"""WITH $gopherBaseCtes
          SELECT doc_id, n_words, avg_word_len_bp, n_stop_forms, max_tf,
                 CAST(floor(CAST(max_tf AS DOUBLE) / n_words * 10000) AS BIGINT) AS rep_ratio_bp,
                 n_words BETWEEN 50 AND 100000 AS r_len,
@@ -1057,13 +1422,7 @@ object ExtensionQueries {
     /** Cross-doc boilerplate word-8-grams: df ≥ 2, top 20. */
     QueryDef("q52_boilerplate_grams", (s, dir) =>
       TextOps.boilerplateGrams(t(s, dir, "documents"), n = 8, minDf = 2, topK = 20),
-      """WITH g AS (
-           SELECT doc_id,
-                  unnest(list_distinct(list_transform(range(1, len(s) - 6),
-                         i -> s[i] || ' ' || s[i+1] || ' ' || s[i+2] || ' ' || s[i+3]
-                              || ' ' || s[i+4] || ' ' || s[i+5] || ' ' || s[i+6]
-                              || ' ' || s[i+7]))) AS gram
-           FROM (SELECT doc_id, string_split(text, ' ') AS s FROM documents))
+      s"""WITH $word8GramCte
          SELECT gram, count(*) AS df
          FROM g GROUP BY gram HAVING count(*) >= 2
          ORDER BY df DESC, gram LIMIT 20"""),
@@ -1074,14 +1433,7 @@ object ExtensionQueries {
       val e = t(s, dir, "embeddings")
       Similarity.assignClusters(e, Similarity.centroids(e))
     },
-      """WITH e AS (SELECT label, vec_id, CAST(embedding AS DOUBLE[]) AS v
-                    FROM embeddings),
-         cent AS (
-           SELECT label, list(cx ORDER BY j) AS centroid
-           FROM (SELECT label, j, avg(v[CAST(j AS INT)]) AS cx
-                 FROM e, (SELECT unnest(range(1, 65)) AS j)
-                 GROUP BY label, j)
-           GROUP BY label),
+      s"""WITH $embeddingCentroidCtes,
          a AS (
            SELECT vec_id, cluster, csim FROM (
              SELECT e.vec_id, c.label AS cluster,
@@ -1400,18 +1752,7 @@ object ExtensionQueries {
         blockCols = Seq("lang", "source"), n = 4, threshold = 0.6),
       // brute-force on the actual 4-gram strings (the Spark side compares
       // xxhash64 arrays — same 2^-64 collision trade q34 documents)
-      """WITH g AS (
-           SELECT DISTINCT doc_id, lang, source,
-                  unnest(list_transform(range(1, length(text) - 2),
-                         i -> substr(text, i, 4))) AS gram
-           FROM documents),
-         sz AS (SELECT doc_id, count(*) AS n FROM g GROUP BY doc_id),
-         inter AS (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-           FROM g a JOIN g b
-             ON a.lang = b.lang AND a.source = b.source
-            AND a.gram = b.gram AND a.doc_id < b.doc_id
-           GROUP BY 1, 2)
+      s"""WITH $char4GramOverlapCtes
          SELECT doc_a, doc_b,
                 round(CAST(i AS DOUBLE) / least(sa.n, sb.n), 4) AS containment
          FROM inter
@@ -1595,52 +1936,11 @@ object ExtensionQueries {
     },
       // q35's full LSH + recursive-CC chain, with the keeper re-chosen by
       // q21's quality composite (argmax per group, ties min doc_id)
-      """WITH RECURSIVE sh AS (
-           SELECT doc_id,
-                  unnest(list_transform(range(1, len(s) - 1),
-                         i -> s[i] || ' ' || s[i+1] || ' ' || s[i+2])) AS sh
-           FROM (SELECT doc_id, string_split(text, ' ') AS s FROM documents)),
-         sig AS (
-           SELECT doc_id, j, min(md5(CAST(j AS VARCHAR) || ':' || sh)) AS mh
-           FROM sh, (SELECT unnest(range(0, 8)) AS j) GROUP BY doc_id, j),
-         band AS (
-           SELECT doc_id, j // 2 AS band,
-                  md5(string_agg(mh, '|' ORDER BY j)) AS bucket
-           FROM sig GROUP BY doc_id, j // 2
-           QUALIFY count(*) OVER (PARTITION BY j // 2, md5(string_agg(mh, '|' ORDER BY j))) <= 1000),
-         cand AS (
-           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           FROM band a JOIN band b
-             ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id),
-         shd AS (SELECT DISTINCT doc_id, sh FROM sh),
-         inter AS (
-           SELECT c.doc_a, c.doc_b, count(*) AS i
-           FROM cand c
-           JOIN shd x ON x.doc_id = c.doc_a
-           JOIN shd y ON y.doc_id = c.doc_b AND x.sh = y.sh
-           GROUP BY c.doc_a, c.doc_b),
-         sz AS (SELECT doc_id, count(*) AS n FROM shd GROUP BY doc_id),
-         pairs AS (
-           SELECT doc_a, doc_b FROM inter
-           JOIN sz sa ON sa.doc_id = doc_a
-           JOIN sz sb ON sb.doc_id = doc_b
-           WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.2),
-         edges AS (
-           SELECT doc_a AS src, doc_b AS dst FROM pairs
-           UNION ALL
-           SELECT doc_b AS src, doc_a AS dst FROM pairs),
-         reach(doc_id, r) AS (
-           SELECT DISTINCT src, src FROM edges
-           UNION
-           SELECT e.src, reach.r FROM edges e JOIN reach ON reach.doc_id = e.dst),
+      s"""WITH RECURSIVE $minhashComponentCtes,
          grp AS (SELECT doc_id, min(r) AS group_id FROM reach GROUP BY doc_id),
          qual AS (
            SELECT doc_id,
-                  CAST(floor((least(CAST(len(string_split(text, ' ')) AS DOUBLE) / 100, 1.0) * 0.5
-                        + least(CAST(len(regexp_extract_all(text, '\b(the|a|of|and|is|to|in)\b')) AS DOUBLE)
-                                / len(string_split(text, ' ')) * 10, 1.0) * 0.3
-                        + (1.0 - least(CAST(len(regexp_extract_all(text, '([.,!?;:''"()\[\]{}-])', 1)) AS DOUBLE)
-                                       / length(text) * 20, 1.0)) * 0.2) * 10000) AS BIGINT) AS score
+                  $qualityScoreBp AS score
            FROM documents)
          SELECT doc_id, group_id, score,
                 ROW_NUMBER() OVER (PARTITION BY group_id
@@ -1853,12 +2153,7 @@ object ExtensionQueries {
         docs.filter(col("doc_id") % 50 === 7), n = 6)
         .select(col("doc_id"), col("lang"), col("source"))
     },
-      """WITH sh AS (
-           SELECT doc_id,
-                  unnest(list_transform(range(1, len(s) - 4),
-                         i -> s[i] || ' ' || s[i+1] || ' ' || s[i+2] || ' ' || s[i+3]
-                           || ' ' || s[i+4] || ' ' || s[i+5])) AS sh
-           FROM (SELECT doc_id, string_split(text, ' ') AS s FROM documents)),
+      s"""WITH $word6ShingleCte,
          ev AS (SELECT DISTINCT sh FROM sh WHERE doc_id % 50 = 7),
          dirty AS (SELECT DISTINCT doc_id FROM sh JOIN ev USING (sh)
                    WHERE doc_id % 50 <> 7)
@@ -1913,12 +2208,7 @@ object ExtensionQueries {
         iterations = 3)
         .select(Graph.decodeBipartite(col("node"), "p", "s").as("node"),
           col("rank").as("pr")),
-      """WITH pairs AS (
-           SELECT DISTINCT 'p' || CAST(l_partkey AS VARCHAR) AS a,
-                           's' || CAST(l_suppkey AS VARCHAR) AS b
-           FROM lineitem),
-         edges AS (SELECT a AS src, b AS dst FROM pairs
-                   UNION ALL SELECT b, a FROM pairs),
+      s"""WITH $bipartiteEdgeCtes,
          deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
          r0 AS (SELECT src AS node, CAST(1000000 AS BIGINT) AS pr FROM deg),
          it1 AS (SELECT e.dst AS node,
@@ -2059,14 +2349,7 @@ object ExtensionQueries {
       val e = t(s, dir, "embeddings")
       Similarity.centroidOutliers(e, Similarity.centroids(e), frac = 0.1)
     },
-      """WITH e AS (SELECT label, vec_id, CAST(embedding AS DOUBLE[]) AS v
-                    FROM embeddings),
-         cent AS (
-           SELECT label, list(cx ORDER BY j) AS centroid
-           FROM (SELECT label, j, avg(v[CAST(j AS INT)]) AS cx
-                 FROM e, (SELECT unnest(range(1, 65)) AS j)
-                 GROUP BY label, j)
-           GROUP BY label),
+      s"""WITH $embeddingCentroidCtes,
          scored AS (
            SELECT e.vec_id, e.label,
                   round(list_cosine_similarity(e.v, c.centroid), 6) AS cos_c
@@ -2167,12 +2450,7 @@ object ExtensionQueries {
         .select(Graph.decodeBipartite(col("node"), "p", "s").as("node"),
           col("hop"))
     },
-      """WITH pairs AS (
-           SELECT DISTINCT 'p' || CAST(l_partkey AS VARCHAR) AS a,
-                           's' || CAST(l_suppkey AS VARCHAR) AS b
-           FROM lineitem),
-         edges AS (SELECT a AS src, b AS dst FROM pairs
-                   UNION ALL SELECT b, a FROM pairs),
+      s"""WITH $bipartiteEdgeCtes,
          h0 AS (SELECT DISTINCT 's' || CAST(l_suppkey AS VARCHAR) AS node,
                        CAST(0 AS BIGINT) AS hop
                 FROM lineitem WHERE l_suppkey < 5),
@@ -2346,12 +2624,7 @@ object ExtensionQueries {
         rounds = 2)
         .select(Graph.decodeOrderedBipartite(col("node"), "p", "s").as("node"),
           Graph.decodeOrderedBipartite(col("label"), "p", "s").as("label")),
-      """WITH pairs AS (
-           SELECT DISTINCT 'p' || CAST(l_partkey AS VARCHAR) AS a,
-                           's' || CAST(l_suppkey AS VARCHAR) AS b
-           FROM lineitem),
-         edges AS (SELECT a AS src, b AS dst FROM pairs
-                   UNION ALL SELECT b, a FROM pairs),
+      s"""WITH $bipartiteEdgeCtes,
          l0 AS (SELECT DISTINCT src AS node, src AS label FROM edges),
          l1 AS (SELECT node, label FROM (
                   SELECT e.src AS node, l.label, count(*) AS n,
@@ -2955,31 +3228,7 @@ object ExtensionQueries {
           sum(when((col("est") >= 0.2) =!= (col("jaccard") >= 0.2), 1L)
             .otherwise(0L)).as("n_flipped"))
     },
-      """WITH sh AS (
-           SELECT doc_id,
-                  unnest(list_transform(range(1, len(s) - 1),
-                         i -> s[i] || ' ' || s[i+1] || ' ' || s[i+2])) AS sh
-           FROM (SELECT doc_id, string_split(text, ' ') AS s FROM documents)),
-         sig AS (
-           SELECT doc_id, j, min(md5(CAST(j AS VARCHAR) || ':' || sh)) AS mh
-           FROM sh, (SELECT unnest(range(0, 8)) AS j) GROUP BY doc_id, j),
-         band AS (
-           SELECT doc_id, j // 2 AS band,
-                  md5(string_agg(mh, '|' ORDER BY j)) AS bucket
-           FROM sig GROUP BY doc_id, j // 2
-           QUALIFY count(*) OVER (PARTITION BY j // 2, md5(string_agg(mh, '|' ORDER BY j))) <= 1000),
-         cand AS (
-           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           FROM band a JOIN band b
-             ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id),
-         shd AS (SELECT DISTINCT doc_id, sh FROM sh),
-         inter AS (
-           SELECT c.doc_a, c.doc_b, count(*) AS i
-           FROM cand c
-           JOIN shd x ON x.doc_id = c.doc_a
-           JOIN shd y ON y.doc_id = c.doc_b AND x.sh = y.sh
-           GROUP BY c.doc_a, c.doc_b),
-         sz AS (SELECT doc_id, count(*) AS n FROM shd GROUP BY doc_id),
+      s"""WITH $minhashPairCtes,
          ver AS (
            SELECT doc_a, doc_b,
                   round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 4) AS jaccard
@@ -3099,19 +3348,7 @@ object ExtensionQueries {
         .groupBy(col("r_len"), col("r_wordlen"), col("r_stop"), col("r_rep"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_words")).as("n_words_total")),
-      """WITH base AS (
-           SELECT doc_id,
-                  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
-                  CAST(floor(CAST(length(text) - (len(string_split(text, ' ')) - 1) AS DOUBLE)
-                        / len(string_split(text, ' ')) * 10000) AS BIGINT) AS avg_word_len_bp,
-                  CAST(len(list_distinct(regexp_extract_all(text, '\b(the|a|of|and|is|to|in)\b'))) AS BIGINT) AS n_stop_forms
-           FROM documents),
-         wf AS (SELECT doc_id, max(c) AS max_tf
-                FROM (SELECT doc_id, w, count(*) AS c
-                      FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w
-                            FROM documents)
-                      GROUP BY doc_id, w)
-                GROUP BY doc_id),
+      s"""WITH $gopherBaseCtes,
          rules AS (
            SELECT n_words,
                   n_words BETWEEN 50 AND 100000 AS r_len,
@@ -3144,12 +3381,7 @@ object ExtensionQueries {
         .agg(countDistinct(col("corpus_id")).as("n_dirty_docs"),
           countDistinct(col("sh")).as("n_shared_grams"))
     },
-      """WITH sh AS (
-           SELECT doc_id,
-                  unnest(list_transform(range(1, len(s) - 4),
-                         i -> s[i] || ' ' || s[i+1] || ' ' || s[i+2] || ' ' || s[i+3]
-                           || ' ' || s[i+4] || ' ' || s[i+5])) AS sh
-           FROM (SELECT doc_id, string_split(text, ' ') AS s FROM documents)),
+      s"""WITH $word6ShingleCte,
          d AS (SELECT DISTINCT doc_id, sh FROM sh),
          ev AS (SELECT doc_id AS eval_id, sh FROM d WHERE doc_id % 50 = 7),
          co AS (SELECT doc_id AS corpus_id, sh FROM d WHERE doc_id % 50 <> 7)
@@ -3196,19 +3428,8 @@ object ExtensionQueries {
       TextOps.langId(t(s, dir, "documents"))
         .groupBy(col("lang"), col("pred_lang"))
         .agg(count(lit(1)).as("n")),
-      """SELECT lang,
-                CASE WHEN length(regexp_replace(text, '[ -~]', '', 'g')) > 0 THEN 'zh'
-                     WHEN len(regexp_extract_all(text, '\b(the|a|of|and|is)\b')) = 0
-                          AND len(regexp_extract_all(text, '\b(der|die|das|und|ist)\b')) = 0
-                          AND len(regexp_extract_all(text, '\b(el|los|una|y|es)\b')) = 0
-                          AND len(regexp_extract_all(text, '\b(le|la|et|les|des)\b')) = 0 THEN 'unknown'
-                     WHEN len(regexp_extract_all(text, '\b(the|a|of|and|is)\b')) >= len(regexp_extract_all(text, '\b(der|die|das|und|ist)\b'))
-                          AND len(regexp_extract_all(text, '\b(the|a|of|and|is)\b')) >= len(regexp_extract_all(text, '\b(el|los|una|y|es)\b'))
-                          AND len(regexp_extract_all(text, '\b(the|a|of|and|is)\b')) >= len(regexp_extract_all(text, '\b(le|la|et|les|des)\b')) THEN 'en'
-                     WHEN len(regexp_extract_all(text, '\b(der|die|das|und|ist)\b')) >= len(regexp_extract_all(text, '\b(el|los|una|y|es)\b'))
-                          AND len(regexp_extract_all(text, '\b(der|die|das|und|ist)\b')) >= len(regexp_extract_all(text, '\b(le|la|et|les|des)\b')) THEN 'de'
-                     WHEN len(regexp_extract_all(text, '\b(el|los|una|y|es)\b')) >= len(regexp_extract_all(text, '\b(le|la|et|les|des)\b')) THEN 'es'
-                     ELSE 'fr' END AS pred_lang,
+      s"""SELECT lang,
+                $langIdCase,
                 count(*) AS n
          FROM documents GROUP BY 1, 2"""),
 
@@ -3557,39 +3778,11 @@ object ExtensionQueries {
           floor(sum(when(col("is_dup"), 1L).otherwise(0L)) * lit(10000.0)
             / count(lit(1))).cast("bigint").as("dup_rate_bp"))
     },
-      """WITH q AS (
+      s"""WITH q AS (
            SELECT doc_id,
-                  CAST(floor((least(CAST(len(string_split(text, ' ')) AS DOUBLE) / 100, 1.0) * 0.5
-                        + least(CAST(len(regexp_extract_all(text, '\b(the|a|of|and|is|to|in)\b')) AS DOUBLE)
-                                / len(string_split(text, ' ')) * 10, 1.0) * 0.3
-                        + (1.0 - least(CAST(len(regexp_extract_all(text, '([.,!?;:''"()\[\]{}-])', 1)) AS DOUBLE)
-                                       / length(text) * 20, 1.0)) * 0.2) * 10000) AS BIGINT) AS quality_score_bp
+                  $qualityScoreBp AS quality_score_bp
            FROM documents),
-         sh AS (
-           SELECT doc_id,
-                  unnest(list_transform(range(1, len(s) - 1),
-                         i -> s[i] || ' ' || s[i+1] || ' ' || s[i+2])) AS sh
-           FROM (SELECT doc_id, string_split(text, ' ') AS s FROM documents)),
-         sig AS (
-           SELECT doc_id, j, min(md5(CAST(j AS VARCHAR) || ':' || sh)) AS mh
-           FROM sh, (SELECT unnest(range(0, 8)) AS j) GROUP BY doc_id, j),
-         band AS (
-           SELECT doc_id, j // 2 AS band,
-                  md5(string_agg(mh, '|' ORDER BY j)) AS bucket
-           FROM sig GROUP BY doc_id, j // 2
-           QUALIFY count(*) OVER (PARTITION BY j // 2, md5(string_agg(mh, '|' ORDER BY j))) <= 1000),
-         cand AS (
-           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           FROM band a JOIN band b
-             ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id),
-         shd AS (SELECT DISTINCT doc_id, sh FROM sh),
-         inter AS (
-           SELECT c.doc_a, c.doc_b, count(*) AS i
-           FROM cand c
-           JOIN shd x ON x.doc_id = c.doc_a
-           JOIN shd y ON y.doc_id = c.doc_b AND x.sh = y.sh
-           GROUP BY c.doc_a, c.doc_b),
-         sz AS (SELECT doc_id, count(*) AS n FROM shd GROUP BY doc_id),
+         $minhashPairCtes,
          ver AS (
            SELECT doc_a, doc_b FROM inter
            JOIN sz sa ON sa.doc_id = doc_a
@@ -3892,44 +4085,7 @@ object ExtensionQueries {
             (col("group_id").isNull || col("group_id") === col("doc_id")),
             col("nt")).otherwise(0L)).as("tokens_neardup_kept"))
     },
-      """WITH RECURSIVE sh AS (
-           SELECT doc_id,
-                  unnest(list_transform(range(1, len(s) - 1),
-                         i -> s[i] || ' ' || s[i+1] || ' ' || s[i+2])) AS sh
-           FROM (SELECT doc_id, string_split(text, ' ') AS s FROM documents)),
-         sig AS (
-           SELECT doc_id, j, min(md5(CAST(j AS VARCHAR) || ':' || sh)) AS mh
-           FROM sh, (SELECT unnest(range(0, 8)) AS j) GROUP BY doc_id, j),
-         band AS (
-           SELECT doc_id, j // 2 AS band,
-                  md5(string_agg(mh, '|' ORDER BY j)) AS bucket
-           FROM sig GROUP BY doc_id, j // 2
-           QUALIFY count(*) OVER (PARTITION BY j // 2, md5(string_agg(mh, '|' ORDER BY j))) <= 1000),
-         cand AS (
-           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-           FROM band a JOIN band b
-             ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id),
-         shd AS (SELECT DISTINCT doc_id, sh FROM sh),
-         inter AS (
-           SELECT c.doc_a, c.doc_b, count(*) AS i
-           FROM cand c
-           JOIN shd x ON x.doc_id = c.doc_a
-           JOIN shd y ON y.doc_id = c.doc_b AND x.sh = y.sh
-           GROUP BY c.doc_a, c.doc_b),
-         sz AS (SELECT doc_id, count(*) AS n FROM shd GROUP BY doc_id),
-         pairs AS (
-           SELECT doc_a, doc_b FROM inter
-           JOIN sz sa ON sa.doc_id = doc_a
-           JOIN sz sb ON sb.doc_id = doc_b
-           WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.2),
-         edges AS (
-           SELECT doc_a AS src, doc_b AS dst FROM pairs
-           UNION ALL
-           SELECT doc_b AS src, doc_a AS dst FROM pairs),
-         reach(doc_id, r) AS (
-           SELECT DISTINCT src, src FROM edges
-           UNION
-           SELECT e.src, reach.r FROM edges e JOIN reach ON reach.doc_id = e.dst),
+      s"""WITH RECURSIVE $minhashComponentCtes,
          grp AS (SELECT doc_id, min(r) AS group_id FROM reach GROUP BY doc_id),
          tk AS (SELECT doc_id, md5(text) AS h,
                        CAST(len(string_split(text, ' ')) AS BIGINT) AS nt
@@ -4176,14 +4332,7 @@ object ExtensionQueries {
       // replays pageRankDirected's integer recurrence exactly: dangling
       // mass D_k = Σ pr over nodes with no out-edge, every node gets
       // base + Σcontrib + (D_k·85)//(100·N) each round
-      """WITH edges AS (
-           SELECT DISTINCT 'p' || CAST(l_partkey AS VARCHAR) AS src,
-                           's' || CAST(l_suppkey AS VARCHAR) AS dst
-           FROM lineitem),
-         nodes AS (SELECT DISTINCT node FROM
-                   (SELECT src AS node FROM edges
-                    UNION ALL SELECT dst FROM edges)),
-         nn AS (SELECT count(*) AS n FROM nodes),
+      s"""WITH $partSupplierNodeCtes,
          deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
          r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS pr FROM nodes),
          d1 AS (SELECT COALESCE(sum(pr), 0) AS dm FROM r0
@@ -4231,22 +4380,11 @@ object ExtensionQueries {
       * this query is the gate that keeps its recall honest (nprobe and
       * re-fit cadence are tuned against exactly this readout). Counts
       * exact ints, one floor division — engine-stable. */
-    QueryDef("q153_ann_recall", (s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") < 20)
-      val brute = Similarity.bruteForceTopK(q, e, k = 10)
-        .select(col("q_id"), col("vec_id"))
-      val ivf = Similarity.ivfTopK(q, e, Similarity.centroids(e), k = 10, nprobe = 1)
-        .select(col("q_id"), col("vec_id"), lit(1L).as("hit"))
-      brute.join(ivf, Seq("q_id", "vec_id"), "left")
-        .groupBy(col("q_id"))
-        .agg(count(lit(1)).as("n_brute"),
-          sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-        .select(col("q_id"), col("n_brute"), col("n_hits"),
-          expr("(n_hits * 10000) div n_brute").as("recall_bp"))
-    },
+    QueryDef("q153_ann_recall", (s, dir) =>
+      recallAt10(s, dir)((q, e) =>
+        Similarity.ivfTopK(q, e, Similarity.centroids(e), k = 10, nprobe = 1)),
       // q29's brute-force top-k joined against q30's IVF top-k: recall@10
-      """WITH e AS (SELECT label, vec_id, CAST(embedding AS DOUBLE[]) AS v
+      s"""WITH e AS (SELECT label, vec_id, CAST(embedding AS DOUBLE[]) AS v
                     FROM embeddings),
          q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 20),
          b AS (SELECT q_id, vec_id FROM (
@@ -4256,20 +4394,8 @@ object ExtensionQueries {
                                    e.vec_id) AS rank
                  FROM q, e)
                WHERE rank <= 10),
-         cent AS (
-           SELECT label, list(cx ORDER BY j) AS centroid
-           FROM (SELECT label, j, avg(v[CAST(j AS INT)]) AS cx
-                 FROM e, (SELECT unnest(range(1, 65)) AS j)
-                 GROUP BY label, j)
-           GROUP BY label),
-         probes AS (
-           SELECT q_id, qv, label AS probe_label FROM (
-             SELECT q.q_id, q.qv, c.label,
-                    ROW_NUMBER() OVER (PARTITION BY q.q_id
-                      ORDER BY round(list_cosine_similarity(q.qv, c.centroid), 6) DESC,
-                               c.label) AS prn
-             FROM q, cent c)
-           WHERE prn = 1),
+         $centroidCte,
+         ${ivfProbesCte("= 1")},
          i AS (SELECT q_id, vec_id FROM (
                  SELECT p.q_id, e.vec_id,
                         ROW_NUMBER() OVER (PARTITION BY p.q_id
@@ -4277,14 +4403,7 @@ object ExtensionQueries {
                                    e.vec_id) AS rank
                  FROM probes p JOIN e ON e.label = p.probe_label)
                WHERE rank <= 10)
-         SELECT b.q_id, CAST(count(*) AS BIGINT) AS n_brute,
-                CAST(sum(CASE WHEN i.vec_id IS NULL THEN 0 ELSE 1 END)
-                     AS BIGINT) AS n_hits,
-                CAST((CAST(sum(CASE WHEN i.vec_id IS NULL THEN 0 ELSE 1 END)
-                           AS BIGINT) * 10000) // count(*) AS BIGINT)
-                  AS recall_bp
-         FROM b LEFT JOIN i ON i.q_id = b.q_id AND i.vec_id = b.vec_id
-         GROUP BY b.q_id"""),
+         ${recallSelect("i")}"""),
 
     /** Duplicate-span coverage: per document, the fraction of its
       * DISTINCT word-8-grams that also occur in at least one other
@@ -4311,13 +4430,7 @@ object ExtensionQueries {
     },
       // q52's 8-gram spelling, folded back per doc: distinct grams,
       // df ≥ 2 marks a gram duplicated, coverage in floor basis points
-      """WITH g AS (
-           SELECT doc_id,
-                  unnest(list_distinct(list_transform(range(1, len(s) - 6),
-                         i -> s[i] || ' ' || s[i+1] || ' ' || s[i+2] || ' ' || s[i+3]
-                              || ' ' || s[i+4] || ' ' || s[i+5] || ' ' || s[i+6]
-                              || ' ' || s[i+7]))) AS gram
-           FROM (SELECT doc_id, string_split(text, ' ') AS s FROM documents)),
+      s"""WITH $word8GramCte,
          shared AS (SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2),
          per AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams
                  FROM g GROUP BY doc_id),
@@ -4346,11 +4459,7 @@ object ExtensionQueries {
           .select(col("vec_a").as("a"), col("vec_b").as("b"))),
       // naive a<b<c triple join — O(m^3/2) orientation is a Spark-side
       // optimization with identical counts; coefficient floor-divided
-      """WITH e AS (SELECT label, vec_id, CAST(embedding AS DOUBLE[]) AS v
-                    FROM embeddings),
-         ed AS (SELECT a.vec_id AS a, b.vec_id AS b
-                FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
-                WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.25),
+      s"""WITH $nearDupEdgeCtes,
          deg AS (SELECT node, count(*) AS deg FROM
                  (SELECT a AS node FROM ed UNION ALL SELECT b FROM ed)
                  GROUP BY node),
@@ -4383,11 +4492,7 @@ object ExtensionQueries {
           .select(col("vec_a").as("a"), col("vec_b").as("b")),
         k = 2, rounds = 3),
       // 3 unrolled peel rounds: degrees → keep (deg >= 2) → restrict
-      """WITH e AS (SELECT label, vec_id, CAST(embedding AS DOUBLE[]) AS v
-                    FROM embeddings),
-         ed AS (SELECT a.vec_id AS a, b.vec_id AS b
-                FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
-                WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.25),
+      s"""WITH $nearDupEdgeCtes,
          s0 AS (SELECT a AS s, b AS d FROM ed UNION ALL SELECT b, a FROM ed),
          k1 AS (SELECT s FROM s0 GROUP BY s HAVING count(*) >= 2),
          s1 AS (SELECT s, d FROM s0 WHERE s IN (SELECT s FROM k1)
@@ -4419,11 +4524,7 @@ object ExtensionQueries {
       // every wedge from its center (degree-capped, no-op here), pair
       // counts + per-center AA/RA terms floored to ints BEFORE the sum
       // (add-order-independent), adjacency excluded, Jaccard floor-divided
-      """WITH e AS (SELECT label, vec_id, CAST(embedding AS DOUBLE[]) AS v
-                    FROM embeddings),
-         ed AS (SELECT a.vec_id AS a, b.vec_id AS b
-                FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
-                WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.25),
+      s"""WITH $nearDupEdgeCtes,
          sym AS (SELECT a AS c, b AS n FROM ed UNION ALL SELECT b, a FROM ed),
          deg AS (SELECT c, count(*) AS deg FROM sym GROUP BY c),
          w AS (SELECT e1.n AS x, e2.n AS y, d.deg
@@ -4456,11 +4557,7 @@ object ExtensionQueries {
       // the walk recurrence unrolled 3 steps: each step's pick is the
       // first 24 md5 bits (hex chars via the instr alphabet, q79's
       // pattern) mod the current node's degree, over dst-sorted adjacency
-      """WITH e AS (SELECT label, vec_id, CAST(embedding AS DOUBLE[]) AS v
-                    FROM embeddings),
-         ed AS (SELECT a.vec_id AS a, b.vec_id AS b
-                FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
-                WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.25),
+      s"""WITH $nearDupEdgeCtes,
          sym AS (SELECT a AS src, b AS dst FROM ed UNION ALL SELECT b, a FROM ed),
          degs AS (SELECT src, count(*) AS deg FROM sym GROUP BY src),
          adj AS (SELECT src, dst,
@@ -4535,14 +4632,7 @@ object ExtensionQueries {
       // q152's integer recurrence with teleport AND dangling mass
       // restarting at the seed set only (seed share = floor-divided once
       // per round, exactly as the Spark side's driver-computed literals)
-      """WITH edges AS (
-           SELECT DISTINCT 'p' || CAST(l_partkey AS VARCHAR) AS src,
-                           's' || CAST(l_suppkey AS VARCHAR) AS dst
-           FROM lineitem),
-         nodes AS (SELECT DISTINCT node FROM
-                   (SELECT src AS node FROM edges
-                    UNION ALL SELECT dst FROM edges)),
-         nn AS (SELECT count(*) AS n FROM nodes),
+      s"""WITH $partSupplierNodeCtes,
          seeds AS (SELECT DISTINCT 'p' || CAST(l_partkey AS VARCHAR) AS node
                    FROM lineitem WHERE l_partkey <= 5),
          ns AS (SELECT count(*) AS s FROM seeds),
@@ -4606,27 +4696,7 @@ object ExtensionQueries {
       val e = t(s, dir, "embeddings")
       Similarity.semDedup(e, Similarity.centroids(e), threshold = 0.3)
     },
-      """WITH e AS (SELECT label, vec_id, CAST(embedding AS DOUBLE[]) AS v
-                    FROM embeddings),
-         cent AS (
-           SELECT label, list(cx ORDER BY j) AS centroid
-           FROM (SELECT label, j, avg(v[CAST(j AS INT)]) AS cx
-                 FROM e, (SELECT unnest(range(1, 65)) AS j)
-                 GROUP BY label, j)
-           GROUP BY label),
-         a AS (SELECT vec_id, cluster, v FROM (
-                 SELECT e.vec_id, c.label AS cluster, e.v,
-                        ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                          ORDER BY round(list_cosine_similarity(e.v, c.centroid), 6) DESC,
-                                   c.label) AS rn
-                 FROM e, cent c)
-               WHERE rn = 1),
-         dup AS (SELECT DISTINCT y.vec_id
-                 FROM a x JOIN a y ON x.cluster = y.cluster AND x.vec_id < y.vec_id
-                 WHERE round(list_cosine_similarity(x.v, y.v), 6) >= 0.3)
-         SELECT a.vec_id, a.cluster,
-                a.vec_id NOT IN (SELECT vec_id FROM dup) AS kept
-         FROM a"""),
+      semdedupOracle),
 
     /** DSIR hashed-unigram importance weights: target = English docs,
       * raw = everything else; per-doc e8-exact log-likelihood-ratio
@@ -4667,14 +4737,10 @@ object ExtensionQueries {
         tokens = col("n_words"), budgetPct = 25)
         .select(col("key").as("doc_id"), col("score"), col("n_tokens"),
           col("cum_tokens")),
-      """WITH q AS (
+      s"""WITH q AS (
            SELECT doc_id,
                   CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-                  CAST(floor((least(CAST(len(string_split(text, ' ')) AS DOUBLE) / 100, 1.0) * 0.5
-                        + least(CAST(len(regexp_extract_all(text, '\b(the|a|of|and|is|to|in)\b')) AS DOUBLE)
-                                / len(string_split(text, ' ')) * 10, 1.0) * 0.3
-                        + (1.0 - least(CAST(len(regexp_extract_all(text, '([.,!?;:''"()\[\]{}-])', 1)) AS DOUBLE)
-                                       / length(text) * 20, 1.0)) * 0.2) * 10000) AS BIGINT) AS score
+                  $qualityScoreBp AS score
            FROM documents),
          tot AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS total FROM q),
          r AS (SELECT doc_id, score, n_tokens,
@@ -4721,14 +4787,10 @@ object ExtensionQueries {
         .select(col("key").as("doc_id"), col("score"), col("n_tokens"),
           col("cum_tokens"))
     },
-      """WITH q AS (
+      s"""WITH q AS (
            SELECT doc_id, text,
                   CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-                  CAST(floor((least(CAST(len(string_split(text, ' ')) AS DOUBLE) / 100, 1.0) * 0.5
-                        + least(CAST(len(regexp_extract_all(text, '\b(the|a|of|and|is|to|in)\b')) AS DOUBLE)
-                                / len(string_split(text, ' ')) * 10, 1.0) * 0.3
-                        + (1.0 - least(CAST(len(regexp_extract_all(text, '([.,!?;:''"()\[\]{}-])', 1)) AS DOUBLE)
-                                       / length(text) * 20, 1.0)) * 0.2) * 10000) AS BIGINT) AS score
+                  $qualityScoreBp AS score
            FROM documents),
          surv AS (SELECT * FROM q WHERE score >= 4000),
          keep AS (SELECT min(doc_id) AS doc_id FROM surv GROUP BY md5(text)),
@@ -4736,22 +4798,9 @@ object ExtensionQueries {
                 FROM surv JOIN keep USING (doc_id)),
          e AS (SELECT label, vec_id, CAST(embedding AS DOUBLE[]) AS v
                FROM embeddings WHERE vec_id IN (SELECT doc_id FROM ex)),
-         cent AS (
-           SELECT label, list(cx ORDER BY j) AS centroid
-           FROM (SELECT label, j, avg(v[CAST(j AS INT)]) AS cx
-                 FROM e, (SELECT unnest(range(1, 65)) AS j)
-                 GROUP BY label, j)
-           GROUP BY label),
-         a AS (SELECT vec_id, cluster, v FROM (
-                 SELECT e.vec_id, c.label AS cluster, e.v,
-                        ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                          ORDER BY round(list_cosine_similarity(e.v, c.centroid), 6) DESC,
-                                   c.label) AS rn
-                 FROM e, cent c)
-               WHERE rn = 1),
-         dup AS (SELECT DISTINCT y.vec_id
-                 FROM a x JOIN a y ON x.cluster = y.cluster AND x.vec_id < y.vec_id
-                 WHERE round(list_cosine_similarity(x.v, y.v), 6) >= 0.3),
+         $centroidCte,
+         $semdedupAssignCte,
+         $semdedupDupCte,
          after AS (SELECT * FROM ex
                    WHERE doc_id NOT IN (SELECT vec_id FROM dup)),
          tot AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS total FROM after),
@@ -4782,21 +4831,8 @@ object ExtensionQueries {
         .select(col("cluster").as("label"), col("vec_id"), col("embedding"))
       Similarity.semDedupAgainst(batch, kept, cent, threshold = 0.3)
     },
-      """WITH e AS (SELECT label, vec_id, CAST(embedding AS DOUBLE[]) AS v
-                    FROM embeddings),
-         cent AS (
-           SELECT label, list(cx ORDER BY j) AS centroid
-           FROM (SELECT label, j, avg(v[CAST(j AS INT)]) AS cx
-                 FROM e, (SELECT unnest(range(1, 65)) AS j)
-                 GROUP BY label, j)
-           GROUP BY label),
-         a AS (SELECT vec_id, cluster, v FROM (
-                 SELECT e.vec_id, c.label AS cluster, e.v,
-                        ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                          ORDER BY round(list_cosine_similarity(e.v, c.centroid), 6) DESC,
-                                   c.label) AS rn
-                 FROM e, cent c)
-               WHERE rn = 1),
+      s"""WITH $embeddingCentroidCtes,
+         $semdedupAssignCte,
          prior AS (SELECT * FROM a WHERE vec_id % 10 <> 0),
          pdup AS (SELECT DISTINCT y.vec_id
                   FROM prior x JOIN prior y
@@ -4829,27 +4865,7 @@ object ExtensionQueries {
       Similarity.semDedup(e, Similarity.centroids(e), threshold = 0.3,
         broadcastBlocks = false)
     },
-      """WITH e AS (SELECT label, vec_id, CAST(embedding AS DOUBLE[]) AS v
-                    FROM embeddings),
-         cent AS (
-           SELECT label, list(cx ORDER BY j) AS centroid
-           FROM (SELECT label, j, avg(v[CAST(j AS INT)]) AS cx
-                 FROM e, (SELECT unnest(range(1, 65)) AS j)
-                 GROUP BY label, j)
-           GROUP BY label),
-         a AS (SELECT vec_id, cluster, v FROM (
-                 SELECT e.vec_id, c.label AS cluster, e.v,
-                        ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                          ORDER BY round(list_cosine_similarity(e.v, c.centroid), 6) DESC,
-                                   c.label) AS rn
-                 FROM e, cent c)
-               WHERE rn = 1),
-         dup AS (SELECT DISTINCT y.vec_id
-                 FROM a x JOIN a y ON x.cluster = y.cluster AND x.vec_id < y.vec_id
-                 WHERE round(list_cosine_similarity(x.v, y.v), 6) >= 0.3)
-         SELECT a.vec_id, a.cluster,
-                a.vec_id NOT IN (SELECT vec_id FROM dup) AS kept
-         FROM a"""),
+      semdedupOracle),
 
     /** Contrastive hard-negative mining: for a query sample, the 5 most
       * confusable corpus vectors inside the [0.1, 0.9) cosine band —
@@ -4884,14 +4900,7 @@ object ExtensionQueries {
           .select(col("vec_id"), col("cluster")),
         Seq("cluster"), col("vec_id"), maxPerGroup = 20)
     },
-      """WITH e AS (SELECT label, vec_id, CAST(embedding AS DOUBLE[]) AS v
-                    FROM embeddings),
-         cent AS (
-           SELECT label, list(cx ORDER BY j) AS centroid
-           FROM (SELECT label, j, avg(v[CAST(j AS INT)]) AS cx
-                 FROM e, (SELECT unnest(range(1, 65)) AS j)
-                 GROUP BY label, j)
-           GROUP BY label),
+      s"""WITH $embeddingCentroidCtes,
          a AS (SELECT vec_id, cluster FROM (
                  SELECT e.vec_id, c.label AS cluster,
                         ROW_NUMBER() OVER (PARTITION BY e.vec_id
@@ -4961,47 +4970,7 @@ object ExtensionQueries {
       // full Lloyd loop replay: farthest-point seeding (3 scans), E-step
       // under the rounded seeds, 6-dp-rounded M-step means, final E-step;
       // + 0.0 folds −0.0 rounded cosines before they become ordering keys
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         s1 AS (SELECT list_transform(v, x -> round(x, 6)) AS c
-                FROM e ORDER BY vec_id LIMIT 1),
-         d2 AS (SELECT e.vec_id, e.v,
-                       round(list_cosine_similarity(e.v, s1.c), 6) + 0.0 AS mx
-                FROM e, s1),
-         s2 AS (SELECT list_transform(v, x -> round(x, 6)) AS c
-                FROM d2 ORDER BY mx, vec_id LIMIT 1),
-         d3 AS (SELECT d2.vec_id, d2.v,
-                       greatest(d2.mx,
-                         round(list_cosine_similarity(d2.v, s2.c), 6) + 0.0) AS mx
-                FROM d2, s2),
-         s3 AS (SELECT list_transform(v, x -> round(x, 6)) AS c
-                FROM d3 ORDER BY mx, vec_id LIMIT 1),
-         d4 AS (SELECT d3.vec_id, d3.v,
-                       greatest(d3.mx,
-                         round(list_cosine_similarity(d3.v, s3.c), 6) + 0.0) AS mx
-                FROM d3, s3),
-         s4 AS (SELECT list_transform(v, x -> round(x, 6)) AS c
-                FROM d4 ORDER BY mx, vec_id LIMIT 1),
-         cent0 AS (SELECT CAST(0 AS BIGINT) AS cluster, c FROM s1
-                   UNION ALL SELECT 1, c FROM s2
-                   UNION ALL SELECT 2, c FROM s3
-                   UNION ALL SELECT 3, c FROM s4),
-         a1 AS (SELECT vec_id, cluster FROM (
-                  SELECT e.vec_id, c0.cluster,
-                         ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                           ORDER BY round(list_cosine_similarity(e.v, c0.c), 6) + 0.0
-                                      DESC,
-                                    c0.cluster) AS rn
-                  FROM e, cent0 c0)
-                WHERE rn = 1),
-         m1 AS (SELECT cluster, list(cx ORDER BY j) AS c FROM (
-                  SELECT a1.cluster, j,
-                         round(avg(e.v[CAST(j AS INT)]), 6) AS cx
-                  FROM a1 JOIN e USING (vec_id),
-                       (SELECT unnest(range(1, 65)) AS j)
-                  GROUP BY a1.cluster, j)
-                GROUP BY cluster),
-         cent1 AS (SELECT c0.cluster, coalesce(m1.c, c0.c) AS c
-                   FROM cent0 c0 LEFT JOIN m1 ON c0.cluster = m1.cluster)
+      s"""WITH $kmeansCentroidCtes
          SELECT vec_id, cluster, csim FROM (
            SELECT e.vec_id, c1.cluster,
                   round(list_cosine_similarity(e.v, c1.c), 6) + 0.0 AS csim,
@@ -5017,63 +4986,21 @@ object ExtensionQueries {
       * recall@10 per query in basis points, the accuracy contract of the
       * project → shortlist → re-rank ANN pattern (q153's audit shape,
       * projection edition). See Projection.rpProject. */
-    QueryDef("q172_rp_recall", (s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") < 20)
-      val brute = Similarity.bruteForceTopK(q, e, k = 10)
-        .select(col("q_id"), col("vec_id"))
-      val ep = Projection.projectCorpus(e, outDim = 16)
-      val proj = Similarity
-        .bruteForceTopK(ep.filter(col("vec_id") < 20), ep, k = 10)
-        .select(col("q_id"), col("vec_id"), lit(1L).as("hit"))
-      brute.join(proj, Seq("q_id", "vec_id"), "left")
-        .groupBy(col("q_id"))
-        .agg(count(lit(1)).as("n_brute"),
-          sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-        .select(col("q_id"), col("n_brute"), col("n_hits"),
-          expr("(n_hits * 10000) div n_brute").as("recall_bp"))
-    },
+    QueryDef("q172_rp_recall", (s, dir) =>
+      recallAt10(s, dir) { (_, e) =>
+        val ep = Projection.projectCorpus(e, outDim = 16)
+        Similarity.bruteForceTopK(ep.filter(col("vec_id") < 20), ep, k = 10)
+      },
       // the JL sketch replayed sign-for-sign (md5 'rp:m:j' family),
       // then q153's recall-audit shape over projected-space vs
       // full-space brute-force top-10
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         rp AS (SELECT m, j,
-                       CASE WHEN substr(md5('rp:' || CAST(m AS VARCHAR) || ':'
-                                            || CAST(j AS VARCHAR)), 1, 1)
-                            IN ('0','2','4','6','8','a','c','e')
-                            THEN 1.0 ELSE -1.0 END AS c
-                FROM (SELECT unnest(range(0, 16)) AS m),
-                     (SELECT unnest(range(1, 65)) AS j)),
-         p AS (SELECT vec_id, list(pm ORDER BY m) AS pv FROM (
-                 SELECT vec_id, m,
-                        round(sum(c * v[CAST(j AS INT)]) / 4.0, 6) AS pm
-                 FROM e, rp GROUP BY vec_id, m)
-               GROUP BY vec_id),
-         qf AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 20),
-         b AS (SELECT q_id, vec_id FROM (
-                 SELECT qf.q_id, e.vec_id,
-                        ROW_NUMBER() OVER (PARTITION BY qf.q_id
-                          ORDER BY round(list_cosine_similarity(qf.qv, e.v), 6) DESC,
-                                   e.vec_id) AS rank
-                 FROM qf, e)
-               WHERE rank <= 10),
+      s"""WITH $rpSketchCtes,
+         $exactTop10Ctes,
          qp AS (SELECT vec_id AS q_id, pv AS qpv FROM p WHERE vec_id < 20),
          pr AS (SELECT q_id, vec_id FROM (
-                  SELECT qp.q_id, p.vec_id,
-                         ROW_NUMBER() OVER (PARTITION BY qp.q_id
-                           ORDER BY round(list_cosine_similarity(qp.qpv, p.pv), 6)
-                                      DESC,
-                                    p.vec_id) AS rank
-                  FROM qp, p)
+                  $rpNeighbourRanks
                 WHERE rank <= 10)
-         SELECT b.q_id, CAST(count(*) AS BIGINT) AS n_brute,
-                CAST(sum(CASE WHEN pr.vec_id IS NULL THEN 0 ELSE 1 END)
-                     AS BIGINT) AS n_hits,
-                CAST((CAST(sum(CASE WHEN pr.vec_id IS NULL THEN 0 ELSE 1 END)
-                           AS BIGINT) * 10000) // count(*) AS BIGINT)
-                  AS recall_bp
-         FROM b LEFT JOIN pr ON pr.q_id = b.q_id AND pr.vec_id = b.vec_id
-         GROUP BY b.q_id"""),
+         ${recallSelect("pr")}"""),
 
     /** PQ/ADC recall audit: asymmetric-distance top-10 over 4×4-bit
       * product-quantization codes (exact query vs codebook-compressed
@@ -5081,57 +5008,18 @@ object ExtensionQueries {
       * full-space top-10. The compressed-domain third rung of the ANN
       * accuracy ladder next to IVF (q153) and the JL sketch (q172).
       * See Projection.pqAdcTopK. */
-    QueryDef("q173_pq_recall", (s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") < 20)
-      val brute = Similarity.bruteForceTopK(q, e, k = 10)
-        .select(col("q_id"), col("vec_id"))
-      val adc = Projection.pqAdcTopK(q, e, k = 10)
-        .select(col("q_id"), col("vec_id"), lit(1L).as("hit"))
-      brute.join(adc, Seq("q_id", "vec_id"), "left")
-        .groupBy(col("q_id"))
-        .agg(count(lit(1)).as("n_brute"),
-          sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-        .select(col("q_id"), col("n_brute"), col("n_hits"),
-          expr("(n_hits * 10000) div n_brute").as("recall_bp"))
-    },
+    QueryDef("q173_pq_recall", (s, dir) =>
+      recallAt10(s, dir)((q, e) => Projection.pqAdcTopK(q, e, k = 10)),
       // PQ replay: unit-normalize, 4 subspaces x 4 sign planes (md5
       // 'pq:sub:h:j', j relative to the subspace), codebook means rounded
       // 6 dp, ADC = sum of subspace dots vs the exact query — then the
       // q153 recall-audit shape vs full-space brute force
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          u AS (SELECT vec_id,
                       list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS vn,
                       v
                FROM e),
-         hp AS (SELECT sub, h, j,
-                       CASE WHEN substr(md5('pq:' || CAST(sub AS VARCHAR) || ':'
-                                             || CAST(h AS VARCHAR) || ':'
-                                             || CAST(j AS VARCHAR)), 1, 1)
-                            IN ('0','2','4','6','8','a','c','e')
-                            THEN 1.0 ELSE -1.0 END AS c
-                FROM (SELECT unnest(range(0, 4)) AS sub),
-                     (SELECT unnest(range(0, 4)) AS h),
-                     (SELECT unnest(range(1, 17)) AS j)),
-         bits AS (SELECT vec_id, sub, h,
-                         CASE WHEN round(sum(c * vn[CAST(sub * 16 + j AS INT)]), 6) > 0
-                              THEN 1 ELSE 0 END AS bit
-                  FROM u, hp GROUP BY vec_id, sub, h),
-         codes AS (SELECT vec_id, sub,
-                          CAST(sum(bit * (CAST(1 AS BIGINT) << CAST(h AS INT)))
-                               AS BIGINT) AS code
-                   FROM bits GROUP BY vec_id, sub),
-         cb AS (SELECT sub, code, list(cx ORDER BY j2) AS cbv FROM (
-                  SELECT codes.sub, codes.code, j2,
-                         round(avg(u.vn[CAST(codes.sub * 16 + j2 AS INT)]), 6) AS cx
-                  FROM codes JOIN u USING (vec_id),
-                       (SELECT unnest(range(1, 17)) AS j2)
-                  GROUP BY codes.sub, codes.code, j2)
-                GROUP BY sub, code),
-         qsub AS (SELECT vec_id AS q_id, sub,
-                         list_slice(vn, sub * 16 + 1, sub * 16 + 16) AS qv
-                  FROM u, (SELECT unnest(range(0, 4)) AS sub)
-                  WHERE vec_id < 20),
+         $pqCodebookCtes,
          adc AS (SELECT qsub.q_id, codes.vec_id,
                         round(sum(list_dot_product(qsub.qv, cb.cbv)), 6) + 0.0 AS sim
                  FROM codes
@@ -5144,22 +5032,8 @@ object ExtensionQueries {
                            ORDER BY sim DESC, vec_id) AS rank
                   FROM adc)
                 WHERE rank <= 10),
-         qf AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 20),
-         b AS (SELECT q_id, vec_id FROM (
-                 SELECT qf.q_id, e.vec_id,
-                        ROW_NUMBER() OVER (PARTITION BY qf.q_id
-                          ORDER BY round(list_cosine_similarity(qf.qv, e.v), 6) DESC,
-                                   e.vec_id) AS rank
-                 FROM qf, e)
-               WHERE rank <= 10)
-         SELECT b.q_id, CAST(count(*) AS BIGINT) AS n_brute,
-                CAST(sum(CASE WHEN tk.vec_id IS NULL THEN 0 ELSE 1 END)
-                     AS BIGINT) AS n_hits,
-                CAST((CAST(sum(CASE WHEN tk.vec_id IS NULL THEN 0 ELSE 1 END)
-                           AS BIGINT) * 10000) // count(*) AS BIGINT)
-                  AS recall_bp
-         FROM b LEFT JOIN tk ON tk.q_id = b.q_id AND tk.vec_id = b.vec_id
-         GROUP BY b.q_id"""),
+         $exactTop10Ctes
+         ${recallSelect("tk")}"""),
 
     /** Two-stage ANN: JL-sketch shortlist (50 per query) → exact
       * full-space re-rank to top-10 — the production composition of
@@ -5175,27 +5049,10 @@ object ExtensionQueries {
       // q172's sketch CTEs, then: shortlist = projected-space top-50,
       // re-rank = exact cosine over ONLY the shortlist pairs, top-10 —
       // the oracle pins ids, sims, AND ranks of the final result
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         rp AS (SELECT m, j,
-                       CASE WHEN substr(md5('rp:' || CAST(m AS VARCHAR) || ':'
-                                            || CAST(j AS VARCHAR)), 1, 1)
-                            IN ('0','2','4','6','8','a','c','e')
-                            THEN 1.0 ELSE -1.0 END AS c
-                FROM (SELECT unnest(range(0, 16)) AS m),
-                     (SELECT unnest(range(1, 65)) AS j)),
-         p AS (SELECT vec_id, list(pm ORDER BY m) AS pv FROM (
-                 SELECT vec_id, m,
-                        round(sum(c * v[CAST(j AS INT)]) / 4.0, 6) AS pm
-                 FROM e, rp GROUP BY vec_id, m)
-               GROUP BY vec_id),
+      s"""WITH $rpSketchCtes,
          qp AS (SELECT vec_id AS q_id, pv AS qpv FROM p WHERE vec_id < 20),
          sl AS (SELECT q_id, vec_id FROM (
-                  SELECT qp.q_id, p.vec_id,
-                         ROW_NUMBER() OVER (PARTITION BY qp.q_id
-                           ORDER BY round(list_cosine_similarity(qp.qpv, p.pv), 6)
-                                      DESC,
-                                    p.vec_id) AS rank
-                  FROM qp, p)
+                  $rpNeighbourRanks
                 WHERE rank <= 50),
          qf AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 20)
          SELECT q_id, vec_id, sim, rank FROM (
@@ -5219,47 +5076,7 @@ object ExtensionQueries {
         Clustering.kmeans(t(s, dir, "embeddings"), k = 4, iters = 2)),
       // q171's full Lloyd replay, folded to the per-cluster contract:
       // exact integer micro-unit cosine sums, no float means
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         s1 AS (SELECT list_transform(v, x -> round(x, 6)) AS c
-                FROM e ORDER BY vec_id LIMIT 1),
-         d2 AS (SELECT e.vec_id, e.v,
-                       round(list_cosine_similarity(e.v, s1.c), 6) + 0.0 AS mx
-                FROM e, s1),
-         s2 AS (SELECT list_transform(v, x -> round(x, 6)) AS c
-                FROM d2 ORDER BY mx, vec_id LIMIT 1),
-         d3 AS (SELECT d2.vec_id, d2.v,
-                       greatest(d2.mx,
-                         round(list_cosine_similarity(d2.v, s2.c), 6) + 0.0) AS mx
-                FROM d2, s2),
-         s3 AS (SELECT list_transform(v, x -> round(x, 6)) AS c
-                FROM d3 ORDER BY mx, vec_id LIMIT 1),
-         d4 AS (SELECT d3.vec_id, d3.v,
-                       greatest(d3.mx,
-                         round(list_cosine_similarity(d3.v, s3.c), 6) + 0.0) AS mx
-                FROM d3, s3),
-         s4 AS (SELECT list_transform(v, x -> round(x, 6)) AS c
-                FROM d4 ORDER BY mx, vec_id LIMIT 1),
-         cent0 AS (SELECT CAST(0 AS BIGINT) AS cluster, c FROM s1
-                   UNION ALL SELECT 1, c FROM s2
-                   UNION ALL SELECT 2, c FROM s3
-                   UNION ALL SELECT 3, c FROM s4),
-         a1 AS (SELECT vec_id, cluster FROM (
-                  SELECT e.vec_id, c0.cluster,
-                         ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                           ORDER BY round(list_cosine_similarity(e.v, c0.c), 6) + 0.0
-                                      DESC,
-                                    c0.cluster) AS rn
-                  FROM e, cent0 c0)
-                WHERE rn = 1),
-         m1 AS (SELECT cluster, list(cx ORDER BY j) AS c FROM (
-                  SELECT a1.cluster, j,
-                         round(avg(e.v[CAST(j AS INT)]), 6) AS cx
-                  FROM a1 JOIN e USING (vec_id),
-                       (SELECT unnest(range(1, 65)) AS j)
-                  GROUP BY a1.cluster, j)
-                GROUP BY cluster),
-         cent1 AS (SELECT c0.cluster, coalesce(m1.c, c0.c) AS c
-                   FROM cent0 c0 LEFT JOIN m1 ON c0.cluster = m1.cluster),
+      s"""WITH $kmeansCentroidCtes,
          a2 AS (SELECT vec_id, cluster, csim FROM (
                   SELECT e.vec_id, c1.cluster,
                          round(list_cosine_similarity(e.v, c1.c), 6) + 0.0 AS csim,
@@ -5290,47 +5107,7 @@ object ExtensionQueries {
     },
       // q171's learned-centroid chain (seeding, E, M) feeding q160's
       // within-cluster smaller-id prune — SemDeDup with zero given labels
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         s1 AS (SELECT list_transform(v, x -> round(x, 6)) AS c
-                FROM e ORDER BY vec_id LIMIT 1),
-         d2 AS (SELECT e.vec_id, e.v,
-                       round(list_cosine_similarity(e.v, s1.c), 6) + 0.0 AS mx
-                FROM e, s1),
-         s2 AS (SELECT list_transform(v, x -> round(x, 6)) AS c
-                FROM d2 ORDER BY mx, vec_id LIMIT 1),
-         d3 AS (SELECT d2.vec_id, d2.v,
-                       greatest(d2.mx,
-                         round(list_cosine_similarity(d2.v, s2.c), 6) + 0.0) AS mx
-                FROM d2, s2),
-         s3 AS (SELECT list_transform(v, x -> round(x, 6)) AS c
-                FROM d3 ORDER BY mx, vec_id LIMIT 1),
-         d4 AS (SELECT d3.vec_id, d3.v,
-                       greatest(d3.mx,
-                         round(list_cosine_similarity(d3.v, s3.c), 6) + 0.0) AS mx
-                FROM d3, s3),
-         s4 AS (SELECT list_transform(v, x -> round(x, 6)) AS c
-                FROM d4 ORDER BY mx, vec_id LIMIT 1),
-         cent0 AS (SELECT CAST(0 AS BIGINT) AS cluster, c FROM s1
-                   UNION ALL SELECT 1, c FROM s2
-                   UNION ALL SELECT 2, c FROM s3
-                   UNION ALL SELECT 3, c FROM s4),
-         a1 AS (SELECT vec_id, cluster FROM (
-                  SELECT e.vec_id, c0.cluster,
-                         ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                           ORDER BY round(list_cosine_similarity(e.v, c0.c), 6) + 0.0
-                                      DESC,
-                                    c0.cluster) AS rn
-                  FROM e, cent0 c0)
-                WHERE rn = 1),
-         m1 AS (SELECT cluster, list(cx ORDER BY j) AS c FROM (
-                  SELECT a1.cluster, j,
-                         round(avg(e.v[CAST(j AS INT)]), 6) AS cx
-                  FROM a1 JOIN e USING (vec_id),
-                       (SELECT unnest(range(1, 65)) AS j)
-                  GROUP BY a1.cluster, j)
-                GROUP BY cluster),
-         cent1 AS (SELECT c0.cluster, coalesce(m1.c, c0.c) AS c
-                   FROM cent0 c0 LEFT JOIN m1 ON c0.cluster = m1.cluster),
+      s"""WITH $kmeansCentroidCtes,
          a AS (SELECT vec_id, cluster, v FROM (
                  SELECT e.vec_id, c1.cluster, e.v,
                         ROW_NUMBER() OVER (PARTITION BY e.vec_id
@@ -5338,12 +5115,7 @@ object ExtensionQueries {
                                    c1.cluster) AS rn
                  FROM e, cent1 c1)
                WHERE rn = 1),
-         dup AS (SELECT DISTINCT y.vec_id
-                 FROM a x JOIN a y ON x.cluster = y.cluster AND x.vec_id < y.vec_id
-                 WHERE round(list_cosine_similarity(x.v, y.v), 6) >= 0.3)
-         SELECT a.vec_id, a.cluster,
-                a.vec_id NOT IN (SELECT vec_id FROM dup) AS kept
-         FROM a"""),
+         $semdedupKeptSelect"""),
 
     /** Model-free semantic neighbors over RAW TEXT: every 25th document's
       * nearest same-language neighbor by cosine over hashed bag-of-words
@@ -5593,34 +5365,17 @@ object ExtensionQueries {
       * oracle replays the whole composition: centroid routing (q30's
       * CTEs), PQ cells + codebook + ADC (q173's), shortlist-then-re-rank
       * (q174's) — restricted to the probed clusters. */
-    QueryDef("q185_ivfpq_recall", (s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") < 20)
-      val brute = Similarity.bruteForceTopK(q, e, k = 10)
-        .select(col("q_id"), col("vec_id"))
-      val ivfpq = Projection.ivfPqTopK(q, e, Similarity.centroids(e),
-        k = 10, nprobe = 1, shortlist = 50)
-        .select(col("q_id"), col("vec_id"), lit(1L).as("hit"))
-      brute.join(ivfpq, Seq("q_id", "vec_id"), "left")
-        .groupBy(col("q_id"))
-        .agg(count(lit(1)).as("n_brute"),
-          sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-        .select(col("q_id"), col("n_brute"), col("n_hits"),
-          expr("(n_hits * 10000) div n_brute").as("recall_bp"))
-    },
+    QueryDef("q185_ivfpq_recall", (s, dir) =>
+      recallAt10(s, dir)((q, e) => Projection.ivfPqTopK(q, e, Similarity.centroids(e),
+        k = 10, nprobe = 1, shortlist = 50)),
       // q30's routing + q173's PQ/ADC + q174's shortlist-re-rank,
       // composed and restricted to each query's probed cluster
-      """WITH e AS (SELECT label, vec_id, CAST(embedding AS DOUBLE[]) AS v
+      s"""WITH e AS (SELECT label, vec_id, CAST(embedding AS DOUBLE[]) AS v
                     FROM embeddings),
          u AS (SELECT vec_id,
                       list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS vn
                FROM e),
-         cent AS (
-           SELECT label, list(cx ORDER BY j) AS centroid
-           FROM (SELECT label, j, avg(v[CAST(j AS INT)]) AS cx
-                 FROM e, (SELECT unnest(range(1, 65)) AS j)
-                 GROUP BY label, j)
-           GROUP BY label),
+         $centroidCte,
          qfull AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 20),
          probes AS (
            SELECT q_id, label AS probe_label FROM (
@@ -5630,34 +5385,7 @@ object ExtensionQueries {
                                c.label) AS prn
              FROM qfull q, cent c)
            WHERE prn = 1),
-         hp AS (SELECT sub, h, j,
-                       CASE WHEN substr(md5('pq:' || CAST(sub AS VARCHAR) || ':'
-                                             || CAST(h AS VARCHAR) || ':'
-                                             || CAST(j AS VARCHAR)), 1, 1)
-                            IN ('0','2','4','6','8','a','c','e')
-                            THEN 1.0 ELSE -1.0 END AS c
-                FROM (SELECT unnest(range(0, 4)) AS sub),
-                     (SELECT unnest(range(0, 4)) AS h),
-                     (SELECT unnest(range(1, 17)) AS j)),
-         bits AS (SELECT vec_id, sub, h,
-                         CASE WHEN round(sum(c * vn[CAST(sub * 16 + j AS INT)]), 6) > 0
-                              THEN 1 ELSE 0 END AS bit
-                  FROM u, hp GROUP BY vec_id, sub, h),
-         codes AS (SELECT vec_id, sub,
-                          CAST(sum(bit * (CAST(1 AS BIGINT) << CAST(h AS INT)))
-                               AS BIGINT) AS code
-                   FROM bits GROUP BY vec_id, sub),
-         cb AS (SELECT sub, code, list(cx ORDER BY j2) AS cbv FROM (
-                  SELECT codes.sub, codes.code, j2,
-                         round(avg(u.vn[CAST(codes.sub * 16 + j2 AS INT)]), 6) AS cx
-                  FROM codes JOIN u USING (vec_id),
-                       (SELECT unnest(range(1, 17)) AS j2)
-                  GROUP BY codes.sub, codes.code, j2)
-                GROUP BY sub, code),
-         qsub AS (SELECT vec_id AS q_id, sub,
-                         list_slice(vn, sub * 16 + 1, sub * 16 + 16) AS qv
-                  FROM u, (SELECT unnest(range(0, 4)) AS sub)
-                  WHERE vec_id < 20),
+         $pqCodebookCtes,
          adc AS (SELECT qsub.q_id, e2.vec_id,
                         round(sum(list_dot_product(qsub.qv, cb.cbv)), 6) + 0.0 AS sim
                  FROM probes p
@@ -5689,14 +5417,7 @@ object ExtensionQueries {
                                    e.vec_id) AS rank
                  FROM qfull qf, e)
                WHERE rank <= 10)
-         SELECT b.q_id, CAST(count(*) AS BIGINT) AS n_brute,
-                CAST(sum(CASE WHEN rr.vec_id IS NULL THEN 0 ELSE 1 END)
-                     AS BIGINT) AS n_hits,
-                CAST((CAST(sum(CASE WHEN rr.vec_id IS NULL THEN 0 ELSE 1 END)
-                           AS BIGINT) * 10000) // count(*) AS BIGINT)
-                  AS recall_bp
-         FROM b LEFT JOIN rr ON rr.q_id = b.q_id AND rr.vec_id = b.vec_id
-         GROUP BY b.q_id"""),
+         ${recallSelect("rr")}"""),
 
     /** Exact GLOBAL rank of every document by quality (score desc,
       * doc_id tiebreak) — the corpus-wide leaderboard every curation
@@ -5830,13 +5551,7 @@ object ExtensionQueries {
       // offsets via a window cumsum, then pure arithmetic to per-token
       // (seq_id, slot, token) rows: the driver sorts rows before
       // hashing, so this shape is order-insensitive in ANY DuckDB
-      (bpeOracleCtes(6) + tokPosCtes +
-      """,
-        | o AS (SELECT doc_id,
-        |          CAST(coalesce(sum(len) OVER (ORDER BY doc_id
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-        |            0) AS BIGINT) AS off
-        |       FROM dl)
+      (tokOffsetCtes + """
         | SELECT (o.off + tp.dpos) // 128 AS seq_id,
         |        (o.off + tp.dpos) % 128 AS slot, tp.tok AS token
         | FROM tp JOIN o USING (doc_id)""".stripMargin)),
@@ -5986,13 +5701,7 @@ object ExtensionQueries {
       // q190's cut with the rows carrying doc_id, reduced to the
       // per-(seq, doc) manifest: min-slot + token count — unordered
       // aggregates only, row-sorted-hash stable by construction
-      (bpeOracleCtes(6) + tokPosCtes +
-      """,
-        | o AS (SELECT doc_id,
-        |          CAST(coalesce(sum(len) OVER (ORDER BY doc_id
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-        |            0) AS BIGINT) AS off
-        |       FROM dl),
+      (tokOffsetCtes + """,
         | tr AS (SELECT tp.doc_id, (o.off + tp.dpos) // 128 AS seq_id,
         |               (o.off + tp.dpos) % 128 AS slot
         |        FROM tp JOIN o USING (doc_id))
@@ -6219,28 +5928,7 @@ object ExtensionQueries {
       // the q50 BM25 leg (top-20) + the q29 cosine leg (query vector 0,
       // top-20), fused by reciprocal rank 1/(60+rank) — integer ranks, so
       // the fused doubles are bit-identical across engines
-      """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-        |              FROM documents),
-        | dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl
-        |        FROM documents),
-        | stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
-        | tf AS (SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS tf
-        |        FROM toks WHERE term IN ('spark', 'merge', 'window')
-        |        GROUP BY doc_id, term),
-        | dft AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY term),
-        | scored AS (
-        |   SELECT tf.doc_id,
-        |          round(ln(1 + (n_docs - df + 0.5) / (df + 0.5))
-        |                * tf * 2.2
-        |                / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl)), 6) AS term_score
-        |   FROM tf JOIN dft USING (term) JOIN dl USING (doc_id), stats),
-        | bm AS (SELECT doc_id, round(sum(term_score), 4) AS score
-        |        FROM scored GROUP BY doc_id
-        |        ORDER BY score DESC, doc_id LIMIT 20),
-        | br AS (SELECT doc_id,
-        |          CAST(ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS BIGINT)
-        |            AS bm25_rank
-        |        FROM bm),
+      s"""WITH $bm25RankCtes,
         | e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         | q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
         | s AS (SELECT vec_id, round(list_cosine_similarity(qv, v), 6) AS sim
@@ -6250,11 +5938,7 @@ object ExtensionQueries {
         |                 ROW_NUMBER() OVER (ORDER BY sim DESC, vec_id) AS rn
         |          FROM s)
         |        WHERE rn <= 20)
-        |SELECT coalesce(br.doc_id, cr.doc_id) AS doc_id, bm25_rank, cos_rank,
-        |       round(coalesce(1.0 / (60 + bm25_rank), 0)
-        |           + coalesce(1.0 / (60 + cos_rank), 0), 6) AS rrf
-        |FROM br FULL OUTER JOIN cr ON br.doc_id = cr.doc_id
-        |ORDER BY rrf DESC, doc_id LIMIT 10""".stripMargin),
+        |$rrfTop10Select""".stripMargin),
 
     /** No-split depth-2 packing over the corpus token streams: longest
       * pairs with shortest (rank-closed folding), one pack unless the
@@ -6385,45 +6069,12 @@ object ExtensionQueries {
     QueryDef("q203_hybrid_ivf", hybridIvf,
       // q200's BM25 leg + the q30b-style IVF routing (one query vector,
       // nprobe 2) as the semantic leg, fused by the same reciprocal rank
-      """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-        |              FROM documents),
-        | dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl
-        |        FROM documents),
-        | stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
-        | tf AS (SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS tf
-        |        FROM toks WHERE term IN ('spark', 'merge', 'window')
-        |        GROUP BY doc_id, term),
-        | dft AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY term),
-        | scored AS (
-        |   SELECT tf.doc_id,
-        |          round(ln(1 + (n_docs - df + 0.5) / (df + 0.5))
-        |                * tf * 2.2
-        |                / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl)), 6) AS term_score
-        |   FROM tf JOIN dft USING (term) JOIN dl USING (doc_id), stats),
-        | bm AS (SELECT doc_id, round(sum(term_score), 4) AS score
-        |        FROM scored GROUP BY doc_id
-        |        ORDER BY score DESC, doc_id LIMIT 20),
-        | br AS (SELECT doc_id,
-        |          CAST(ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS BIGINT)
-        |            AS bm25_rank
-        |        FROM bm),
+      s"""WITH $bm25RankCtes,
         | e AS (SELECT label, vec_id, CAST(embedding AS DOUBLE[]) AS v
         |       FROM embeddings),
-        | cent AS (
-        |   SELECT label, list(cx ORDER BY j) AS centroid
-        |   FROM (SELECT label, j, avg(v[CAST(j AS INT)]) AS cx
-        |         FROM e, (SELECT unnest(range(1, 65)) AS j)
-        |         GROUP BY label, j)
-        |   GROUP BY label),
+        | $hybridCentroidCte,
         | q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id = 0),
-        | probes AS (
-        |   SELECT q_id, qv, label AS probe_label FROM (
-        |     SELECT q.q_id, q.qv, c.label,
-        |            ROW_NUMBER() OVER (PARTITION BY q.q_id
-        |              ORDER BY round(list_cosine_similarity(q.qv, c.centroid), 6) DESC,
-        |                       c.label) AS prn
-        |     FROM q, cent c)
-        |   WHERE prn <= 2),
+        | ${hybridProbesCte(2)},
         | sc AS (SELECT p.q_id, e.vec_id,
         |               round(list_cosine_similarity(p.qv, e.v), 6) AS sim
         |        FROM probes p JOIN e ON e.label = p.probe_label),
@@ -6432,11 +6083,7 @@ object ExtensionQueries {
         |                 ROW_NUMBER() OVER (ORDER BY sim DESC, vec_id) AS rn
         |          FROM sc)
         |        WHERE rn <= 20)
-        |SELECT coalesce(br.doc_id, cr.doc_id) AS doc_id, bm25_rank, cos_rank,
-        |       round(coalesce(1.0 / (60 + bm25_rank), 0)
-        |           + coalesce(1.0 / (60 + cos_rank), 0), 6) AS rrf
-        |FROM br FULL OUTER JOIN cr ON br.doc_id = cr.doc_id
-        |ORDER BY rrf DESC, doc_id LIMIT 10""".stripMargin),
+        |$rrfTop10Select""".stripMargin),
 
     /** Fusion-level recall audit: overlap@10 between the brute-leg
       * hybrid (q200) and the indexed-leg hybrid (q203) — the number an
@@ -7087,36 +6734,7 @@ object ExtensionQueries {
       // + rounded-mean CTE shapes), nprobe = max(1, k·pct/100) per swept
       // pct, probe fraction from the assignment's cluster sizes, fused
       // recall via the q200/q209 RRF replay
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        | st AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |               CAST(ceil(sqrt(count(*))) AS BIGINT) AS step FROM e),
-        | cent0 AS (SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cluster,
-        |                  list_transform(v, x -> round(x, 6)) AS c
-        |           FROM e, st WHERE vec_id % st.step = 0),
-        | a1 AS (SELECT vec_id, cluster FROM (
-        |          SELECT e.vec_id, c0.cluster,
-        |                 ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        |                   ORDER BY round(list_cosine_similarity(e.v, c0.c), 6) + 0.0 DESC,
-        |                            c0.cluster) AS rn
-        |          FROM e, cent0 c0)
-        |        WHERE rn = 1),
-        | m1 AS (SELECT cluster, list(cx ORDER BY j) AS c FROM (
-        |          SELECT a1.cluster, j, round(avg(e.v[CAST(j AS INT)]), 6) AS cx
-        |          FROM a1 JOIN e USING (vec_id), (SELECT unnest(range(1, 65)) AS j)
-        |          GROUP BY a1.cluster, j)
-        |        GROUP BY cluster),
-        | cent1 AS (SELECT c0.cluster, coalesce(m1.c, c0.c) AS c
-        |           FROM cent0 c0 LEFT JOIN m1 ON c0.cluster = m1.cluster),
-        | asg AS (SELECT vec_id, cluster FROM (
-        |          SELECT e.vec_id, c1.cluster,
-        |                 ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        |                   ORDER BY round(list_cosine_similarity(e.v, c1.c), 6) + 0.0 DESC,
-        |                            c1.cluster) AS rn
-        |          FROM e, cent1 c1)
-        |        WHERE rn = 1),
-        | csize AS (SELECT cluster, CAST(count(*) AS BIGINT) AS sz FROM asg GROUP BY cluster),
-        | kc AS (SELECT CAST(count(*) AS BIGINT) AS k FROM cent1),
-        | q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id = 0),
+      s"""WITH $sqrtKmeansIvfCtes,
         | routed AS (SELECT cluster, CAST(ROW_NUMBER() OVER (
         |                ORDER BY round(list_cosine_similarity(q.qv, c1.c), 6) + 0.0 DESC,
         |                         c1.cluster) AS BIGINT) AS prn
@@ -7138,38 +6756,7 @@ object ExtensionQueries {
         |                    ORDER BY sim DESC, vec_id) AS rn
         |           FROM cand)
         |         WHERE rn <= 20),
-        | toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-        |          FROM documents),
-        | dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl
-        |        FROM documents),
-        | stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
-        | tf AS (SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS tf
-        |        FROM toks WHERE term IN ('spark', 'merge', 'window')
-        |        GROUP BY doc_id, term),
-        | dft AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY term),
-        | scored AS (
-        |   SELECT tf.doc_id,
-        |          round(ln(1 + (n_docs - df + 0.5) / (df + 0.5))
-        |                * tf * 2.2
-        |                / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl)), 6) AS term_score
-        |   FROM tf JOIN dft USING (term) JOIN dl USING (doc_id), stats),
-        | bm AS (SELECT doc_id, round(sum(term_score), 4) AS score
-        |        FROM scored GROUP BY doc_id
-        |        ORDER BY score DESC, doc_id LIMIT 20),
-        | br AS (SELECT doc_id,
-        |          CAST(ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS bm25_rank
-        |        FROM bm),
-        | sb AS (SELECT e.vec_id, round(list_cosine_similarity(q.qv, e.v), 6) AS sim
-        |        FROM e, q),
-        | crb AS (SELECT vec_id AS doc_id, CAST(rn AS BIGINT) AS cos_rank FROM (
-        |           SELECT vec_id, ROW_NUMBER() OVER (ORDER BY sim DESC, vec_id) AS rn
-        |           FROM sb)
-        |         WHERE rn <= 20),
-        | fbx AS (SELECT coalesce(br.doc_id, crb.doc_id) AS doc_id
-        |        FROM br FULL OUTER JOIN crb ON br.doc_id = crb.doc_id
-        |        ORDER BY round(coalesce(1.0 / (60 + bm25_rank), 0)
-        |                     + coalesce(1.0 / (60 + cos_rank), 0), 6) DESC,
-        |                 coalesce(br.doc_id, crb.doc_id) LIMIT 10),
+        | $bruteHybridTop10Ctes,
         | brp AS (SELECT sw.pct, br.doc_id, br.bm25_rank FROM br, sweep sw),
         | fi AS (SELECT pct, doc_id FROM (
         |          SELECT coalesce(brp.pct, cri.pct) AS pct,
@@ -7244,36 +6831,7 @@ object ExtensionQueries {
       // one row): the oracle replays the LOGICAL computation; the
       // ENGINE answers it through the persisted partition-pruned index
       // (spec-asserted equal to the in-memory path)
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        | st AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |               CAST(ceil(sqrt(count(*))) AS BIGINT) AS step FROM e),
-        | cent0 AS (SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cluster,
-        |                  list_transform(v, x -> round(x, 6)) AS c
-        |           FROM e, st WHERE vec_id % st.step = 0),
-        | a1 AS (SELECT vec_id, cluster FROM (
-        |          SELECT e.vec_id, c0.cluster,
-        |                 ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        |                   ORDER BY round(list_cosine_similarity(e.v, c0.c), 6) + 0.0 DESC,
-        |                            c0.cluster) AS rn
-        |          FROM e, cent0 c0)
-        |        WHERE rn = 1),
-        | m1 AS (SELECT cluster, list(cx ORDER BY j) AS c FROM (
-        |          SELECT a1.cluster, j, round(avg(e.v[CAST(j AS INT)]), 6) AS cx
-        |          FROM a1 JOIN e USING (vec_id), (SELECT unnest(range(1, 65)) AS j)
-        |          GROUP BY a1.cluster, j)
-        |        GROUP BY cluster),
-        | cent1 AS (SELECT c0.cluster, coalesce(m1.c, c0.c) AS c
-        |           FROM cent0 c0 LEFT JOIN m1 ON c0.cluster = m1.cluster),
-        | asg AS (SELECT vec_id, cluster FROM (
-        |          SELECT e.vec_id, c1.cluster,
-        |                 ROW_NUMBER() OVER (PARTITION BY e.vec_id
-        |                   ORDER BY round(list_cosine_similarity(e.v, c1.c), 6) + 0.0 DESC,
-        |                            c1.cluster) AS rn
-        |          FROM e, cent1 c1)
-        |        WHERE rn = 1),
-        | csize AS (SELECT cluster, CAST(count(*) AS BIGINT) AS sz FROM asg GROUP BY cluster),
-        | kc AS (SELECT CAST(count(*) AS BIGINT) AS k FROM cent1),
-        | q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id = 0),
+      s"""WITH $sqrtKmeansIvfCtes,
         | probes AS (SELECT cluster FROM (
         |              SELECT c1.cluster,
         |                     ROW_NUMBER() OVER (
@@ -7292,38 +6850,7 @@ object ExtensionQueries {
         |                  ROW_NUMBER() OVER (ORDER BY sim DESC, vec_id) AS rn
         |           FROM cand)
         |         WHERE rn <= 20),
-        | toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-        |          FROM documents),
-        | dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl
-        |        FROM documents),
-        | stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
-        | tf AS (SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS tf
-        |        FROM toks WHERE term IN ('spark', 'merge', 'window')
-        |        GROUP BY doc_id, term),
-        | dft AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY term),
-        | scored AS (
-        |   SELECT tf.doc_id,
-        |          round(ln(1 + (n_docs - df + 0.5) / (df + 0.5))
-        |                * tf * 2.2
-        |                / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl)), 6) AS term_score
-        |   FROM tf JOIN dft USING (term) JOIN dl USING (doc_id), stats),
-        | bm AS (SELECT doc_id, round(sum(term_score), 4) AS score
-        |        FROM scored GROUP BY doc_id
-        |        ORDER BY score DESC, doc_id LIMIT 20),
-        | br AS (SELECT doc_id,
-        |          CAST(ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS bm25_rank
-        |        FROM bm),
-        | sb AS (SELECT e.vec_id, round(list_cosine_similarity(q.qv, e.v), 6) AS sim
-        |        FROM e, q),
-        | crb AS (SELECT vec_id AS doc_id, CAST(rn AS BIGINT) AS cos_rank FROM (
-        |           SELECT vec_id, ROW_NUMBER() OVER (ORDER BY sim DESC, vec_id) AS rn
-        |           FROM sb)
-        |         WHERE rn <= 20),
-        | fbx AS (SELECT coalesce(br.doc_id, crb.doc_id) AS doc_id
-        |        FROM br FULL OUTER JOIN crb ON br.doc_id = crb.doc_id
-        |        ORDER BY round(coalesce(1.0 / (60 + bm25_rank), 0)
-        |                     + coalesce(1.0 / (60 + cos_rank), 0), 6) DESC,
-        |                 coalesce(br.doc_id, crb.doc_id) LIMIT 10),
+        | $bruteHybridTop10Ctes,
         | fi AS (SELECT doc_id FROM (
         |          SELECT coalesce(br.doc_id, cri.doc_id) AS doc_id,
         |                 ROW_NUMBER() OVER (
@@ -7475,16 +7002,7 @@ object ExtensionQueries {
     },
       // all-integer floor arithmetic: budget = total//2, per-source
       // target = budget*w//sum(w), epochs in floor-e4
-      """WITH av AS (SELECT source,
-        |              CAST(sum(len(regexp_extract_all(text,
-        |                '([A-Za-z]+|[0-9]+|[^A-Za-z0-9 ])', 1))) AS BIGINT)
-        |                AS n_tokens_avail
-        |            FROM documents GROUP BY 1),
-        | w AS (SELECT source,
-        |              CAST(regexp_extract(source, '([0-9]+)', 1) AS BIGINT) % 4 + 1
-        |                AS weight
-        |       FROM (SELECT DISTINCT source FROM documents)),
-        | tot AS (SELECT CAST(sum(n_tokens_avail) AS BIGINT) AS t FROM av),
+      s"""WITH $mixtureSourceCtes,
         | -- weight sum over the COVERED sources (av ⋈ w), matching the
         | -- engine's joined-set wSum; identical here since w is derived
         | -- from the same distinct-source set as av
@@ -7547,16 +7065,7 @@ object ExtensionQueries {
       // 'g' sorts above every bucket when the cut saturates at 256).
       // Non-negative delta only: Spark div truncates toward zero, DuckDB
       // // floors — they disagree below zero, so the sign is a boolean.
-      """WITH av AS (SELECT source,
-        |              CAST(sum(len(regexp_extract_all(text,
-        |                '([A-Za-z]+|[0-9]+|[^A-Za-z0-9 ])', 1))) AS BIGINT)
-        |                AS n_tokens_avail
-        |            FROM documents GROUP BY 1),
-        | w AS (SELECT source,
-        |              CAST(regexp_extract(source, '([0-9]+)', 1) AS BIGINT) % 4 + 1
-        |                AS weight
-        |       FROM (SELECT DISTINCT source FROM documents)),
-        | tot AS (SELECT CAST(sum(n_tokens_avail) AS BIGINT) AS t FROM av),
+      s"""WITH $mixtureSourceCtes,
         | ws AS (SELECT CAST(sum(weight) AS BIGINT) AS s
         |        FROM w JOIN av USING (source)),
         | plan AS (SELECT av.source,
@@ -7810,28 +7319,7 @@ object ExtensionQueries {
     val npCol =
       if (emitNprobe) s"\n        |       CAST($nprobe AS BIGINT) AS nprobe,"
       else ""
-    s"""WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-        |              FROM documents),
-        | dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl
-        |        FROM documents),
-        | stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
-        | tf AS (SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS tf
-        |        FROM toks WHERE term IN ('spark', 'merge', 'window')
-        |        GROUP BY doc_id, term),
-        | dft AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY term),
-        | scored AS (
-        |   SELECT tf.doc_id,
-        |          round(ln(1 + (n_docs - df + 0.5) / (df + 0.5))
-        |                * tf * 2.2
-        |                / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl)), 6) AS term_score
-        |   FROM tf JOIN dft USING (term) JOIN dl USING (doc_id), stats),
-        | bm AS (SELECT doc_id, round(sum(term_score), 4) AS score
-        |        FROM scored GROUP BY doc_id
-        |        ORDER BY score DESC, doc_id LIMIT 20),
-        | br AS (SELECT doc_id,
-        |          CAST(ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS BIGINT)
-        |            AS bm25_rank
-        |        FROM bm),
+    s"""WITH $bm25RankCtes,
         | e AS (SELECT label, vec_id, CAST(embedding AS DOUBLE[]) AS v
         |       FROM embeddings),
         | q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id = 0),
@@ -7842,20 +7330,8 @@ object ExtensionQueries {
         |                  ROW_NUMBER() OVER (ORDER BY sim DESC, vec_id) AS rn
         |           FROM sb)
         |         WHERE rn <= 20),
-        | cent AS (
-        |   SELECT label, list(cx ORDER BY j) AS centroid
-        |   FROM (SELECT label, j, avg(v[CAST(j AS INT)]) AS cx
-        |         FROM e, (SELECT unnest(range(1, 65)) AS j)
-        |         GROUP BY label, j)
-        |   GROUP BY label),
-        | probes AS (
-        |   SELECT q_id, qv, label AS probe_label FROM (
-        |     SELECT q.q_id, q.qv, c.label,
-        |            ROW_NUMBER() OVER (PARTITION BY q.q_id
-        |              ORDER BY round(list_cosine_similarity(q.qv, c.centroid), 6) DESC,
-        |                       c.label) AS prn
-        |     FROM q, cent c)
-        |   WHERE prn <= $nprobe),
+        | $hybridCentroidCte,
+        | ${hybridProbesCte(nprobe)},
         | si AS (SELECT e.vec_id, round(list_cosine_similarity(p.qv, e.v), 6) AS sim
         |        FROM probes p JOIN e ON e.label = p.probe_label),
         | cri AS (SELECT vec_id AS doc_id, CAST(rn AS BIGINT) AS cos_rank FROM (

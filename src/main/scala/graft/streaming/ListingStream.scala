@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.message.MessageSender
 import graft.pipeline.ReplayPipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -17,9 +18,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * it already processed.
   *
   * `fetch` is the transport seam (replay id → (html, json) page
-  * bodies), `deliver` the K7 Discord seam; both are injected so tests
-  * run on fixtures and a deployment plugs its HTTP/Discord clients in
-  * without touching the streaming topology.
+  * bodies), `sender` the K7 Discord seam ([[graft.message.MessageSender]],
+  * fed by [[ReplayPipeline.deliverNext]]: rendered text, envelope and
+  * embeds, then the posted flag); both are injected so tests run on
+  * fixtures and a deployment plugs its HTTP/Discord clients in without
+  * touching the streaming topology.
   */
 object ListingStream {
 
@@ -29,12 +32,12 @@ object ListingStream {
       listingDir: String,
       checkpointDir: String,
       fetch: Int => Option[(String, String)],
-      deliver: (Int, String) => Unit = (_, _) => (),
+      sender: MessageSender,
       trigger: Trigger = Trigger.ProcessingTime("5 minutes")): StreamingQuery =
     attach(spark, store,
       spark.readStream.option("wholetext", "true").text(listingDir)
         .select(col("value").as("body")),
-      checkpointDir, fetch, deliver, trigger)
+      checkpointDir, fetch, sender, trigger)
 
   /** Same chain fed by the [[graft.sources.PollSource]] micro-batch
     * source instead of a file drop: each trigger polls the registered
@@ -46,12 +49,12 @@ object ListingStream {
       pollerName: String,
       checkpointDir: String,
       fetch: Int => Option[(String, String)],
-      deliver: (Int, String) => Unit = (_, _) => (),
+      sender: MessageSender,
       trigger: Trigger = Trigger.ProcessingTime("5 minutes")): StreamingQuery =
     attach(spark, store,
       spark.readStream.format("replay-poll").option("poller", pollerName).load()
         .select(col("body")),
-      checkpointDir, fetch, deliver, trigger)
+      checkpointDir, fetch, sender, trigger)
 
   private def attach(
       spark: SparkSession,
@@ -59,7 +62,7 @@ object ListingStream {
       snapshotsDf: DataFrame,
       checkpointDir: String,
       fetch: Int => Option[(String, String)],
-      deliver: (Int, String) => Unit,
+      sender: MessageSender,
       trigger: Trigger): StreamingQuery = {
     val pipeline = new ReplayPipeline(spark, store)
     snapshotsDf
@@ -86,18 +89,10 @@ object ListingStream {
           while (continue) {
             continue = pipeline.discover(listing).exists { replay =>
               fetch(replay).exists { case (page, json) =>
-                val loaded = pipeline.ingest(replay, page, json)
-                val needsMessage = !loaded && store.replayExists(replay) &&
-                  store.read("messages")
-                    .filter(col("replay_number") === replay).isEmpty
-                if (loaded || needsMessage) pipeline.createMessage(replay)
-                var progressed = false
-                pipeline.nextUnposted().foreach { case (num, text) =>
-                  deliver(num, text)
-                  store.markPosted(num)
-                  progressed = true
-                }
-                progressed // e.g. an invalid page must end the drain, not spin
+                pipeline.ingestAndMessage(replay, page, json)
+                // drain on only while a message went out: e.g. an
+                // invalid page must end the drain, not spin
+                pipeline.deliverNext(sender)
               }
             }
           }

@@ -52,15 +52,15 @@ object ReplayStream {
         // the reference's cadence, so driving the per-replay load from
         // the driver mirrors the reference. Within-batch duplicates are
         // dropped; cross-batch/cross-restart duplicates hit the
-        // replayExists guard inside ingest (idempotent sink).
+        // replayExists guard inside ingest (idempotent sink), while a
+        // stored replay with no message row still gets its message.
         val rows = batch
           .dropDuplicates("replay_number")
           .collect()
           .sortBy(_.getAs[Int]("replay_number"))
         rows.foreach { r =>
-          val replay = r.getAs[Int]("replay_number")
-          if (pipeline.ingest(replay, r.getAs[String]("html"), r.getAs[String]("json")))
-            pipeline.createMessage(replay)
+          pipeline.ingestAndMessage(r.getAs[Int]("replay_number"),
+            r.getAs[String]("html"), r.getAs[String]("json"))
         }
         sender.foreach(pipeline.deliverUnposted)
         ()

@@ -43,6 +43,24 @@ class ReplayStreamSpec extends SparkSpec {
     assert(store.read("frags").count() == 6)
   }
 
+  test("stream messages a replay a crashed run ingested but never messaged") {
+    val in = Files.createTempDirectory("graft-stream-resume-in").toString
+    val ckpt = Files.createTempDirectory("graft-stream-resume-ckpt").toString
+    val root = Files.createTempDirectory("graft-stream-resume-store").toString
+    val store = new TableStore(spark, root)
+    // crash AFTER ingest committed the 5 tables, BEFORE createMessage
+    val pipeline = new graft.pipeline.ReplayPipeline(spark, store)
+    assert(pipeline.ingest(600, SparkSpec.resource("replay.html"),
+      SparkSpec.resource("replay-data.json")))
+    assert(store.read("messages").isEmpty)
+
+    writeDoc(in, "a.json", 600)
+    ReplayStream.start(spark, store, in, ckpt, Trigger.AvailableNow())
+      .awaitTermination()
+    assert(store.read("messages").count() == 1)
+    assert(store.read("replay_main").count() == 1) // no double ingest
+  }
+
   test("ST1 end-to-end: listing polls drive discover→ingest→message→deliver in one query with checkpoint restart") {
     val in = Files.createTempDirectory("graft-listing-in").toString
     val ckpt = Files.createTempDirectory("graft-listing-ckpt").toString
@@ -51,11 +69,12 @@ class ReplayStreamSpec extends SparkSpec {
     val pages = Map(
       501 -> (SparkSpec.resource("replay.html"), SparkSpec.resource("replay-data.json")),
       502 -> (SparkSpec.resource("replay.html"), SparkSpec.resource("replay-data.json")))
-    val delivered = scala.collection.mutable.ArrayBuffer[Int]()
+    val sender = new RecordingSender
+    def delivered: Seq[Int] = sender.replays
     def run(): Unit =
       ListingStream.start(spark, store, in, ckpt,
         fetch = pages.get,
-        deliver = (n, _) => { delivered += n; () },
+        sender = sender,
         trigger = Trigger.AvailableNow()).awaitTermination()
 
     val listing = SparkSpec.resource("listing.html")
@@ -64,8 +83,18 @@ class ReplayStreamSpec extends SparkSpec {
     // cold-start watermark = 2nd filtered listing entry (500) → replay
     // 501 is discovered, loaded, messaged, delivered, flagged posted
     assert(store.read("replay_main").count() == 1)
-    assert(delivered.toSeq == Seq(501))
+    assert(delivered == Seq(501))
     assert(store.read("messages").filter(col("posted") <=> true).count() == 1)
+    // the chain delivers through the bot's send sequence: one wire
+    // payload with the envelope content and 5 embeds (botrun.py:307),
+    // and the rendered text is stored first (create_text, :306)
+    val wire = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(sender.payloads.head)
+    assert(wire.get("content").asText() ==
+      ":incoming_envelope: Доступен новый реплей!")
+    assert(wire.get("embeds").size() == 5)
+    assert(store.read("messages")
+      .filter(col("replay_number") === 501 && col("message").isNotNull).count() == 1)
 
     // restart on the same checkpoint: processed polls are skipped
     run()
@@ -77,7 +106,7 @@ class ReplayStreamSpec extends SparkSpec {
       listing.replace("55 / 120", "120 / 120").getBytes("UTF-8"))
     run()
     assert(store.read("replay_main").count() == 2)
-    assert(delivered.toSeq == Seq(501, 502))
+    assert(delivered == Seq(501, 502))
     assert(store.read("messages").filter(col("posted") <=> true).count() == 2)
   }
 
@@ -146,17 +175,17 @@ class ReplayStreamSpec extends SparkSpec {
     assert(pipeline.ingest(501, html, json))
     assert(store.read("messages").isEmpty)
 
-    val delivered = scala.collection.mutable.ArrayBuffer[Int]()
+    val sender = new RecordingSender
     Files.write(Paths.get(in, "poll.html"),
       SparkSpec.resource("listing.html").getBytes("UTF-8"))
     graft.streaming.ListingStream.start(spark, store, in, ckpt,
       fetch = r => if (r == 501) Some((html, json)) else None,
-      deliver = (n, _) => { delivered += n; () },
+      sender = sender,
       trigger = Trigger.AvailableNow()).awaitTermination()
 
     // the already-ingested replay is messaged, delivered, and flagged —
     // not skipped forever by the is_exists short-circuit
-    assert(delivered.toSeq == Seq(501))
+    assert(sender.replays == Seq(501))
     assert(store.read("messages").filter(col("posted") <=> true).count() == 1)
     assert(store.read("replay_main").count() == 1) // no double ingest
   }
