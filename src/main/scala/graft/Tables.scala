@@ -87,7 +87,17 @@ object Tables {
     // after a JVM GC notices them; the default 30min periodic GC lets
     // ~100 queries of blocks pile up and the iterative-join queries
     // near the end of a bench run measure that pressure, not themselves
-    "spark.cleaner.periodicGC.interval" -> "30s")
+    "spark.cleaner.periodicGC.interval" -> "30s",
+    // Compiled classes are cached JVM-wide, keyed by generated source;
+    // at Spark's 100-entry default the iterative queries evict one
+    // another's classes and Janino recompiles them on every run.
+    // Working sets, counted as compiles under an unbounded cache: a
+    // 20 s perfbench run compiles 139 classes (iterative_curation) and
+    // 125 (replay_service, about 10 more per replay); 1000 is over 2x the
+    // larger. One sf0.001 Verify pass of all 226 queries compiles 3321,
+    // so graft.Bench's whole set does not fit.
+    // Static: read once, when CodeGenerator first loads.
+    "spark.sql.codegen.cache.maxEntries" -> "1000")
 
   /** The only place a `SparkSession` is built: [[sessionConf]] plus a
     * fresh temp warehouse dir for the managed (bucketed) tables
@@ -95,7 +105,8 @@ object Tables {
     */
   def localSession(appName: String, cores: Int): SparkSession = {
     val warehouse = java.nio.file.Files.createTempDirectory("graft-warehouse")
-    warehouse.toFile.deleteOnExit()
+    // File.deleteOnExit skips a non-empty dir, and managed tables fill it
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(warehouse.toFile))
     val spark = sessionConf(cores)
       .foldLeft(SparkSession.builder().appName(appName)) { case (b, (k, v)) => b.config(k, v) }
       .config("spark.sql.warehouse.dir", warehouse.toString)

@@ -90,13 +90,16 @@ object MinHashLsh {
     // through nearDuplicates), not just the isolated kernel: removing
     // it cost 1.3-1.6× across the family (q42 3.88 s vs 2.64 s,
     // q119 2.81 vs 1.71 — plans/r17 notes), so it stays.
+    // The empty-signature guard (docs under 3 words) sits INSIDE the
+    // generator: a separate filter on `sigs` would be pushed below the
+    // exchange and sign every doc once more in the single-task scan.
     Spread.scan(docs)
       .select(col("doc_id"), sigsArr.as("sigs"))
-      .filter(size(col("sigs")) > 0)
       .select(col("doc_id"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)), b =>
-          md5(array_join(slice(col("sigs"), (b * rowsPerBand + 1).cast("int"),
-            lit(rowsPerBand)), "|")))).as(Seq("band", "bucket")))
+        posexplode(when(size(col("sigs")) > 0,
+          transform(sequence(lit(0), lit(bands - 1)), b =>
+            md5(array_join(slice(col("sigs"), (b * rowsPerBand + 1).cast("int"),
+              lit(rowsPerBand)), "|"))))).as(Seq("band", "bucket")))
       .select(col("doc_id"), col("band").cast("bigint").as("band"), col("bucket"))
   }
 

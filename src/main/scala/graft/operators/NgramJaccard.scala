@@ -68,13 +68,16 @@ object NgramJaccard {
       docs: DataFrame, blockCols: Seq[String], n: Int): DataFrame = {
     import graft.functions.SortedIntersect.sorted_intersect_count
     val hashes = graft.functions.NgramHashes.ngram_hashes(col("text"), n)
+    val keys = col("doc_id") +: blockCols.map(col)
     // Spread (guide §2.5): the gram-hash kernel AND the per-pair
     // merge-scan intersect below both run at the a-side scan's
-    // parallelism — 1 task on the single-row-group testdata files
-    val e = Spread.scan(docs).select(
-      (col("doc_id") +: blockCols.map(col)) :+ hashes.as("gh"): _*)
+    // parallelism — 1 task on the single-row-group testdata files.
+    // The no-gram guard is a generator, not a filter: a filter on `gh`
+    // would be pushed below the exchange and hash every doc once more
+    // in the single-task scan.
+    val e = Spread.scan(docs).select(keys :+ hashes.as("gh"): _*)
+      .select(keys :+ explode(when(size(col("gh")) > 0, array(col("gh")))).as("gh"): _*)
       .withColumn("ng", size(col("gh")).cast("bigint"))
-      .filter(col("ng") > 0)
     val a = e.select(
       (col("doc_id").as("doc_a") +: blockCols.map(col)) :+
         col("gh").as("ga") :+ col("ng").as("na"): _*)

@@ -32,6 +32,15 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * monotonically_increasing_id LWW sequence in TableStore). Every
   * call site here feeds order-insensitive aggregation (min/struct,
   * collect_set, array_sort(collect_list), integer sums).
+  *
+  * Guards over a kernel column: Spark pushes every deterministic filter
+  * through the round-robin exchange, so `filter(size(kernel) > 0)`
+  * written after `scan` lands in the single-task scan, and the kernel
+  * runs twice — once serially below the exchange, once in parallel
+  * above it. Put the guard inside the generator
+  * (`explode(when(guard, …))`: a generator over a non-attribute input
+  * gets no inferred filter) or above an operator a filter cannot cross
+  * (an aggregate, or a join condition over both sides).
   */
 object Spread {
 

@@ -5743,11 +5743,13 @@ object ExtensionQueries {
       * retraining from characters. */
     QueryDef("q196_bpe_continue", (s, dir) => {
       val (m3, v3) = Bpe.learn(Bpe.wordFreq(t(s, dir, "documents")), nMerges = 3)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-tokenizer-q196").toString
-      Bpe.writeTokenizer(tmp, m3, v3)
-      val (mR, vR) = Bpe.readTokenizer(s, tmp)
-      val (m6, _) = Bpe.learnContinue(vR, mR, nMore = 3)
+      val tmp = java.nio.file.Files.createTempDirectory("graft-tokenizer-q196").toFile
+      // learnContinue collects every merge, so nothing reads tmp after it
+      val m6 = try {
+        Bpe.writeTokenizer(tmp.toString, m3, v3)
+        val (mR, vR) = Bpe.readTokenizer(s, tmp.toString)
+        Bpe.learnContinue(vR, mR, nMore = 3)._1
+      } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp)
       Bpe.mergesDf(s, m6)
     },
       // q179's oracle VERBATIM again: write → read → continue must equal
@@ -7299,12 +7301,7 @@ object ExtensionQueries {
   private def learnedIvfIndex(labeled: => DataFrame, dir: String): String =
     learnedIvfDirs.computeIfAbsent(dir, _ => {
       val d = java.nio.file.Files.createTempDirectory("graft-ivf-learned")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(d.toFile)
-      }))
+      sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
       Similarity.writeIvfIndex(labeled, d.toString)
       d.toString
     })

@@ -16,7 +16,7 @@ class BotStateSpec extends SparkSpec {
 
   private lazy val state: BotState = {
     System.setProperty("derby.system.home",
-      java.nio.file.Files.createTempDirectory("graft-derby-bot").toString)
+      tempDir("derby-bot"))
     val st = new BotState(spark, url, driver)
     st.init()
     st.init() // idempotent

@@ -271,8 +271,7 @@ class BpeSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val wf = Bpe.wordFreq(docs)
     val (m3, v3) = Bpe.learn(wf, nMerges = 3)
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-tokenizer-spec").toString
+    val tmp = tempDir("tokenizer-spec")
     Bpe.writeTokenizer(tmp, m3, v3)
     val (mR, vR) = Bpe.readTokenizer(spark, tmp)
     assert(mR === m3)

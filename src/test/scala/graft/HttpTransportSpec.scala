@@ -154,7 +154,7 @@ class HttpTransportSpec extends SparkSpec {
 
   private lazy val loopState: BotState = {
     System.setProperty("derby.system.home",
-      java.nio.file.Files.createTempDirectory("graft-derby-loop").toString)
+      tempDir("derby-loop"))
     val st = new BotState(spark,
       "jdbc:derby:memory:graftloop;create=true",
       "org.apache.derby.jdbc.EmbeddedDriver")
@@ -243,7 +243,7 @@ class HttpTransportSpec extends SparkSpec {
     val stub = new Stub
     try {
       val store = new TableStore(spark,
-        java.nio.file.Files.createTempDirectory("graft-webhook").toString)
+        tempDir("webhook"))
       val p = new ReplayPipeline(spark, store)
       p.ingest(500, SparkSpec.resource("replay.html"),
         SparkSpec.resource("replay-data.json"))
@@ -322,7 +322,7 @@ class HttpTransportSpec extends SparkSpec {
       // fresh state: the alert row is GLOBAL (reference single-channel
       // bot) and the suite's shared loopState has already alerted
       System.setProperty("derby.system.home",
-        java.nio.file.Files.createTempDirectory("graft-derby-hook").toString)
+        tempDir("derby-hook"))
       val st = new BotState(spark, "jdbc:derby:memory:grafthook;create=true",
         "org.apache.derby.jdbc.EmbeddedDriver")
       st.init()

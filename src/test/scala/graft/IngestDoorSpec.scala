@@ -41,8 +41,8 @@ class IngestDoorSpec extends SparkSpec {
 
   test("composed door: stage effects, exact audit, one-shot shard law, replay") {
     implicit val ctx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("door").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("door-ck").toString
+    val root = tempDir("door")
+    val ckpt = tempDir("door-ck")
     val evalGrams = Decontaminate
       .evalGramSet(evalDocs.toDF("doc_id", "text"), n = 6).localCheckpoint()
     val bloom = Decontaminate.bloomBytesOf(evalGrams)
@@ -100,7 +100,7 @@ class IngestDoorSpec extends SparkSpec {
 
   test("a doc_id REDELIVERED in a later batch is neither re-admitted nor re-packed") {
     implicit val ctx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("door-redeliver").toString
+    val root = tempDir("door-redeliver")
     val evalGrams = Decontaminate
       .evalGramSet(evalDocs.toDF("doc_id", "text"), n = 6).localCheckpoint()
     val bloom = Decontaminate.bloomBytesOf(evalGrams)
@@ -135,7 +135,7 @@ class IngestDoorSpec extends SparkSpec {
 
   test("guard runs on RAW text: an eval gram spanning PII still catches the leak") {
     implicit val ctx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("door-rawguard").toString
+    val root = tempDir("door-rawguard")
     // a 6-word benchmark prompt whose middle token is an email — after
     // scrubbing, every 6-gram through it would be rewritten, so a
     // scrub-first door would admit the verbatim leak
@@ -158,7 +158,7 @@ class IngestDoorSpec extends SparkSpec {
 
   test("a first batch dropped ENTIRELY at the guard leaves a working door") {
     implicit val ctx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("door-empty").toString
+    val root = tempDir("door-empty")
     val evalGrams = Decontaminate
       .evalGramSet(evalDocs.toDF("doc_id", "text"), n = 6).localCheckpoint()
     val bloom = Decontaminate.bloomBytesOf(evalGrams)
@@ -219,7 +219,7 @@ class IngestDoorSpec extends SparkSpec {
   }
 
   test("media stage: perceptual vs text dup attribution, replay-idempotent") {
-    val root = java.nio.file.Files.createTempDirectory("door-media").toString
+    val root = tempDir("door-media")
     val (evalGrams, bloom, vocab) = mediaFixtures()
     val batch = mediaDocs.toDF("doc_id", "text", "payload")
     IngestDoor.applyBatch(batch, 0L, root, deny, evalGrams, bloom, vocab, seqLen)
@@ -250,7 +250,7 @@ class IngestDoorSpec extends SparkSpec {
   }
 
   test("media stage: batch-split invariance (index probe ≡ within-batch pairing)") {
-    val root = java.nio.file.Files.createTempDirectory("door-media-split").toString
+    val root = tempDir("door-media-split")
     val (evalGrams, bloom, vocab) = mediaFixtures()
     // doc 20 alone, THEN the rest: 21 must now drop via the PERSISTED
     // index (not within-batch pairing), 22 via the corpus text probe —
@@ -278,7 +278,7 @@ class IngestDoorSpec extends SparkSpec {
 
   test("media door demo on toMedia(testdata): audit balances, phash matches q210's operator") {
     import graft.operators.Multimodal
-    val root = java.nio.file.Files.createTempDirectory("door-media-demo").toString
+    val root = tempDir("door-media-demo")
     val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
       .select(col("doc_id"), col("text"))
     val media = Multimodal.toMedia(
@@ -307,7 +307,7 @@ class IngestDoorSpec extends SparkSpec {
 
   test("ALL optional stages at once: lmGate + media, one drop per cause in one batch") {
     import graft.operators.TextOps
-    val root = java.nio.file.Files.createTempDirectory("door-all").toString
+    val root = tempDir("door-all")
     val evalGrams = Decontaminate
       .evalGramSet(evalDocs.toDF("doc_id", "text"), n = 6).localCheckpoint()
     val bloom = Decontaminate.bloomBytesOf(evalGrams)
@@ -362,12 +362,12 @@ class IngestDoorSpec extends SparkSpec {
     val noisy = clean.split(" ").mkString(" \r\n ")
     val batch = Seq((40L, clean), (41L, noisy)).toDF("doc_id", "text")
 
-    val rootOff = java.nio.file.Files.createTempDirectory("door-norm-off").toString
+    val rootOff = tempDir("door-norm-off")
     IngestDoor.applyBatch(batch, 0L, rootOff, deny, evalGrams, bloom, vocab, seqLen)
     assert(IngestDoor.readCorpus(spark, rootOff).count() === 2L,
       "without normalization the variant is (wrongly) a distinct doc")
 
-    val rootOn = java.nio.file.Files.createTempDirectory("door-norm-on").toString
+    val rootOn = tempDir("door-norm-on")
     IngestDoor.applyBatch(batch, 0L, rootOn, deny, evalGrams, bloom, vocab,
       seqLen, normalize = true)
     assert(IngestDoor.readCorpus(spark, rootOn)
@@ -381,7 +381,7 @@ class IngestDoorSpec extends SparkSpec {
   test("optional FIM stage: shards pack the TRANSFORMED text, corpus stays raw, replay exact") {
     import graft.operators.TextOps
     val (evalGrams, bloom, vocab) = mediaFixtures()
-    val root = java.nio.file.Files.createTempDirectory("door-fim").toString
+    val root = tempDir("door-fim")
     IngestDoor.applyBatch(b1.toDF("doc_id", "text"), 0L, root,
       deny, evalGrams, bloom, vocab, seqLen, fimPermille = 1000)
     IngestDoor.applyBatch(b2.toDF("doc_id", "text"), 1L, root,
@@ -416,7 +416,7 @@ class IngestDoorSpec extends SparkSpec {
 
   test("per-source delivery audit: door token sums ≡ batch-side encode aggregation") {
     val (evalGrams, bloom, vocab) = mediaFixtures()
-    val root = java.nio.file.Files.createTempDirectory("door-src").toString
+    val root = tempDir("door-src")
     val batch1 = Seq(
       (1L, s"$longText mail bob@x.co secret", "web"),
       // guard drop: contributes to NO source row (delivery ≠ intake)
@@ -471,7 +471,7 @@ class IngestDoorSpec extends SparkSpec {
 
   test("optional LM quality gate: low-perplexity drop audits as n_lowq, dup attribution exact") {
     import graft.operators.TextOps
-    val root = java.nio.file.Files.createTempDirectory("door-lm").toString
+    val root = tempDir("door-lm")
     val evalGrams = Decontaminate
       .evalGramSet(evalDocs.toDF("doc_id", "text"), n = 6).localCheckpoint()
     val bloom = Decontaminate.bloomBytesOf(evalGrams)

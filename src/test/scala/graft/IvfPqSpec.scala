@@ -21,8 +21,7 @@ class IvfPqSpec extends SparkSpec {
     val e = embeddings
     val cent = Similarity.centroids(e)
     val q = e.filter(col("vec_id") < 5)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-ivfpq").toString
+    val dir = tempDir("ivfpq")
     Projection.writeIvfPqIndex(e, dir)
     val mem = rowSet(Projection.ivfPqTopK(q, e, cent, k = 10))
     val idxDf = Projection.ivfPqTopKIndexed(spark, dir, q, cent, k = 10)
@@ -60,8 +59,7 @@ class IvfPqSpec extends SparkSpec {
     val labeled = e.select(col("vec_id"), col("embedding"))
       .join(Clustering.assignUnder(e, cent)
         .select(col("vec_id"), col("cluster").as("label")), Seq("vec_id"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-ivf-learned-spec").toString
+    val dir = tempDir("ivf-learned-spec")
     Similarity.writeIvfIndex(labeled, dir)
     val q = e.filter(col("vec_id") < 5)
     val mem = rowSet(Similarity.ivfTopK(q, labeled, cent, k = 10, nprobe = 1))
@@ -111,8 +109,7 @@ class IvfPqSpec extends SparkSpec {
       (i, Array((if (i % 2 == 0) 1.0f else -1.0f), 0.05f * (i % 3)),
         (i % 2).toInt)).toDF("vec_id", "embedding", "label")
     val cent = Similarity.centroids(corpus).localCheckpoint()
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-ivf-sampled-gate").toString + "/idx"
+    val dir = tempDir("ivf-sampled-gate") + "/idx"
     Similarity.writeIvfIndex(corpus, dir)
     val shifted = Seq(
       (20L, Array(0.0f, 1.0f)), (21L, Array(0.05f, 1.0f)),
@@ -135,8 +132,7 @@ class IvfPqSpec extends SparkSpec {
       "an in-distribution batch must not trip the sampled gate")
     // an id scheme the stride never hits (all-odd vec_ids, stride 2)
     // must fall back to the FULL scan, not silently KS an empty sample
-    val oddDir = java.nio.file.Files
-      .createTempDirectory("graft-ivf-odd-gate").toString + "/idx"
+    val oddDir = tempDir("ivf-odd-gate") + "/idx"
     val odd = corpus.select((col("vec_id") * 2 + 1).as("vec_id"),
       col("embedding"), col("label"))
     Similarity.writeIvfIndex(odd, oddDir)
@@ -158,8 +154,7 @@ class IvfPqSpec extends SparkSpec {
       (2L, Array(-1.0f, 0.1f), 1), (3L, Array(-1.0f, 0.0f), 1))
       .toDF("vec_id", "embedding", "label")
     val cent = Similarity.centroids(corpus).localCheckpoint()
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-ivf-heal").toString + "/idx"
+    val dir = tempDir("ivf-heal") + "/idx"
     Similarity.writeIvfIndex(corpus, dir)
     // … then the ingest distribution moves to ±y: the gate trips
     val shifted = Seq(
@@ -181,8 +176,7 @@ class IvfPqSpec extends SparkSpec {
       "healing renumbered the clusters")
     // rebuild the index under the healed assignment; the same batch no
     // longer reads as drift and the KS statistic dropped
-    val dir2 = java.nio.file.Files
-      .createTempDirectory("graft-ivf-heal2").toString + "/idx"
+    val dir2 = tempDir("ivf-heal2") + "/idx"
     Similarity.writeIvfIndex(
       union.join(Clustering.assignUnder(union, healed)
         .select(col("vec_id"), col("cluster").as("label")), Seq("vec_id")),

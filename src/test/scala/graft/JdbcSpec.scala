@@ -17,7 +17,7 @@ class JdbcSpec extends SparkSpec {
 
   private def seed(): Unit = {
     System.setProperty("derby.system.home",
-      java.nio.file.Files.createTempDirectory("graft-derby").toString)
+      tempDir("derby"))
     val conn = java.sql.DriverManager.getConnection(url)
     try {
       val st = conn.createStatement()

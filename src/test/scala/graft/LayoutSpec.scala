@@ -41,7 +41,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("compact merges small files per partition dir, preserving data") {
-    val dir = java.nio.file.Files.createTempDirectory("compact").toString + "/t"
+    val dir = tempDir("compact") + "/t"
     val df = (1 to 400).map(i => (i.toLong, s"v$i", s"p${i % 3}"))
       .toDF("id", "v", "p")
     df.repartition(8).write.partitionBy("p").parquet(dir)
@@ -72,7 +72,7 @@ class LayoutSpec extends SparkSpec {
 
   test("Swap.recover restores dirs stranded mid-swap (leaf and root)") {
     import org.apache.hadoop.fs.Path
-    val base = java.nio.file.Files.createTempDirectory("recover").toString
+    val base = tempDir("recover")
     val dir = base + "/t"
     val df = (1 to 300).map(i => (i.toLong, s"v$i", s"p${i % 3}")).toDF("id", "v", "p")
     df.repartition(4).write.partitionBy("p").parquet(dir)
@@ -101,7 +101,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("compact(sortCols) preserves the disjoint ranges of a clustered table") {
-    val dir = java.nio.file.Files.createTempDirectory("compactsort").toString + "/t"
+    val dir = tempDir("compactsort") + "/t"
     // a clustered table that accumulated small appends: 8 range-
     // clustered writes of 2 files each → 16 files with overlapping
     // ranges ACROSS appends (each append is internally disjoint)
@@ -139,7 +139,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("range-clustered files cover disjoint key ranges (file-skip precondition)") {
-    val dir = java.nio.file.Files.createTempDirectory("cluster").toString + "/t"
+    val dir = tempDir("cluster") + "/t"
     val df = (1 to 1000).map(i => ((i * 7919) % 1000, s"v$i")).toDF("k", "v")
     Layout.writeRangeClustered(df, dir, Seq("k"), numFiles = 4)
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -170,7 +170,7 @@ class LayoutSpec extends SparkSpec {
       .select(Layout.zValue(col("a"), col("b")).as("z"))
       .as[Long].head()
     assert(one == 27L)
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString + "/t"
+    val dir = tempDir("zorder") + "/t"
     val df = (1 to 1000)
       .map(i => ((i * 7919) % 128, (i * 104729) % 128, s"v$i"))
       .toDF("x", "y", "v")

@@ -483,7 +483,7 @@ class OperatorsSpec extends SparkSpec {
       (0L, Array(1.0f, 0.1f), 0), (1L, Array(1.0f, 0.0f), 0),
       (2L, Array(-1.0f, 0.1f), 1), (3L, Array(-1.0f, 0.0f), 1))
       .toDF("vec_id", "embedding", "label")
-    val dir = java.nio.file.Files.createTempDirectory("ivfidx").toString + "/idx"
+    val dir = tempDir("ivfidx") + "/idx"
     Similarity.writeIvfIndex(corpus, dir)
     val q = corpus.filter(col("vec_id") === 2)
     val cent = Similarity.centroids(corpus)
@@ -504,7 +504,7 @@ class OperatorsSpec extends SparkSpec {
       (0L, Array(1.0f, 0.1f), 0), (1L, Array(1.0f, 0.0f), 0),
       (2L, Array(-1.0f, 0.1f), 1), (3L, Array(-1.0f, 0.0f), 1))
       .toDF("vec_id", "embedding", "label")
-    val dir = java.nio.file.Files.createTempDirectory("ivflife").toString + "/idx"
+    val dir = tempDir("ivflife") + "/idx"
     Similarity.writeIvfIndex(corpus, dir)
     val cent = Similarity.centroids(corpus)
     // a later batch, no labels: the append path must route each vector

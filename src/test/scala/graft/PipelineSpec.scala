@@ -11,7 +11,7 @@ class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshPipeline(): (ReplayPipeline, TableStore) = {
-    val root = Files.createTempDirectory("graft-store").toString
+    val root = tempDir("store")
     val store = new TableStore(spark, root)
     (new ReplayPipeline(spark, store), store)
   }

@@ -110,7 +110,7 @@ class PixelDecodeSpec extends SparkSpec {
 
   test("streaming phash dedup with decodePixels: re-encoded dup caught against the index") {
     val img = testImage()
-    val root = java.nio.file.Files.createTempDirectory("pix-idx").toString
+    val root = tempDir("pix-idx")
     val idx = s"$root/phash_bands"
     val b0 = mediaDf(Seq((1L, encode(img, "png"))))
     // batch 0 admits the PNG; its PIXEL signature lands in the index
@@ -143,7 +143,7 @@ class PixelDecodeSpec extends SparkSpec {
 
   test("sig_mode marker: byte-mode index rejects pixel-mode access") {
     val img = testImage()
-    val root = java.nio.file.Files.createTempDirectory("pix-idx-b").toString
+    val root = tempDir("pix-idx-b")
     val idx = s"$root/phash_bands"
     StreamingPhashDedup.appendIndex(
       mediaDf(Seq((1L, encode(img, "png")))), idx, 64, 1)

@@ -263,6 +263,35 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("sorted_intersect_count"), s"native verify kernel missing:\n$p")
   }
 
+  test("Spread: no kernel guard is pushed below the round-robin re-spread") {
+    // a deterministic filter over a kernel column crosses Spread's
+    // exchange into the single-task scan, so the kernel would run twice:
+    // once serially there, once in parallel above the exchange
+    def pushedKernels(p: String, kernel: String): Seq[String] = {
+      val lines = p.linesIterator.toIndexedSeq
+      val inScan = lines.filter(l => l.contains("FileScan") &&
+        l.indexOf("DataFilters:") >= 0 &&
+        l.substring(l.indexOf("DataFilters:")).takeWhile(_ != ']').contains(kernel))
+      val underSpread = lines.indices.collect {
+        case i if lines(i).contains("RoundRobinPartitioning") && i + 1 < lines.size &&
+          lines(i + 1).contains("Filter ") && lines(i + 1).contains(kernel) => lines(i + 1)
+      }
+      inScan ++ underSpread
+    }
+    val sketch = graft.operators.MinHashLsh
+      .bandBucketsDirect(Tables.load(spark, sf, "documents"))
+      .queryExecution.executedPlan.toString
+    val pushed = Seq(("bandBucketsDirect", sketch, "minhash_sigs("),
+        ("q34_ngram_jaccard", plan("q34_ngram_jaccard"), "ngram_hashes("),
+        ("q69_containment", plan("q69_containment"), "ngram_hashes(")).flatMap {
+      case (name, p, kernel) =>
+        assert(p.contains("RoundRobinPartitioning") && p.contains(kernel),
+          s"$name: no Spread re-spread over $kernel to audit:\n$p")
+        pushedKernels(p, kernel).map(l => s"$name: ${l.trim}")
+    }
+    assert(pushed.isEmpty, "kernel guards below the exchange:\n" + pushed.mkString("\n"))
+  }
+
   test("ranked top-k filters run through WindowGroupLimit (map-side group cut)") {
     // rank-then-filter must not sort whole partitions: Spark's
     // WindowGroupLimit keeps only each group's top-k BEFORE the

@@ -3,7 +3,6 @@ package graft
 import graft.sources.PollSource
 import graft.store.TableStore
 import graft.streaming.ListingStream
-import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
@@ -48,8 +47,8 @@ class PollSourceSpec extends SparkSpec {
   }
 
   test("ST1 chain over the poll source, with checkpointed restart") {
-    val ckpt = Files.createTempDirectory("graft-poll-ckpt").toString
-    val root = Files.createTempDirectory("graft-poll-store").toString
+    val ckpt = tempDir("poll-ckpt")
+    val root = tempDir("poll-store")
     val store = new TableStore(spark, root)
     val listing = SparkSpec.resource("listing.html")
     val pages = Map(

@@ -3,7 +3,6 @@ package graft
 import graft.ingest.ReplayJson
 import graft.operators.MinHashLsh
 import graft.store.TableStore
-import java.nio.file.Files
 import org.apache.spark.sql.functions.{col, split}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -48,7 +47,7 @@ class PropertySpec extends SparkSpec {
   test("upsert: latest write wins for every key, all keys retained") {
     val batchGen = Gen.nonEmptyListOf(Gen.zip(Gen.choose(1, 20), word))
     for ((b1, b2) <- samples(Gen.zip(batchGen, batchGen), 4)) {
-      val root = Files.createTempDirectory("graft-prop").toString
+      val root = tempDir("prop")
       val store = new TableStore(spark, root)
       store.upsertDPlayers(b1.toDF("id_from_json", "nickname"))
       store.upsertDPlayers(b2.toDF("id_from_json", "nickname"))

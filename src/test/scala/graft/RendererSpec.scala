@@ -4,7 +4,6 @@ import graft.message.{MessageBuilder, Renderer}
 import graft.ingest.ReplayJson
 import graft.pipeline.ReplayPipeline
 import graft.store.TableStore
-import java.nio.file.Files
 
 /** Message rendering over the fixture replay's text_data document
   * (F16/F17): the reference bot's text + embeds, branch-by-branch.
@@ -12,7 +11,7 @@ import java.nio.file.Files
 class RendererSpec extends SparkSpec {
 
   private lazy val textData: String = {
-    val store = new TableStore(spark, Files.createTempDirectory("graft-rend").toString)
+    val store = new TableStore(spark, tempDir("rend"))
     val p = new ReplayPipeline(spark, store)
     p.ingest(500, SparkSpec.resource("replay.html"), SparkSpec.resource("replay-data.json"))
     p.createMessage(500)

@@ -119,13 +119,13 @@ class ReplayIngestSpec extends SparkSpec {
 
   test("PageFetcher: directory double serves S1-S3, missing page → None") {
     import graft.ingest.DirectoryPageFetcher
-    val dir = java.nio.file.Files.createTempDirectory("pages")
+    val dir = tempDir("pages")
     def put(name: String, body: String): Unit =
-      java.nio.file.Files.writeString(dir.resolve(name), body)
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, name), body)
     put("listing.html", SparkSpec.resource("listing.html"))
     put("500.html", SparkSpec.resource("replay.html"))
     put("500.json", SparkSpec.resource("replay-data.json"))
-    val f = new DirectoryPageFetcher(dir.toString)
+    val f = new DirectoryPageFetcher(dir)
     // the three fetches serve the fixture bodies verbatim
     assert(f.listing().exists(_.contains("/games/")))
     assert(f.replayHtml(500).exists(_.nonEmpty))

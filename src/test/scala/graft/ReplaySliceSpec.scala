@@ -5,7 +5,6 @@ import graft.message.MessageBuilder
 import graft.pipeline.ReplayPipeline
 import graft.queries.{ReplayQueries => RQ, ReplayTables}
 import graft.store.TableStore
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -35,7 +34,7 @@ class ReplaySliceSpec extends SparkSpec {
   private val rnd = new Random(7)
 
   private lazy val store: TableStore = {
-    val s = new TableStore(spark, Files.createTempDirectory("graft-slice").toString)
+    val s = new TableStore(spark, tempDir("slice"))
     // ids 13 and 17 never reach d_players; id 7's nickname is NULL
     s.upsertDPlayers((1 to 30).filterNot(Set(13, 17))
       .map(id => (id, Option.when(id != 7)(nicknames(id % nicknames.size))))

@@ -22,9 +22,9 @@ class ReplayStreamSpec extends SparkSpec {
   }
 
   test("stream ingests new replays once, dedups replays across batches") {
-    val in = Files.createTempDirectory("graft-stream-in").toString
-    val ckpt = Files.createTempDirectory("graft-stream-ckpt").toString
-    val root = Files.createTempDirectory("graft-stream-store").toString
+    val in = tempDir("stream-in")
+    val ckpt = tempDir("stream-ckpt")
+    val root = tempDir("stream-store")
     val store = new TableStore(spark, root)
 
     writeDoc(in, "a.json", 600)
@@ -44,9 +44,9 @@ class ReplayStreamSpec extends SparkSpec {
   }
 
   test("stream messages a replay a crashed run ingested but never messaged") {
-    val in = Files.createTempDirectory("graft-stream-resume-in").toString
-    val ckpt = Files.createTempDirectory("graft-stream-resume-ckpt").toString
-    val root = Files.createTempDirectory("graft-stream-resume-store").toString
+    val in = tempDir("stream-resume-in")
+    val ckpt = tempDir("stream-resume-ckpt")
+    val root = tempDir("stream-resume-store")
     val store = new TableStore(spark, root)
     // crash AFTER ingest committed the 5 tables, BEFORE createMessage
     val pipeline = new graft.pipeline.ReplayPipeline(spark, store)
@@ -62,9 +62,9 @@ class ReplayStreamSpec extends SparkSpec {
   }
 
   test("ST1 end-to-end: listing polls drive discover→ingest→message→deliver in one query with checkpoint restart") {
-    val in = Files.createTempDirectory("graft-listing-in").toString
-    val ckpt = Files.createTempDirectory("graft-listing-ckpt").toString
-    val root = Files.createTempDirectory("graft-listing-store").toString
+    val in = tempDir("listing-in")
+    val ckpt = tempDir("listing-ckpt")
+    val root = tempDir("listing-store")
     val store = new TableStore(spark, root)
     val pages = Map(
       501 -> (SparkSpec.resource("replay.html"), SparkSpec.resource("replay-data.json")),
@@ -111,11 +111,11 @@ class ReplayStreamSpec extends SparkSpec {
   }
 
   test("MessageSender seam: file-backed transport, posted-flag idempotence under replay") {
-    val in = Files.createTempDirectory("graft-sender-in").toString
-    val ckpt = Files.createTempDirectory("graft-sender-ckpt").toString
-    val root = Files.createTempDirectory("graft-sender-store").toString
+    val in = tempDir("sender-in")
+    val ckpt = tempDir("sender-ckpt")
+    val root = tempDir("sender-store")
     val store = new TableStore(spark, root)
-    val outFile = Files.createTempDirectory("graft-sender-out").toString + "/sent.log"
+    val outFile = tempDir("sender-out") + "/sent.log"
     val sender = new graft.message.FileMessageSender(outFile)
 
     // discover→ingest→message→deliver in one streaming run
@@ -152,8 +152,8 @@ class ReplayStreamSpec extends SparkSpec {
     // crash between build and send (message exists, never delivered):
     // a build-only run leaves 702 unposted; the next drain picks it up
     // — at-least-once, nothing lost
-    val in2 = Files.createTempDirectory("graft-sender-in2").toString
-    val ckpt2 = Files.createTempDirectory("graft-sender-ckpt2").toString
+    val in2 = tempDir("sender-in2")
+    val ckpt2 = tempDir("sender-ckpt2")
     writeDoc(in2, "d.json", 702)
     ReplayStream.start(spark, store, in2, ckpt2, Trigger.AvailableNow(),
       sender = None).awaitTermination() // build-only: 702 accumulates unposted
@@ -163,9 +163,9 @@ class ReplayStreamSpec extends SparkSpec {
   }
 
   test("drain resumes a replay half-processed by a crashed run") {
-    val in = Files.createTempDirectory("graft-resume-in").toString
-    val ckpt = Files.createTempDirectory("graft-resume-ckpt").toString
-    val root = Files.createTempDirectory("graft-resume-store").toString
+    val in = tempDir("resume-in")
+    val ckpt = tempDir("resume-ckpt")
+    val root = tempDir("resume-store")
     val store = new TableStore(spark, root)
     val html = SparkSpec.resource("replay.html")
     val json = SparkSpec.resource("replay-data.json")

@@ -84,7 +84,7 @@ class SemDedupScaleSpec extends SparkSpec {
       (2L, Array(-1.0f, 0.1f), 1), (3L, Array(-1.0f, 0.0f), 1))
       .toDF("vec_id", "embedding", "label")
     val cent = Similarity.centroids(corpus)
-    val dir = java.nio.file.Files.createTempDirectory("semidx").toString + "/idx"
+    val dir = tempDir("semidx") + "/idx"
     val kept = corpus.drop("label")
       .join(Similarity.semDedup(corpus, cent, threshold = 0.99)
         .filter(col("kept")).select(col("vec_id"), col("cluster").as("label")),

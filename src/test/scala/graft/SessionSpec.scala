@@ -19,7 +19,8 @@ class SessionSpec extends SparkSpec {
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
       "spark.ui.enabled" -> "false",
-      "spark.cleaner.periodicGC.interval" -> "30s"))
+      "spark.cleaner.periodicGC.interval" -> "30s",
+      "spark.sql.codegen.cache.maxEntries" -> "1000"))
     val conf = spark.sparkContext.getConf
     expected.foreach { case (k, v) =>
       assert(conf.getOption(k).contains(v), s"SparkConf $k")

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared test session: one local SparkSession per JVM (forked sbt test
@@ -17,8 +18,22 @@ object SparkSpec {
   }
 }
 
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.spark
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+
+  /** A fresh `graft-<prefix>…` temp dir, deleted with everything under
+    * it when this suite ends. */
+  def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(s"graft-$prefix").toFile
+    tempDirs.add(d)
+    d.toString
+  }
+
+  override protected def afterAll(): Unit =
+    try tempDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d))
+    finally super.afterAll()
 
   /** Rows as a sorted list of plain-value sequences, for order-insensitive
     * exact comparison. */

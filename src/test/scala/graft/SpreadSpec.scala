@@ -13,7 +13,7 @@ class SpreadSpec extends SparkSpec {
   import spark.implicits._
 
   test("tiny file scan re-spreads to session parallelism, rows unchanged") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-spread").toString
+    val dir = tempDir("spread")
     (1L to 100L).map(i => (i, s"row $i")).toDF("id", "s")
       .coalesce(1).write.mode("overwrite").parquet(dir)
     val scan = spark.read.parquet(dir)

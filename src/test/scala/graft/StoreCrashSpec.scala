@@ -16,7 +16,7 @@ class StoreCrashSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshStore(): (TableStore, String) = {
-    val root = Files.createTempDirectory("graft-crash").toString
+    val root = tempDir("crash")
     (new TableStore(spark, root), root)
   }
 

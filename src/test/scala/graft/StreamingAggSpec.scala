@@ -1,7 +1,7 @@
 package graft
 
 import graft.Tables
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Paths, StandardCopyOption}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -14,7 +14,7 @@ class StreamingAggSpec extends SparkSpec {
   test("streamed hourly windowed agg matches the batch rollup") {
     val sf = "/root/testdata/sf0.001"
     // file-source needs a directory; materialize the (nanos-fixed) events
-    val dir = Files.createTempDirectory("graft-events").toString
+    val dir = tempDir("events")
     Tables.load(spark, sf, "events").write.parquet(s"$dir/data")
 
     val streamed = spark.readStream

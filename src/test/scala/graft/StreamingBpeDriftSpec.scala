@@ -15,8 +15,8 @@ class StreamingBpeDriftSpec extends SparkSpec {
 
   test("per-batch fertility log equals batch stats; drifted batch shows OOV") {
     implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("bpedrift").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("bpedrift-ckpt").toString
+    val dir = tempDir("bpedrift")
+    val ckpt = tempDir("bpedrift-ckpt")
     val train = Seq((0L, "low low lower lowest low lower"))
       .toDF("doc_id", "text")
     val (_, vocab) = Bpe.learn(Bpe.wordFreq(train), nMerges = 4)

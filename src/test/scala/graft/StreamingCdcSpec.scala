@@ -15,7 +15,7 @@ class StreamingCdcSpec extends SparkSpec {
 
   test("streamed snapshot == batch cdcApply; deletes drop keys across batches") {
     implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-cdc").toString
+    val dir = tempDir("cdc")
     val snap = s"$dir/snapshot"
     val log = MemoryStream[(Long, Timestamp, Long, String, Long)]
     val q = StreamingCdc.run(
@@ -49,7 +49,7 @@ class StreamingCdcSpec extends SparkSpec {
 
   test("a crash between the swap renames is recovered from the .old aside") {
     implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-cdc2").toString
+    val dir = tempDir("cdc2")
     val snap = s"$dir/snapshot"
     val log = MemoryStream[(Long, Timestamp, Long, String, Long)]
     val q = StreamingCdc.run(

@@ -96,8 +96,8 @@ class StreamingCurriculumPackSpec extends SparkSpec {
 
   test("accumulated curriculum log equals the one-shot composite-order pack") {
     implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("curpack").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("curpack-ck").toString
+    val dir = tempDir("curpack")
+    val ckpt = tempDir("curpack-ck")
     val in = MemoryStream[(Long, String)]
     val q = StreamingCurriculumPack.start(
       in.toDF().toDF("doc_id", "text"),
@@ -117,7 +117,7 @@ class StreamingCurriculumPackSpec extends SparkSpec {
   }
 
   test("replaying a committed curriculum batch overwrites to the same state") {
-    val dir = java.nio.file.Files.createTempDirectory("curpack-rp").toString
+    val dir = tempDir("curpack-rp")
     val path = s"$dir/shards"
     def apply(b: Seq[(Long, String)], id: Long): Unit =
       StreamingCurriculumPack.applyBatch(

@@ -30,8 +30,8 @@ class StreamingDecontaminateSpec extends SparkSpec {
 
   test("accumulated clean table ≡ batch bloomClean; log exact; replay idempotent") {
     implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("sdecon").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("sdecon-ck").toString
+    val dir = tempDir("sdecon")
+    val ckpt = tempDir("sdecon-ck")
     val evalGrams = Decontaminate.evalGramSet(
       evalDocs.toDF("doc_id", "text"), n = 6)
     val bloom = Decontaminate.bloomBytesOf(evalGrams)

@@ -14,8 +14,8 @@ class StreamingDriftSpec extends SparkSpec {
 
   test("per-batch KS log equals batch KS; shifted batch drifts more") {
     implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("drift").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("drift-ckpt").toString
+    val dir = tempDir("drift")
+    val ckpt = tempDir("drift-ckpt")
     val refVals = (1 to 100).map(_.toDouble)
     val ref = Drift.centsHist(refVals.toDF("value"), col("value"))
       .localCheckpoint()

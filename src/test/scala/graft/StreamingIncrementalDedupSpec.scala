@@ -1,7 +1,6 @@
 package graft
 
 import graft.streaming.StreamingIncrementalDedup
-import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
@@ -15,8 +14,8 @@ class StreamingIncrementalDedupSpec extends SparkSpec {
   test("batches dedup against themselves and the growing corpus") {
     implicit val ctx = spark.sqlContext
     val in = MemoryStream[(Long, String)]
-    val corpus = Files.createTempDirectory("graft-inc-dedup").toString + "/corpus"
-    val ckpt = Files.createTempDirectory("graft-inc-ckpt").toString
+    val corpus = tempDir("inc-dedup") + "/corpus"
+    val ckpt = tempDir("inc-ckpt")
     val q = StreamingIncrementalDedup.start(
       in.toDF().toDF("doc_id", "text"), corpus, ckpt,
       threshold = 0.2, trigger = Trigger.ProcessingTime("25 milliseconds"))
@@ -41,8 +40,8 @@ class StreamingIncrementalDedupSpec extends SparkSpec {
   test("replayed docs never re-append, even shingle-empty short docs") {
     implicit val ctx = spark.sqlContext
     val in = MemoryStream[(Long, String)]
-    val corpus = Files.createTempDirectory("graft-inc-dedup2").toString + "/corpus"
-    val ckpt = Files.createTempDirectory("graft-inc-ckpt2").toString
+    val corpus = tempDir("inc-dedup2") + "/corpus"
+    val ckpt = tempDir("inc-ckpt2")
     val q = StreamingIncrementalDedup.start(
       in.toDF().toDF("doc_id", "text"), corpus, ckpt,
       threshold = 0.2, trigger = Trigger.ProcessingTime("25 milliseconds"))
@@ -63,8 +62,8 @@ class StreamingIncrementalDedupSpec extends SparkSpec {
   test("persisted band index tracks the corpus and matches direct sketching") {
     implicit val ctx = spark.sqlContext
     val in = MemoryStream[(Long, String)]
-    val corpus = Files.createTempDirectory("graft-inc-dedup3").toString + "/corpus"
-    val ckpt = Files.createTempDirectory("graft-inc-ckpt3").toString
+    val corpus = tempDir("inc-dedup3") + "/corpus"
+    val ckpt = tempDir("inc-ckpt3")
     val q = StreamingIncrementalDedup.start(
       in.toDF().toDF("doc_id", "text"), corpus, ckpt,
       threshold = 0.2, trigger = Trigger.ProcessingTime("25 milliseconds"))
@@ -101,9 +100,9 @@ class StreamingIncrementalDedupSpec extends SparkSpec {
     implicit val ctx = spark.sqlContext
     import org.apache.hadoop.fs.Path
     val in = MemoryStream[(Long, String)]
-    val root = Files.createTempDirectory("graft-inc-dedup5").toString
+    val root = tempDir("inc-dedup5")
     val corpus = root + "/corpus"
-    val ckpt = Files.createTempDirectory("graft-inc-ckpt5").toString
+    val ckpt = tempDir("inc-ckpt5")
     val q = StreamingIncrementalDedup.start(
       in.toDF().toDF("doc_id", "text"), corpus, ckpt,
       threshold = 0.2, trigger = Trigger.ProcessingTime("25 milliseconds"))
@@ -130,8 +129,8 @@ class StreamingIncrementalDedupSpec extends SparkSpec {
   test("periodic compaction bounds index files; probe results unchanged") {
     implicit val ctx = spark.sqlContext
     val in = MemoryStream[(Long, String)]
-    val corpus = Files.createTempDirectory("graft-inc-dedup4").toString + "/corpus"
-    val ckpt = Files.createTempDirectory("graft-inc-ckpt4").toString
+    val corpus = tempDir("inc-dedup4") + "/corpus"
+    val ckpt = tempDir("inc-ckpt4")
     // per-band files pile up one per batch; compact every 4 batches
     val q = StreamingIncrementalDedup.start(
       in.toDF().toDF("doc_id", "text"), corpus, ckpt,

@@ -47,8 +47,8 @@ class StreamingPerplexityGateSpec extends SparkSpec {
 
   test("frozen-LM gate: kept ≡ one-shot, fail-closed rules, audit exact, replay idempotent") {
     implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("sppl").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("sppl-ck").toString
+    val dir = tempDir("sppl")
+    val ckpt = tempDir("sppl-ck")
     val theLm = lm.localCheckpoint()
     val theCuts = cutoffs
 

@@ -25,8 +25,8 @@ class StreamingQualityDriftSpec extends SparkSpec {
 
   test("per-batch quality log equals batch stats; degraded batch scores lower") {
     implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("qdrift").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("qdrift-ckpt").toString
+    val dir = tempDir("qdrift")
+    val ckpt = tempDir("qdrift-ckpt")
     val inDist = Tables.load(spark, "/root/testdata/sf0.001", "documents")
       .select(col("doc_id"), col("text"))
       .orderBy(col("doc_id")).limit(30)

@@ -24,8 +24,8 @@ class StreamingRedactSpec extends SparkSpec {
 
   test("accumulated scrubbed table ≡ batch redact; log exact; replay idempotent") {
     implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("sredact").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("sredact-ck").toString
+    val dir = tempDir("sredact")
+    val ckpt = tempDir("sredact-ck")
 
     val in = MemoryStream[(Long, String)]
     val q = StreamingRedact.start(

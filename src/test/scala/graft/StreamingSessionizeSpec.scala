@@ -1,7 +1,6 @@
 package graft
 
 import graft.streaming.StreamingSessionize
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -12,7 +11,7 @@ class StreamingSessionizeSpec extends SparkSpec {
 
   test("streamed sessions equal batch q40 sessions that have closed") {
     val sf = "/root/testdata/sf0.001"
-    val dir = Files.createTempDirectory("graft-sess").toString
+    val dir = tempDir("sess")
     Tables.load(spark, sf, "events").write.parquet(s"$dir/data")
 
     val streamed = StreamingSessionize.sessions(

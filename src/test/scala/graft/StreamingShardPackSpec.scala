@@ -24,8 +24,8 @@ class StreamingShardPackSpec extends SparkSpec {
 
   test("accumulated shard log equals the one-shot pack across batches") {
     implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("shardpack").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("shardpack-ck").toString
+    val dir = tempDir("shardpack")
+    val ckpt = tempDir("shardpack-ck")
     val in = MemoryStream[(Long, Seq[String])]
     // NOT AvailableNow: that trigger snapshots available offsets at
     // start() — before any addData — and finishes with zero batches.
@@ -55,8 +55,8 @@ class StreamingShardPackSpec extends SparkSpec {
 
   test("manifest shard log merges to the one-shot boundaries pack") {
     implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("shardpack-mf").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("shardpack-mf-ck").toString
+    val dir = tempDir("shardpack-mf")
+    val ckpt = tempDir("shardpack-mf-ck")
     val in = MemoryStream[(Long, Seq[String])]
     val q = StreamingShardPack.start(
       in.toDF().toDF("doc_id", "tokens"),
@@ -89,7 +89,7 @@ class StreamingShardPackSpec extends SparkSpec {
   }
 
   test("replaying a committed batch overwrites to the same end state") {
-    val dir = java.nio.file.Files.createTempDirectory("shardpack-rp").toString
+    val dir = tempDir("shardpack-rp")
     val path = s"$dir/shards"
     StreamingShardPack.applyBatch(b1.toDF("doc_id", "tokens"), 0L, path, 4)
     StreamingShardPack.applyBatch(b2.toDF("doc_id", "tokens"), 1L, path, 4)

@@ -14,8 +14,8 @@ class StreamingSketchSpec extends SparkSpec {
 
   test("maintained sketch equals the batch sketch over all ingested tokens") {
     implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("sketch").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("sketch-ckpt").toString
+    val dir = tempDir("sketch")
+    val ckpt = tempDir("sketch-ckpt")
     val in = MemoryStream[String]
     val q = StreamingSketch.maintain(
       in.toDF().toDF("term"), s"$dir/cm", s"$ckpt/cm")
@@ -35,7 +35,7 @@ class StreamingSketchSpec extends SparkSpec {
   }
 
   test("a replayed batch overwrites its own delta instead of double-counting") {
-    val dir = java.nio.file.Files.createTempDirectory("sketch-replay").toString
+    val dir = tempDir("sketch-replay")
     val batch = Seq("a", "b", "a").toDF("term")
     // simulate foreachBatch retry: the same batchId delta written twice
     Seq(1, 2).foreach { _ =>

@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.Similarity
 import graft.streaming.StreamingVectorIngest
-import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -21,8 +20,8 @@ class StreamingVectorIngestSpec extends SparkSpec {
   test("batches append routed; probe ≡ direct; replay appends nothing") {
     implicit val ctx = spark.sqlContext
     val corpus = seedCorpus.toDF("vec_id", "embedding", "label")
-    val dir = Files.createTempDirectory("graft-vec-ingest").toString + "/idx"
-    val ckpt = Files.createTempDirectory("graft-vec-ckpt").toString
+    val dir = tempDir("vec-ingest") + "/idx"
+    val ckpt = tempDir("vec-ckpt")
     Similarity.writeIvfIndex(corpus, dir)
     val cent = Similarity.centroids(corpus).localCheckpoint()
 
@@ -66,8 +65,8 @@ class StreamingVectorIngestSpec extends SparkSpec {
   test("a shifted batch trips the re-fit gate in the drift log") {
     implicit val ctx = spark.sqlContext
     val corpus = seedCorpus.toDF("vec_id", "embedding", "label")
-    val dir = Files.createTempDirectory("graft-vec-ingest2").toString + "/idx"
-    val ckpt = Files.createTempDirectory("graft-vec-ckpt2").toString
+    val dir = tempDir("vec-ingest2") + "/idx"
+    val ckpt = tempDir("vec-ckpt2")
     Similarity.writeIvfIndex(corpus, dir)
     val cent = Similarity.centroids(corpus).localCheckpoint()
     val in = MemoryStream[(Long, Array[Float])]

@@ -26,8 +26,7 @@ class TokenizerLifecycleSpec extends SparkSpec {
     // v1: two merges — (a,b) then (ab,c) — fully collapse the en vocab
     val (m1, v1) = Bpe.learn(Bpe.wordFreq(en), nMerges = 2)
     assert(m1.map(m => (m.lhs, m.rhs)) === Seq(("a", "b"), ("ab", "c")))
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-tok-lifecycle").toString
+    val tmp = tempDir("tok-lifecycle")
     Bpe.writeTokenizer(s"$tmp/v1", m1, v1)
 
     // the monitor readout shows the rot: every drifted word is OOV

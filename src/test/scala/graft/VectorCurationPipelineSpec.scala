@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.Similarity
 import graft.streaming.VectorCurationPipeline
-import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -28,8 +27,8 @@ class VectorCurationPipelineSpec extends SparkSpec {
       (0L, vec(5.71), 0), (1L, vec(0.0), 0),
       (2L, vec(174.29), 1), (3L, vec(180.0), 1))
       .toDF("vec_id", "embedding", "label")
-    val root = Files.createTempDirectory("graft-cur").toString + "/vecs"
-    val ckpt = Files.createTempDirectory("graft-cur-ckpt").toString
+    val root = tempDir("cur") + "/vecs"
+    val ckpt = tempDir("cur-ckpt")
     VectorCurationPipeline.init(spark, seed, root)
     assert(VectorCurationPipeline.currentGen(spark, root) == 0L)
 
@@ -97,8 +96,8 @@ class VectorCurationPipelineSpec extends SparkSpec {
       (0L, vec(5.71), 0), (1L, vec(0.0), 0),
       (2L, vec(174.29), 1), (3L, vec(180.0), 1))
       .toDF("vec_id", "embedding", "label")
-    val root = java.nio.file.Files.createTempDirectory("graft-cur2").toString + "/vecs"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-cur2-ckpt").toString
+    val root = tempDir("cur2") + "/vecs"
+    val ckpt = tempDir("cur2-ckpt")
     VectorCurationPipeline.init(spark, seed, root)
     val in = MemoryStream[(Long, Array[Float])]
     val q = VectorCurationPipeline.start(
