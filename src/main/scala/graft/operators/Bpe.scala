@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -117,90 +119,14 @@ object Bpe {
          |  x -> x))""".stripMargin)
   }
 
-  // Blocks.checkpointTracked checkpoints a frame and returns it with
-  // the ids of the blocks the checkpoint just pinned, so a later round can release EXACTLY its
-  // predecessor's blocks. Without the release a learn call holds
-  // ~nRounds copies of the vocab frame until the ContextCleaner
-  // happens to run — the block-residue failure mode the r7 harness
-  // fix removed, kept out of the operator too. The pinned RDD is read
-  // off the checkpointed frame's own plan (localCheckpoint rewrites
-  // it to a LogicalRDD wrapping the persisted RDD) — never a global
-  // getPersistentRDDs delta, which under a concurrent persist (a
-  // parallel suite, a streaming query) would catch an unrelated live
-  // RDD and Blocks.release would unpersist it.
-  //
-  // `eager = false` (the r16 hot-loop setting) defers materialization
-  // into the NEXT job that reads the frame — per round the dedicated
-  // checkpoint job disappears and the round's one argmax collect
-  // forces everything (guide §1/§2: each action is a full
-  // driver round-trip + cluster barrier; the loops here were
-  // action-bound, not compute-bound, in the r16 profile). Lazy
-  // checkpoints shift the release discipline: a lazily-checkpointed
-  // RDD must NOT be unpersisted before it materializes (truncated
-  // lineage = unrecomputable), so superseded blocks are released one
-  // collect AFTER the collect that materialized their successor —
-  // see the relAfter queues in the loops below.
-
   /** Learn up to `nMerges` BPE merges over a (w, freq) vocabulary.
     * Returns the merge table and the final per-word symbol state
     * (w, freq, syms) — the encoded vocabulary [[encodeStats]] joins
     * against. Stops early (with fewer merges) once no adjacent pair
-    * remains. Driver state is ONE (lhs, rhs, count) row per round. */
-  def learn(words: DataFrame, nMerges: Int): (Seq[Merge], DataFrame) = {
-    require(nMerges >= 1, "Bpe.learn needs nMerges >= 1")
-    // vocab-sized; checkpoint so each round's jobs start from
-    // materialized state instead of re-deriving every earlier fold.
-    // Lazy: round 1's argmax collect materializes it.
-    val (syms, symsIds) = Blocks.checkpointTracked(initialSymbols(words), eager = false)
-    learnLoop(syms, symsIds, prior = Nil, nMore = nMerges)
-  }
-
-  /** The sequential learning recurrence shared by [[learn]] (prior =
-    * empty, seed state = character split) and [[learnContinue]]
-    * (prior = a frozen merge table, seed state = its persisted
-    * vocabulary state): `nMore` rounds of argmax → greedy fold →
-    * checkpoint, ranks continuing after `prior`. Takes ownership of
-    * the already-checkpointed seed state and its block ids. */
-  private def learnLoop(
-      syms0: DataFrame,
-      symsIds0: Set[Int],
-      prior: Seq[Merge],
-      nMore: Int): (Seq[Merge], DataFrame) = {
-    var syms = syms0
-    var symsIds = symsIds0
-    // ids of the round-before-last's state: its successor materialized
-    // in the collect that just ran, so it is now safe to release (a
-    // LAZY checkpoint released before its dependents materialize would
-    // be unrecomputable — lineage is truncated)
-    var relAfter: Set[Int] = Set.empty
-    val merges = Seq.newBuilder[Merge]
-    merges ++= prior
-    var rank = prior.size + 1
-    val maxRank = prior.size + nMore
-    var exhausted = false
-    while (rank <= maxRank && !exhausted) {
-      // the ONE action per round: forces the (lazy) current state too
-      val top = pairCounts(syms)
-        .orderBy(col("pair_count").desc, col("lhs"), col("rhs"))
-        .limit(1).collect()
-      Blocks.release(syms, relAfter)
-      relAfter = Set.empty
-      if (top.isEmpty) exhausted = true
-      else {
-        val (l, r, c) =
-          (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += Merge(rank, l, r, c)
-        val (next, nextIds) = Blocks.checkpointTracked(syms.withColumn("syms",
-          graft.functions.BpeFold.bpe_fold(col("syms"), Seq((l, r)))),
-          eager = false)
-        relAfter = symsIds
-        syms = next
-        symsIds = nextIds
-        rank += 1
-      }
-    }
-    (merges.result(), syms)
-  }
+    * remains. Driver state is ONE (lhs, rhs, count) row per round.
+    * This is [[learnBatched]] with one merge per round. */
+  def learn(words: DataFrame, nMerges: Int): (Seq[Merge], DataFrame) =
+    learnBatched(words, nMerges, batchSize = 1)
 
   /** Continue BPE learning from a persisted tokenizer: `state` is the
     * (w, freq, syms) vocabulary state a prior learn returned (or
@@ -221,9 +147,8 @@ object Bpe {
       prior: Seq[Merge],
       nMore: Int): (Seq[Merge], DataFrame) = {
     require(nMore >= 1, "Bpe.learnContinue needs nMore >= 1")
-    val (syms, symsIds) = Blocks.checkpointTracked(
-      state.select(col("w"), col("freq"), col("syms")), eager = false)
-    learnLoop(syms, symsIds, prior, nMore)
+    recountLoop(state.select(col("w"), col("freq"), col("syms")), prior,
+      nMore, batchSize = 1)
   }
 
   /** Rebuild the (w, freq, syms) encoder state of a FRESH (w, freq)
@@ -333,6 +258,64 @@ object Bpe {
     * with another and no pair created mid-round would have outranked
     * the batch — the usual batched-BPE caveat; the merge table is its
     * own deterministic, oracle-replayable recurrence either way. */
+  def learnBatched(
+      words: DataFrame,
+      nRounds: Int,
+      batchSize: Int): (Seq[Merge], DataFrame) = {
+    require(nRounds >= 1, "Bpe.learnBatched needs nRounds >= 1")
+    require(batchSize >= 1, "Bpe.learnBatched needs batchSize >= 1")
+    recountLoop(initialSymbols(words), prior = Nil, nRounds, batchSize)
+  }
+
+  /** The recount recurrence behind [[learn]], [[learnContinue]] and
+    * [[learnBatched]]: `nRounds` rounds of pool collect → batch → one
+    * native fold → checkpoint over the seed `state`, ranks continuing
+    * after `prior`. Checkpoints are LAZY: the round's one action, the
+    * pool collect, materializes the state it reads, so no round pays a
+    * dedicated checkpoint job (the loop is action-bound, r16 profile). */
+  private def recountLoop(
+      state: DataFrame,
+      prior: Seq[Merge],
+      nRounds: Int,
+      batchSize: Int): (Seq[Merge], DataFrame) = {
+    val blocks = new Blocks
+    var syms = blocks.checkpoint(state, eager = false)
+    val merges = mutable.ArrayBuffer.from(prior)
+    var round = 0
+    var exhausted = false
+    while (round < nRounds && !exhausted) {
+      val batch = nextBatch(pairCounts(syms), batchSize, merges)
+      if (batch.isEmpty) exhausted = true
+      else {
+        // whole batch in ONE native fold (rank order) — the chained
+        // aggregate lambdas here were the depth run's 64 KB ceiling
+        val next = blocks.checkpoint(syms.withColumn("syms",
+          graft.functions.BpeFold.bpe_fold(col("syms"), batch)), eager = false)
+        blocks.retire(syms)
+        syms = next
+      }
+      round += 1
+    }
+    (merges.toSeq, syms)
+  }
+
+  /** The round's one action, shared by both learn loops: the top
+    * 4·batchSize rows of a (lhs, rhs, pair_count) frame by (count DESC,
+    * lhs, rhs) — driver state bounded by the pool, never the pair table
+    * — filtered by [[acceptBatch]], appended to `merges` with the next
+    * ranks, and returned as the (lhs, rhs) pairs to fold in rank order.
+    * Empty once no pair remains. */
+  private def nextBatch(counts: DataFrame, batchSize: Int,
+      merges: mutable.ArrayBuffer[Merge]): Seq[(String, String)] = {
+    val batch = acceptBatch(counts
+      .orderBy(col("pair_count").desc, col("lhs"), col("rhs"))
+      .limit(4 * batchSize).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq,
+      batchSize)
+    batch.foreach { case (l, r, c) => merges += Merge(merges.size + 1, l, r, c) }
+    batch.map { case (l, r, _) => (l, r) }
+  }
+
   /** The rank-prefix conflict rule shared by [[learnBatched]] and
     * [[learnDelta]]: a pool candidate is disqualified if it shares a
     * symbol with ANY higher-ranked candidate (its lhs/rhs overlapping
@@ -355,49 +338,6 @@ object Bpe {
       }
     }
     accepted.result()
-  }
-
-  def learnBatched(
-      words: DataFrame,
-      nRounds: Int,
-      batchSize: Int): (Seq[Merge], DataFrame) = {
-    require(nRounds >= 1, "Bpe.learnBatched needs nRounds >= 1")
-    require(batchSize >= 1, "Bpe.learnBatched needs batchSize >= 1")
-    val pool = 4 * batchSize
-    var (syms, symsIds) =
-      Blocks.checkpointTracked(initialSymbols(words), eager = false)
-    // lazy-checkpoint release discipline — see learnLoop
-    var relAfter: Set[Int] = Set.empty
-    val merges = Seq.newBuilder[Merge]
-    var rank = 1
-    var round = 0
-    var exhausted = false
-    while (round < nRounds && !exhausted) {
-      val top = pairCounts(syms)
-        .orderBy(col("pair_count").desc, col("lhs"), col("rhs"))
-        .limit(pool).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
-      Blocks.release(syms, relAfter)
-      relAfter = Set.empty
-      if (top.isEmpty) exhausted = true
-      else {
-        val batch = acceptBatch(top, batchSize)
-        batch.foreach { case (l, r, c) =>
-          merges += Merge(rank, l, r, c)
-          rank += 1
-        }
-        // whole batch in ONE native fold (rank order) — the chained
-        // aggregate lambdas here were the depth run's 64 KB ceiling
-        val (next, nextIds) = Blocks.checkpointTracked(syms.withColumn("syms",
-          graft.functions.BpeFold.bpe_fold(col("syms"),
-            batch.map { case (l, r, _) => (l, r) })), eager = false)
-        relAfter = symsIds
-        syms = next
-        symsIds = nextIds
-      }
-      round += 1
-    }
-    (merges.result(), syms)
   }
 
   /** DELTA-maintained BPE learning: identical merge table and final
@@ -447,38 +387,16 @@ object Bpe {
       broadcastDelta: Boolean = true): (Seq[Merge], DataFrame) = {
     require(nRounds >= 1, "Bpe.learnDelta needs nRounds >= 1")
     require(batchSize >= 1, "Bpe.learnDelta needs batchSize >= 1")
-    val pool = 4 * batchSize
-    var (syms, symsIds) = Blocks.checkpointTracked(initialSymbols(words), eager = false)
-    var (counts, countIds) = Blocks.checkpointTracked(pairCounts(syms), eager = false)
-    // Lazy-checkpoint release queues (see the note above learn). The one
-    // action per round is the pool collect, which reads the maintained
-    // count table; the delta and the NEXT count table materialize
-    // inside the FOLLOWING round's collect, and the next symbol state
-    // only inside the collect after THAT (its first reader is that
-    // round's delta). Hence two delays: counts/delta ids release one
-    // collect after being superseded, syms ids two collects after.
-    var relAfter1: Set[Int] = Set.empty // release after the next collect
-    var relAfter2: Set[Int] = Set.empty // ... after the collect after that
-    val merges = Seq.newBuilder[Merge]
-    var rank = 1
+    val blocks = new Blocks
+    var syms = blocks.checkpoint(initialSymbols(words), eager = false)
+    var counts = blocks.checkpoint(pairCounts(syms), eager = false)
+    val merges = mutable.ArrayBuffer.empty[Merge]
     var round = 0
     var exhausted = false
     while (round < nRounds && !exhausted) {
-      val top = counts
-        .orderBy(col("pair_count").desc, col("lhs"), col("rhs"))
-        .limit(pool).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
-      Blocks.release(counts, relAfter1)
-      relAfter1 = relAfter2
-      relAfter2 = Set.empty
-      if (top.isEmpty) exhausted = true
+      val batchPairs = nextBatch(counts, batchSize, merges)
+      if (batchPairs.isEmpty) exhausted = true
       else {
-        val batch = acceptBatch(top, batchSize)
-        batch.foreach { case (l, r, c) =>
-          merges += Merge(rank, l, r, c)
-          rank += 1
-        }
-        val batchPairs = batch.map { case (l, r, _) => (l, r) }
         val affectedPred =
           graft.functions.BpeFold.bpe_has_adjacent(col("syms"), batchPairs)
         val affected = syms.filter(affectedPred)
@@ -488,7 +406,7 @@ object Bpe {
         // exact per-pair delta of the round, checkpointed once (it is
         // read by three joins below — all inside the next count
         // table's plan, so the next round's collect materializes it)
-        val (delta, deltaIds) = Blocks.checkpointTracked(
+        val delta = blocks.checkpoint(
           signedPairs(after, 1).union(signedPairs(affected, -1))
             .groupBy(col("lhs"), col("rhs"))
             .agg(sum(col("freq")).as("d"))
@@ -523,18 +441,15 @@ object Bpe {
           when(affectedPred,
             graft.functions.BpeFold.bpe_fold(col("syms"), batchPairs))
             .otherwise(col("syms")))
-        val (cpCounts, cpCountIds) = Blocks.checkpointTracked(nextCounts, eager = false)
-        val (cpSyms, cpSymsIds) = Blocks.checkpointTracked(nextSyms, eager = false)
-        relAfter1 ++= countIds ++ deltaIds
-        relAfter2 ++= symsIds
+        val cpCounts = blocks.checkpoint(nextCounts, eager = false)
+        val cpSyms = blocks.checkpoint(nextSyms, eager = false)
+        Seq(counts, delta, syms).foreach(blocks.retire)
         counts = cpCounts
-        countIds = cpCountIds
         syms = cpSyms
-        symsIds = cpSymsIds
       }
       round += 1
     }
-    (merges.result(), syms)
+    (merges.toSeq, syms)
   }
 
   /** Merge table as a DataFrame: (rank, lhs, rhs, pair_count). */

@@ -59,11 +59,8 @@ object DedupGroups {
     // lazy: `labels` is scanned by 2-3 legs per round (own-flag union,
     // neighbor join, shortcut self-join), and lazy frames under
     // concurrent legs recompute their tail per leg (measured — see
-    // MinHashLsh.nearDuplicates). Superseded round frames are released
-    // EXPLICITLY the moment their successor is materialized (r17 —
-    // relying on the ContextCleaner let ~rounds×partitions blocks
-    // pile up for the whole query; the r16 driver bench measured the
-    // family's second pass 1.6-2.7× slower inside that residue).
+    // MinHashLsh.nearDuplicates). Each superseded round goes to
+    // `blocks.retire`, which frees it once its eager successor exists.
     // the r16 snapshot commit hash-partitioned this frame by the join
     // key (exchange-labels-only, guide §2.4) — REMOVED in r17 after
     // measuring it in isolation: pinning the bench-scale edge set to
@@ -72,10 +69,11 @@ object DedupGroups {
     // with vs 2.64 s without, q101 4.85 vs 4.48; plans/r17 notes). At
     // 100 TB the same idea belongs in a BUCKETED edge table, not a
     // per-query repartition.
-    val (edges, edgeIds) = Blocks.checkpointTracked(
+    val blocks = new Blocks
+    val edges = blocks.checkpoint(
       pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
         .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))))
-    var (labels, labelIds) = Blocks.checkpointTracked(
+    var labels = blocks.checkpoint(
       edges.select(col("src").as("doc_id")).distinct()
         .withColumn("group_id", col("doc_id")))
     var round = 0
@@ -96,7 +94,7 @@ object DedupGroups {
       // no-arg Observation: UUID-named, so two concurrent CC loops in
       // one session can never cross-match metrics by name
       val obs = new org.apache.spark.sql.Observation()
-      val (next, nextIds) = Blocks.checkpointTracked(
+      val next = blocks.checkpoint(
         (Seq(labels.withColumn("own", lit(true)), viaNeighbor)
           ++ viaShortcut)
           .reduce(_ union _)
@@ -106,17 +104,13 @@ object DedupGroups {
           .observe(obs,
             count(when(col("group_id") =!= col("prev"), lit(1))).as("changed")))
       converged = obs.get("changed").asInstanceOf[Long] == 0L
-      // the eager checkpoint above materialized `next`, so round N-1's
-      // blocks are garbage NOW — release them instead of letting them
-      // ride to the end of the query
-      Blocks.release(labels, labelIds)
+      blocks.retire(labels)
       labels = next.drop("prev")
-      labelIds = nextIds
       round += 1
     }
     // the returned frame is a self-contained eager checkpoint — the
     // (larger) edge blocks are dead weight from here
-    Blocks.release(edges, edgeIds)
+    blocks.retire(edges)
     require(converged, s"connectedComponents did not converge in $maxRounds rounds")
     labels
   }

@@ -243,10 +243,13 @@ object Graph {
     * (q158 2.15→1.6s class win) — while the FUSED fixed-round ops
     * here stay EAGER: a lazy frame scanned by several concurrent
     * plan legs races ahead of the block cache and recomputes its
-    * tail per leg (q87 read 1.45× slower all-lazy). Blocks are
-    * ContextCleaner-released when the frame is GC'd; on a cluster
-    * with executor churn, a persisted/bucketed edge TABLE (the ANN
-    * index-build split) replaces this. */
+    * tail per leg (q87 read 1.45× slower all-lazy). Checkpoints go
+    * through [[Blocks]]: with per-round materialization each superseded
+    * round is released as its successor materializes, and the edge
+    * frames once the last round is done; fused, they stay pinned by the
+    * returned plan. On a cluster with executor churn, a
+    * persisted/bucketed edge TABLE (the ANN index-build split) replaces
+    * this. */
   def pageRank(edges: DataFrame, iterations: Int, dampingPct: Int = 85): DataFrame =
     // contrib with w ≡ 1 reduces to rank·d div (100·deg) exactly
     pageRankWeighted(edges.withColumn("w", lit(1L)), iterations, dampingPct)
@@ -281,8 +284,6 @@ object Graph {
       broadcastNodes: Boolean = true): DataFrame = {
     require(iterations >= 1, "pageRank needs at least one iteration")
     require(dampingPct > 0 && dampingPct < 100, "dampingPct must be in (0, 100)")
-    def nodeSide(df: DataFrame): DataFrame =
-      if (broadcastNodes) broadcast(df) else df
     // adaptive round fusion (see PerRoundCheckpointStatsBytes): small
     // graphs fuse all rounds into one plan; big graphs materialize each
     // round so round k's broadcast build never re-embeds rounds 1..k-1.
@@ -294,41 +295,52 @@ object Graph {
     // repartition before the checkpoint: AQE coalesces the (small at
     // test scale) edge derivation to a handful of partitions, and a
     // checkpoint frozen that way caps every round's scan parallelism
-    val (e0, e0Ids) = Blocks.checkpointTracked(edges.repartition(col("src")))
+    val blocks = new Blocks
+    val e0 = blocks.checkpoint(edges.repartition(col("src")))
     val perRound =
       if (statsKnown) statsBytes > PerRoundCheckpointStatsBytes
       else e0.count() > 2000000L
     val outW = e0.groupBy(col("src")).agg(sum(col("w")).as("wsum"))
-    val (e, eIds) = Blocks.checkpointTracked(e0.join(nodeSide(outW), "src"))
+    val e = blocks.checkpoint(e0.join(nodeSide(outW, broadcastNodes), "src"))
     val baseRank = (100L - dampingPct) * 10000L
     val init = outW.select(col("src").as("node"), lit(1000000L).as("rank"))
     var ranks = init
-    var rankIds: Set[Int] = Set.empty // init is not checkpointed
     for (_ <- 1 to iterations) {
-      val body = e
-        .join(nodeSide(ranks.withColumnRenamed("node", "src")), "src")
-        .select(col("dst"),
-          expr(s"(rank * $dampingPct * w) div (100 * wsum)").as("contrib"))
-        .groupBy(col("dst"))
-        .agg((sum(col("contrib")) + lit(baseRank)).as("rank"))
-        .select(col("dst").as("node"), col("rank"))
+      val body = contribSums(e, ranks, dampingPct, broadcastNodes)
+        .select(col("node"), (col("csum") + lit(baseRank)).as("rank"))
       if (perRound) {
-        // eager round checkpoint — the superseded round's blocks are
-        // garbage the moment it materializes (r17 tracked release)
-        val (next, nextIds) = Blocks.checkpointTracked(body)
-        Blocks.release(ranks, rankIds)
+        val next = blocks.checkpoint(body)
+        blocks.retire(ranks)
         ranks = next
-        rankIds = nextIds
       } else ranks = body
     }
     if (perRound) {
       // the returned frame is a self-contained eager checkpoint; the
       // (edge-sized) stationary frames are dead weight from here
-      Blocks.release(e, eIds)
-      Blocks.release(e0, e0Ids)
+      blocks.retire(e)
+      blocks.retire(e0)
     }
     ranks
   }
+
+  /** The node-sized side of a graph join, broadcast against the
+    * stationary edges unless `broadcastNodes` is off. The hint is
+    * MANDATORY, not advisory: past executor memory it fails rather than
+    * degrading, so graphs whose node frame can't broadcast pass false
+    * and get a shuffle join. */
+  private def nodeSide(df: DataFrame, broadcastNodes: Boolean): DataFrame =
+    if (broadcastNodes) broadcast(df) else df
+
+  /** One PageRank round's incoming mass per node: (node, csum) with
+    * csum = Σ rank(src)·d·w div (100·wsum) over the in-edges of `e`
+    * (src, dst, w, wsum), the node-sized `ranks` joined on src. */
+  private def contribSums(e: DataFrame, ranks: DataFrame, dampingPct: Int,
+      broadcastNodes: Boolean): DataFrame =
+    e.join(nodeSide(ranks.withColumnRenamed("node", "src"), broadcastNodes), "src")
+      .select(col("dst"),
+        expr(s"(rank * $dampingPct * w) div (100 * wsum)").as("contrib"))
+      .groupBy(col("dst").as("node"))
+      .agg(sum(col("contrib")).as("csum"))
 
   /** Full PageRank semantics for DIRECTED graphs: dangling-node mass
     * redistribution plus an optional early exit on rank convergence —
@@ -356,70 +368,16 @@ object Graph {
     * (or shuffle-joined with broadcastNodes=false); the dangling mass
     * adds one node-frame anti-join + single-row agg per round, and the
     * node count is computed once. Edges: (src, dst[, w]); a missing `w`
-    * column means unweighted. */
+    * column means unweighted. Runs [[pageRankPersonalized]]'s loop with
+    * every node a seed. */
   def pageRankDirected(
       edges: DataFrame,
       maxIterations: Int,
       dampingPct: Int = 85,
       convergedDeltaMicro: Long = -1L,
-      broadcastNodes: Boolean = true): (DataFrame, Int) = {
-    require(maxIterations >= 1, "pageRank needs at least one iteration")
-    require(dampingPct > 0 && dampingPct < 100, "dampingPct must be in (0, 100)")
-    def nodeSide(df: DataFrame): DataFrame =
-      if (broadcastNodes) broadcast(df) else df
-    val withW =
-      if (edges.columns.contains("w")) edges else edges.withColumn("w", lit(1L))
-    // repartition before the checkpoint (see pageRankWeighted): keeps
-    // the frozen edge scan at full parallelism under AQE coalescing
-    val e0 = withW.repartition(col("src")).localCheckpoint(false)
-    val nodes = e0.select(col("src").as("node"))
-      .unionAll(e0.select(col("dst").as("node")))
-      .distinct().localCheckpoint(false)
-    val nNodes = nodes.count() // iteration-invariant scalar
-    // empty graph: no recurrence to run, and nNodes=0 would turn the
-    // dangling-share division into an ANSI error (and the convergence
-    // delta agg into a null the collect would NPE on) — return the
-    // empty rank frame directly
-    if (nNodes == 0L)
-      return (nodes.withColumn("rank", lit(1000000L)), 0)
-    val outW = e0.groupBy(col("src")).agg(sum(col("w")).as("wsum"))
-    val e = e0.join(nodeSide(outW), "src").localCheckpoint(false)
-    val outNodes = outW.select(col("src").as("node")).localCheckpoint(false)
-    val baseRank = (100L - dampingPct) * 10000L
-    var ranks = nodes.withColumn("rank", lit(1000000L)).localCheckpoint(false)
-    var rounds = 0
-    var converged = false
-    while (rounds < maxIterations && !converged) {
-      // mass parked on dangling nodes this round — a single-row frame,
-      // broadcast into every partition of the rank update
-      val dang = ranks.join(nodeSide(outNodes), Seq("node"), "left_anti")
-        .agg(coalesce(sum(col("rank")), lit(0L)).as("dmass"))
-      val contribs = e
-        .join(nodeSide(ranks.withColumnRenamed("node", "src")), "src")
-        .select(col("dst"),
-          expr(s"(rank * $dampingPct * w) div (100 * wsum)").as("contrib"))
-        .groupBy(col("dst"))
-        .agg(sum(col("contrib")).as("csum"))
-        .select(col("dst").as("node"), col("csum"))
-      val next = nodes
-        .join(contribs, Seq("node"), "left")
-        .crossJoin(broadcast(dang))
-        .select(col("node"),
-          (lit(baseRank) + coalesce(col("csum"), lit(0L)) +
-            expr(s"(dmass * $dampingPct) div (100 * ${nNodes}L)")).as("rank"))
-        .localCheckpoint(false) // read twice: the delta check and next round
-      rounds += 1
-      if (convergedDeltaMicro >= 0L) {
-        val delta = next
-          .join(ranks.select(col("node"), col("rank").as("prev")), "node")
-          .agg(max(abs(col("rank") - col("prev"))).as("d"))
-          .collect()(0).getLong(0)
-        converged = delta <= convergedDeltaMicro
-      }
-      ranks = next
-    }
-    (ranks, rounds)
-  }
+      broadcastNodes: Boolean = true): (DataFrame, Int) =
+    walkWithRestart(edges, None, maxIterations, dampingPct,
+      convergedDeltaMicro, broadcastNodes)
 
   /** Personalized PageRank (random walk with restart): teleport mass
     * lands ONLY on the `seeds` set, so ranks measure proximity to the
@@ -451,50 +409,75 @@ object Graph {
       maxIterations: Int,
       dampingPct: Int = 85,
       convergedDeltaMicro: Long = -1L,
-      broadcastNodes: Boolean = true): (DataFrame, Int) = {
+      broadcastNodes: Boolean = true): (DataFrame, Int) =
+    walkWithRestart(edges, Some(seeds), maxIterations, dampingPct,
+      convergedDeltaMicro, broadcastNodes)
+
+  /** The one dangling-aware PageRank loop: [[pageRankPersonalized]]'s
+    * recurrence, with `seeds = None` meaning every node is a seed. With
+    * S = N the seed terms are (100−d)·10⁴, 10⁶ and D·d div (100·N), so
+    * that case IS [[pageRankDirected]]'s recurrence, bit for bit, and
+    * reuses the node set and count the loop already has (no seed join,
+    * no second count). All frames are LAZY checkpoints (see
+    * [[pageRank]]); each superseded rank round is retired to the
+    * call's [[Blocks]], so a call ends holding two rank generations
+    * plus its stationary frames. */
+  private def walkWithRestart(
+      edges: DataFrame,
+      seeds: Option[DataFrame],
+      maxIterations: Int,
+      dampingPct: Int,
+      convergedDeltaMicro: Long,
+      broadcastNodes: Boolean): (DataFrame, Int) = {
     require(maxIterations >= 1, "pageRank needs at least one iteration")
     require(dampingPct > 0 && dampingPct < 100, "dampingPct must be in (0, 100)")
-    def nodeSide(df: DataFrame): DataFrame =
-      if (broadcastNodes) broadcast(df) else df
+    val blocks = new Blocks
     val withW =
       if (edges.columns.contains("w")) edges else edges.withColumn("w", lit(1L))
-    val e0 = withW.repartition(col("src")).localCheckpoint(false)
-    val nodes = e0.select(col("src").as("node"))
+    // repartition before the checkpoint (see pageRankWeighted): keeps
+    // the frozen edge scan at full parallelism under AQE coalescing
+    val e0 = blocks.checkpoint(withW.repartition(col("src")), eager = false)
+    val nodes = blocks.checkpoint(e0.select(col("src").as("node"))
       .unionAll(e0.select(col("dst").as("node")))
-      .distinct().localCheckpoint(false)
-    val nNodes = nodes.count()
+      .distinct(), eager = false)
+    val nNodes = nodes.count() // iteration-invariant scalar
+    // empty graph: no recurrence to run, and nNodes=0 would turn the
+    // dangling-share division into an ANSI error (and the convergence
+    // delta agg into a null the collect would NPE on) — return the
+    // empty rank frame directly
     if (nNodes == 0L) return (nodes.withColumn("rank", lit(0L)), 0)
-    val sd = seeds.select(col("node")).distinct()
-      .join(nodes, Seq("node"), "left_semi").localCheckpoint(false)
-    val nSeeds = sd.count()
-    require(nSeeds > 0L, "no seed is a node of the graph")
+    // the seed indicator rides the node frame through every round
+    val (nodeFlags, nSeeds) = seeds match {
+      case None => (nodes.withColumn("is_seed", lit(1)), nNodes)
+      case Some(sds) =>
+        val sd = blocks.checkpoint(sds.select(col("node")).distinct()
+          .join(nodes, Seq("node"), "left_semi"), eager = false)
+        val n = sd.count()
+        require(n > 0L, "no seed is a node of the graph")
+        (blocks.checkpoint(nodes.join(sd.withColumn("is_seed", lit(1)),
+          Seq("node"), "left"), eager = false), n)
+    }
     val outW = e0.groupBy(col("src")).agg(sum(col("w")).as("wsum"))
-    val e = e0.join(nodeSide(outW), "src").localCheckpoint(false)
-    val outNodes = outW.select(col("src").as("node")).localCheckpoint(false)
+    val e = blocks.checkpoint(
+      e0.join(nodeSide(outW, broadcastNodes), "src"), eager = false)
+    val outNodes = blocks.checkpoint(
+      outW.select(col("src").as("node")), eager = false)
     // per-seed teleport and initial mass: driver-side exact int div
     val baseSeed = (100L - dampingPct) * 10000L * nNodes / nSeeds
     val initSeed = 1000000L * nNodes / nSeeds
-    // the seed indicator rides the node frame through every round
-    val nodeFlags = nodes
-      .join(sd.withColumn("is_seed", lit(1)), Seq("node"), "left")
-      .localCheckpoint(false)
-    var ranks = nodeFlags
+    var ranks = blocks.checkpoint(nodeFlags
       .select(col("node"),
-        when(col("is_seed") === 1, lit(initSeed)).otherwise(lit(0L)).as("rank"))
-      .localCheckpoint(false)
+        when(col("is_seed") === 1, lit(initSeed)).otherwise(lit(0L)).as("rank")),
+      eager = false)
     var rounds = 0
     var converged = false
     while (rounds < maxIterations && !converged) {
-      val dang = ranks.join(nodeSide(outNodes), Seq("node"), "left_anti")
+      // mass parked on dangling nodes this round — a single-row frame,
+      // broadcast into every partition of the rank update
+      val dang = ranks.join(nodeSide(outNodes, broadcastNodes), Seq("node"), "left_anti")
         .agg(coalesce(sum(col("rank")), lit(0L)).as("dmass"))
-      val contribs = e
-        .join(nodeSide(ranks.withColumnRenamed("node", "src")), "src")
-        .select(col("dst"),
-          expr(s"(rank * $dampingPct * w) div (100 * wsum)").as("contrib"))
-        .groupBy(col("dst"))
-        .agg(sum(col("contrib")).as("csum"))
-        .select(col("dst").as("node"), col("csum"))
-      val next = nodeFlags
+      val contribs = contribSums(e, ranks, dampingPct, broadcastNodes)
+      val next = blocks.checkpoint(nodeFlags
         .join(contribs, Seq("node"), "left")
         .crossJoin(broadcast(dang))
         .select(col("node"),
@@ -502,8 +485,8 @@ object Graph {
             when(col("is_seed") === 1,
               lit(baseSeed) +
                 expr(s"(dmass * $dampingPct) div (100 * ${nSeeds}L)"))
-              .otherwise(lit(0L))).as("rank"))
-        .localCheckpoint(false)
+              .otherwise(lit(0L))).as("rank")),
+        eager = false) // read twice: the delta check and next round
       rounds += 1
       if (convergedDeltaMicro >= 0L) {
         val delta = next
@@ -512,6 +495,7 @@ object Graph {
           .collect()(0).getLong(0)
         converged = delta <= convergedDeltaMicro
       }
+      blocks.retire(ranks)
       ranks = next
     }
     (ranks, rounds)
@@ -541,8 +525,6 @@ object Graph {
   def labelPropagation(edges: DataFrame, rounds: Int,
       broadcastNodes: Boolean = true): DataFrame = {
     require(rounds >= 1, "labelPropagation needs at least one round")
-    def nodeSide(df: DataFrame): DataFrame =
-      if (broadcastNodes) broadcast(df) else df
     // repartition before the checkpoint (see pageRankWeighted): keeps
     // the frozen edge scan at full parallelism under AQE coalescing
     val e = edges.repartition(col("dst")).localCheckpoint()
@@ -554,7 +536,7 @@ object Graph {
     val init = e.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
     (1 to rounds).foldLeft(init) { (labels, _) =>
-      e.join(nodeSide(labels.withColumnRenamed("node", "dst")), "dst")
+      e.join(nodeSide(labels.withColumnRenamed("node", "dst"), broadcastNodes), "dst")
         .groupBy(col("src"), col("label"))
         .agg(count(lit(1)).as("n"))
         .groupBy(col("src"))
@@ -713,8 +695,6 @@ object Graph {
       broadcastNodes: Boolean = true): DataFrame = {
     require(walksPerNode >= 1, "walksPerNode must be >= 1")
     require(walkLength >= 1, "walkLength must be >= 1")
-    def nodeSide(df: DataFrame): DataFrame =
-      if (broadcastNodes) broadcast(df) else df
     val ed = edges.select(col("a"), col("b")).distinct()
     val sym = ed.select(col("a").as("src"), col("b").as("dst"))
       .unionAll(ed.select(col("b").as("src"), col("a").as("dst")))
@@ -739,7 +719,7 @@ object Graph {
     var out = positions(0, frontier)
     for (t <- 1 to walkLength) {
       frontier = frontier
-        .join(nodeSide(degs), "cur")
+        .join(nodeSide(degs, broadcastNodes), "cur")
         .withColumn("pick",
           expr(s"cast(conv(substring(md5(concat('$salt:', " +
             s"cast(cur as string), ':', cast(walk as string), ':$t')), " +
@@ -772,7 +752,8 @@ object Graph {
   def kCorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, "kCorePeel needs k >= 1")
     require(rounds >= -1, "rounds must be >= 0, or -1 for fixpoint")
-    var (sym, symIds) = Blocks.checkpointTracked(
+    val blocks = new Blocks
+    var sym = blocks.checkpoint(
       edges.select(col("a").as("s"), col("b").as("d"))
         .unionAll(edges.select(col("b").as("s"), col("a").as("d")))
         .repartition(col("s")))
@@ -785,16 +766,12 @@ object Graph {
     while (!done && (toFixpoint || r < rounds)) {
       val keep = sym.groupBy(col("s")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("s"))
-      val (next, nextIds) = Blocks.checkpointTracked(sym
+      val next = blocks.checkpoint(sym
         .join(keep, Seq("s"), "left_semi")
         .join(keep.select(col("s").as("d")), Seq("d"), "left_semi")
         .select(col("s"), col("d")))
-      // the eager checkpoint materialized `next` — the superseded
-      // round's edge blocks are garbage now (r17 tracked release, see
-      // DedupGroups.connectedComponents)
-      Blocks.release(sym, symIds)
+      blocks.retire(sym)
       sym = next
-      symIds = nextIds
       r += 1
       if (toFixpoint) {
         val after = sym.count()
@@ -829,8 +806,6 @@ object Graph {
   def bfsHops(edges: DataFrame, sources: DataFrame, rounds: Int,
       broadcastNodes: Boolean = true): DataFrame = {
     require(rounds >= 1, "bfsHops needs at least one round")
-    def nodeSide(df: DataFrame): DataFrame =
-      if (broadcastNodes) broadcast(df) else df
     // repartition before the checkpoint (see pageRankWeighted): keeps
     // the frozen edge scan at full parallelism under AQE coalescing
     val e = edges.repartition(col("src")).localCheckpoint()
@@ -849,9 +824,11 @@ object Graph {
     var frontier = visited.select(col("node"))
     for (r <- 1 to rounds) {
       val next = e
-        .join(nodeSide(frontier.withColumnRenamed("node", "src")), "src")
+        .join(nodeSide(frontier.withColumnRenamed("node", "src"),
+          broadcastNodes), "src")
         .select(col("dst").as("node")).distinct()
-        .join(nodeSide(visited.select(col("node"))), Seq("node"), "left_anti")
+        .join(nodeSide(visited.select(col("node")), broadcastNodes),
+          Seq("node"), "left_anti")
         .select(col("node"), lit(r.toLong).as("hop"))
         .localCheckpoint() // read thrice (union + anti joins); all leaves live in the result
       visited = visited.unionAll(next)

@@ -158,7 +158,7 @@ object MinHashLsh {
     * truncated (downstream joins read the stored partitions, never
     * re-sign), and the blocks are released by the ContextCleaner when
     * the frame is GC'd — repeated dedup runs in one session don't
-    * accumulate cache (no persist to forget to unpersist). On a
+    * accumulate cache (no persist to forget to release). On a
     * cluster with executor churn, swap for a reliable
     * `checkpoint(dir)`; the plan shape is identical. */
   def nearDuplicates(
